@@ -100,49 +100,9 @@ _REATTEST_AS_OF = 8  # attestations from this round on clear the flag
 # freshness policy the r06 verdict asked for. Value maps query ->
 # round of the rewrite; prune an entry once a CORRECTNESS_r*.json of
 # that round or later carries its green row (test-enforced, the
-# _REATTEST self-cleanup pattern).
-_REWRITTEN: dict[str, int] = {
-    # r6: shared distributed-rank rewrite after its r05 attestation
-    "j_rfm_segmentation": 6,
-    # r7: relational degenerate-input campaign (NULL-ordering pins,
-    # NULL-safe joins, complete-case ML contracts) on attested plans
-    "w_running_sum": 7,
-    "w_gaps_islands_scd2": 7,
-    "j_scd2_temporal_join": 7,
-    "e1_label_encode": 7,
-    "e2_label_encode_multi": 7,
-    "e3_split_datetime": 7,
-    "a8_percentiles_approx": 7,
-    "fn_string_suite": 7,
-    "fn_complex_types": 7,
-    "fn_map_types": 7,
-    "fn_stats_agg_suite": 7,
-    "fn_ordered_agg_suite": 7,
-    "sql_collation_suite": 7,
-    "ml_corr_matrix_full": 7,
-    "ml_linreg_coefs": 7,
-    "dp_bpe_token_count": 7,
-    # r7: scalar .first() t0 anchor replaced with a broadcast one-row
-    # aggregate after its r06 attestation (ADVICE r7 catch)
-    "ev_bot_regularity": 7,
-    # r8: ROUND-tie campaign — ROUND(x, k) converted to FLOOR-in-both
-    # micro-unit quantization in BOTH engines (tools/sweep_round_ties
-    # findings); value-preserving on the fixtures (3-scale parity
-    # re-verified), so freshness cohort, not _REATTEST
-    "ev_retention_next_day": 8,
-    "q11_important_stock": 8,
-    "dp_cdc_chunk_stats": 8,
-    "ev_uplift_qini": 8,
-    # r8: IVFPQ became a cosine-metric index (L2-normalize at build/
-    # append/probe); r9: default geometry switched to suggest_k_cells
-    # sqrt-n sizing with nprobe scaled to ~25% of cells (VERDICT r8
-    # item 2). The selfcheck booleans and floors still pass (re-
-    # measured at sf0.001/0.01/0.1) and dp_ann_ivfpq keeps its 25-row
-    # rows-only contract.
-    "dp_ann_selfcheck": 9,
-    "dp_ann_refine_selfcheck": 9,
-    "dp_ann_ivfpq": 9,
-}
+# _REATTEST self-cleanup pattern). All 25 r6-r9 rewrites re-attested
+# green in CORRECTNESS_r10.json, so the dict is drained.
+_REWRITTEN: dict[str, int] = {}
 
 
 def _rotated(

@@ -23,6 +23,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.vectors import cosine
+from ..sources.readers import local_frame
 
 
 def suggest_k_cells(n_vectors: int, min_cells: int = 16, max_cells: int = 1 << 20) -> int:
@@ -83,7 +84,8 @@ def build_ivf(
     X = np.asarray(sorted(tuple(r.vec) for r in rows), dtype=np.float64)
     C = _lloyd(X, k, seed)
     spark = corpus.sparkSession
-    centroids = spark.createDataFrame(
+    centroids = local_frame(
+        spark,
         [(i, [float(x) for x in C[i]]) for i in range(k)],
         "cid int, cvec array<double>",
     )
@@ -150,7 +152,8 @@ def load_ivf(spark, path: str) -> IvfIndex:
     assigned = spark.read.parquet(f"{path}/assigned").select(
         "id", "vec", F.col("cid").cast("int").alias("cid")
     )
-    centroids = spark.createDataFrame(
+    centroids = local_frame(
+        spark,
         [
             (int(r["cid"]), [float(x) for x in r["cvec"]])
             for r in read_sidecar_rows(f"{path}/centroids")

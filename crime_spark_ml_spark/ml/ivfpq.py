@@ -51,6 +51,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions.vectors import l2_normalize
+from ..sources.readers import local_frame
 from .pq import (
     PqModel,
     _codebook_np,
@@ -243,7 +244,8 @@ def build_ivfpq(
     )
     Xs = np.asarray(sorted(tuple(r.vec) for r in sample), dtype=np.float64)
     C = _lloyd(Xs, k_cells, seed)
-    centroids = spark.createDataFrame(
+    centroids = local_frame(
+        spark,
         [(i, [float(x) for x in C[i]]) for i in range(k_cells)],
         "cid int, cvec array<double>",
     )
@@ -594,11 +596,13 @@ def load_ivfpq(spark: SparkSession, path: str) -> IvfPqIndex:
     cb_rows = read_sidecar_rows(f"{path}/codebooks")
     if not cent_rows or not cb_rows:
         raise ValueError(f"empty centroid/codebook sidecars at {path}")
-    centroids = spark.createDataFrame(
+    centroids = local_frame(
+        spark,
         [(int(r["cid"]), [float(x) for x in r["cvec"]]) for r in cent_rows],
         "cid int, cvec array<double>",
     )
-    codebooks = spark.createDataFrame(
+    codebooks = local_frame(
+        spark,
         [
             (int(r["sub"]), int(r["code"]), [float(x) for x in r["cvec"]])
             for r in cb_rows
@@ -676,7 +680,7 @@ def _probe_luts(
     (the former normalize → NULL qv chain produced no joinable LUT
     rows for them)."""
     rows, schema = _probe_lut_rows(index, queries, nprobe, id_col, vec_col)
-    return queries.sparkSession.createDataFrame(rows, schema)
+    return local_frame(queries.sparkSession, rows, schema)
 
 
 # the LUT local relation must broadcast (and its query vectors collect
@@ -837,7 +841,7 @@ def probe_ivfpq(
     # whole probe runs as ONE Spark job: pruned scan → broadcast LUT
     # join → ADC → group-limited top-k window.
     rows, schema = _probe_lut_rows(index, queries, nprobe, id_col, vec_col)
-    luts = spark.createDataFrame(rows, schema)
+    luts = local_frame(spark, rows, schema)
     cells = sorted({int(r[1]) for r in rows})
     pruned = index.coded.where(F.col("cid").isin(cells))
     return _score_topk(pruned, luts, k)

@@ -37,6 +37,8 @@ import pandas as pd  # module-level: pandas_udf type hints must resolve
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..sources.readers import local_frame
+
 
 def _fold_lit(value, schema: str) -> F.Column:
     """A complex-typed constant as ONE Catalyst node: ``from_json`` on
@@ -358,7 +360,7 @@ def _fit_codebooks(spark, X, m: int, k: int, seed: int) -> PqModel:
         C = _lloyd(X[:, j * sub_dim : (j + 1) * sub_dim], k, seed + j)
         subs.append(C)
         rows.extend((j, code, [float(x) for x in C[code]]) for code in range(k))
-    codebooks = spark.createDataFrame(rows, "sub int, code int, cvec array<double>")
+    codebooks = local_frame(spark, rows, "sub int, code int, cvec array<double>")
     return PqModel(
         codebooks=codebooks,
         m=m,
@@ -580,7 +582,7 @@ def _pq_luts_local(
             StructField("lut", ArrayType(ArrayType(DoubleType()))),
         ]
     )
-    return queries.sparkSession.createDataFrame(out, schema)
+    return local_frame(queries.sparkSession, out, schema)
 
 
 def pq_topk(

@@ -9,7 +9,9 @@ Gini ranking, and the group-sequential look assignment:
     repartitionByRange on the total order (ascending key ranges land in
     ascending partition ids) -> row_number within each partition in
     parallel -> driver-side prefix sum of the <=#partitions partition
-    sizes -> broadcast the offsets back.
+    sizes -> broadcast the offsets back, built as a JVM LocalRelation
+    (``sources.readers.local_frame``) so the join's build side never
+    starts a Python worker.
 
 The only collect is #partitions ints, so the pattern survives any
 corpus size; the order columns must form a deterministic TOTAL order
@@ -24,6 +26,8 @@ import operator
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+
+from ..sources.readers import local_frame
 
 
 def _offset_join(
@@ -112,8 +116,8 @@ def global_row_number(
     for pid, cnt in sizes:
         offsets[pid] = acc
         acc += cnt
-    offset_df = df.sparkSession.createDataFrame(
-        [(pid, off) for pid, off in offsets.items()], "__pid int, __off long"
+    offset_df = local_frame(
+        df.sparkSession, offsets.items(), "__pid int, __off long"
     )
     out = (
         ranked.join(F.broadcast(offset_df), "__pid")
@@ -179,8 +183,8 @@ def grouped_row_number(
     schema_groups = ", ".join(
         f"{c} {dict(df.dtypes)[c]}" for c in group_cols
     )
-    offset_df = df.sparkSession.createDataFrame(
-        rows, f"__pid int, {schema_groups}, __off long"
+    offset_df = local_frame(
+        df.sparkSession, rows, f"__pid int, {schema_groups}, __off long"
     )
     return (
         _offset_join(ranked, offset_df, group_cols)
@@ -247,37 +251,23 @@ def grouped_prefix_sums(
     )
     dtypes = dict(df.dtypes)
     outs = list(sums.values())
-    # zero of the sum's own Python type — createDataFrame will not
-    # coerce int 0 into a double/decimal offset field
-    import decimal
-
-    def zero(vcol: str):
-        t = _sum_result_type(dtypes[vcol])
-        if t == "double":
-            return 0.0
-        if t.startswith("decimal"):
-            return decimal.Decimal(0)
-        return 0
-
-    zeros = [zero(v) for v in sums]
+    # offsets start at int 0: 0 + Decimal / 0 + float stay exact, and
+    # local_frame's Arrow build takes a plain 0 into double/decimal fields
     acc: dict[tuple, list] = {}
     rows = []
     for r in sorted(
         totals, key=lambda r: (tuple(str(r[c]) for c in group_cols), r["__pid"])
     ):
         key = tuple(r[c] for c in group_cols)
-        offs = acc.get(key, zeros)
+        offs = acc.get(key, [0] * len(outs))
         rows.append((r["__pid"], *key, *offs))
-        acc[key] = [
-            o + (r[f"__t_{out}"] if r[f"__t_{out}"] is not None else z)
-            for o, out, z in zip(offs, outs, zeros)
-        ]
+        acc[key] = [o + (r[f"__t_{out}"] or 0) for o, out in zip(offs, outs)]
     schema_groups = ", ".join(f"{c} {dtypes[c]}" for c in group_cols)
     schema_offs = ", ".join(
         f"__off_{o} {_sum_result_type(dtypes[v])}" for v, o in sums.items()
     )
-    offset_df = df.sparkSession.createDataFrame(
-        rows, f"__pid int, {schema_groups}, {schema_offs}"
+    offset_df = local_frame(
+        df.sparkSession, rows, f"__pid int, {schema_groups}, {schema_offs}"
     )
     out_df = _offset_join(cum, offset_df, group_cols)
     for o in outs:

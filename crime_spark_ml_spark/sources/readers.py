@@ -8,6 +8,8 @@ surface according to ``mode`` instead of silently re-typing a column.
 
 from __future__ import annotations
 
+from collections.abc import Iterable, Sequence
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
@@ -69,3 +71,40 @@ def read_json_lines(
     """NDJSON scan with declared schema (the batch twin of the
     streaming wire parse)."""
     return spark.read.schema(schema).json(path)
+
+
+def local_frame(
+    spark: SparkSession, rows: Iterable[Sequence], schema: str | T.StructType
+) -> DataFrame:
+    """A driver-built table (offsets, model tables, probe LUTs) as a JVM
+    ``LocalRelation``.
+
+    ``spark.createDataFrame(<list>, schema)`` is a ``parallelize``
+    followed by a Python re-serialising ``map``, so EVERY scan of that
+    frame runs one Python-worker task per partition. An Arrow table is
+    shipped to the JVM once instead and becomes a ``LocalRelation`` (or,
+    past ``spark.sql.execution.arrow.localRelationThreshold``, a
+    JVM-side Arrow RDD) whatever ``spark.sql.execution.arrow.pyspark.
+    enabled`` says, so no scan ever starts a Python worker.
+
+    Rows, row order and schema equal ``createDataFrame(rows, schema)``:
+    values of fields that need conversion (dates, timestamps, and
+    structs/arrays holding them) go through the Spark type's own
+    ``toInternal`` first, so a naive ``datetime`` in a TIMESTAMP field
+    reads as Python-local time exactly as on the list path.
+    """
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    struct = T.StructType.fromDDL(schema) if isinstance(schema, str) else schema
+    arrow_schema = to_arrow_schema(struct)
+    cols = list(zip(*rows, strict=True)) or [()] * len(struct.fields)
+    arrays = [
+        pa.array(
+            [f.dataType.toInternal(v) for v in col] if f.needConversion() else col,
+            type=t,
+        )
+        for col, f, t in zip(cols, struct.fields, arrow_schema.types, strict=True)
+    ]
+    table = pa.Table.from_arrays(arrays, schema=arrow_schema)
+    return spark.createDataFrame(table, struct)

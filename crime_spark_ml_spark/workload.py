@@ -28,7 +28,7 @@ from .functions.aggs import try_corr
 from .ml.pipeline import decode_predictions, prepare_crime, train_crime_model
 from .operators.encode import label_encode
 from .operators.reshape import pivot_counts
-from .sources.readers import read_crime_csv, read_crime_test_csv
+from .sources.readers import local_frame, read_crime_csv, read_crime_test_csv
 from .sources.writers import write_predictions
 
 
@@ -88,7 +88,7 @@ def run_crime_workload(
         v = pairs[c]
         corr_rows.append((c, round(float(v), 6) if v is not None else None))
     corr_with_target = (
-        spark.createDataFrame(corr_rows, "column string, corr_with_category double")
+        local_frame(spark, corr_rows, "column string, corr_with_category double")
         .orderBy(F.desc_nulls_last(F.abs(F.col("corr_with_category"))), "column")
         .limit(8)
     )

@@ -155,6 +155,24 @@ def test_grouped_prefix_sums_double_values(spark):
         assert abs(got_m[r.id] - r.sdx) < 1e-9, r.id
 
 
+def test_grouped_prefix_sums_decimal_values(spark):
+    """DECIMAL running totals are exact: offsets start from a plain 0
+    and must land in the decimal(38,s) offset column unrounded."""
+    df = _scrambled(spark, 400).withColumn(
+        "dx", (F.col("x").cast("double") + F.lit(0.25)).cast("decimal(12,2)")
+    )
+    got = grouped_prefix_sums(df, ["g"], ["v", "id"], {"dx": "sdx"})
+    assert dict(got.dtypes)["sdx"].startswith("decimal")
+    w = (
+        Window.partitionBy("g")
+        .orderBy("v", "id")
+        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    )
+    truth = df.withColumn("sdx", F.sum("dx").over(w))
+    assert {r.id: r.sdx for r in got.collect()} == {
+        r.id: r.sdx for r in truth.collect()
+    }
+
 def test_ntile_sql_matches_window_ntile(spark):
     """The shared closed form must be bit-identical to NTILE(k) at the
     n % k == 0, n % k != 0, and n < k edges."""

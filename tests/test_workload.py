@@ -28,6 +28,9 @@ def test_crime_workload_end_to_end(spark, tmp_path):
     counts = {r.PdDistrict: r.cnt for r in res.district_counts.collect()}
     assert districts == sorted(districts, key=lambda d: (-counts[d], d))
     assert res.corr_with_target.count() == 8
+    # driver-built corr table: a JVM LocalRelation, no list-built scan
+    corr_plan = res.corr_with_target._jdf.queryExecution().executedPlan().toString()
+    assert "LocalTableScan" in corr_plan and "ExistingRDD" not in corr_plan
     assert 0.0 < res.accuracy <= 1.0
     # predictions come from the TEST table (300 rows), written to parquet
     assert res.predictions.count() == 300
