@@ -62,64 +62,9 @@ def _attestation_rounds(here: str = _HERE) -> dict[str, int]:
     return last
 
 
-# Queries whose CONTRACT (oracle and/or output schema) changed after
-# their last driver attestation — the old green row attests a different
-# artifact, so they re-enter the rotation as if never attested. Add a
-# query here (and bump _REATTEST_AS_OF to the upcoming round) whenever
-# its oracle or output schema changes SEMANTICALLY; prune entries once
-# the new contract has a hash-matched row in a CORRECTNESS_r*.json. The
-# 16 round-4 rows-only→value-oracle conversions all re-attested green
-# in CORRECTNESS_r04. Round 5 added dp_embedding_near_dups (rows-only
-# → exact brute-force-cosine value oracle); its new contract earned a
-# hash-green row in CORRECTNESS_r06, so the entry is pruned (round 7).
-#
-# Explicitly NOT flagged (round 6): the degenerate-input hygiene
-# campaign added identical guards to BOTH engines of ~90 queries (NULL
-# filters, json_valid, NULLIF, 128-bit casts). Those edits are
-# VALUE-PRESERVING on the driver fixtures — verified hash-identical at
-# sf0.001/0.01/0.1 before and after, and pinned by the three
-# degenerate-fixture sweeps in tests/test_parity_harness.py — so the
-# existing green rows still attest exactly what the driver would
-# re-measure; re-flagging 41 of them would displace the never-attested
-# backlog (the r5 verdict's top item) for zero new information.
-_REATTEST: set[str] = set()
-# r8 flagged dp_shard_manifest / ev_fdr_bh (the two r7 driver hash
-# mismatches, contracts changed to BIGINT casts / FLOOR micro-unit
-# quantization) and ev_group_sequential_obf (DECIMAL(7,6) -> DOUBLE
-# schema change). All three re-attested hash-green in
-# CORRECTNESS_r08.json, so pruned here (round 9) per the test-enforced
-# self-cleanup cycle — same as the r6->r7 precedent.
-_REATTEST_AS_OF = 8  # attestations from this round on clear the flag
-
-# Queries whose PLAN was materially rewritten after their last driver
-# attestation with the contract UNCHANGED (value-preserving — verified
-# hash-identical on the clean fixtures at sf0.001/0.01 before landing).
-# Unlike _REATTEST these carry no urgency: the old green row still
-# attests the same contract, so they queue BEHIND every never-attested
-# query (cohort 0.5) but AHEAD of untouched attested rows — the
-# freshness policy the r06 verdict asked for. Value maps query ->
-# round of the rewrite; prune an entry once a CORRECTNESS_r*.json of
-# that round or later carries its green row (test-enforced, the
-# _REATTEST self-cleanup pattern). All 25 r6-r9 rewrites re-attested
-# green in CORRECTNESS_r10.json, so the dict is drained.
-_REWRITTEN: dict[str, int] = {}
-
-
-def _rotated(
-    d: dict,
-    last: dict[str, int] | None = None,
-    reattest: set[str] | None = None,
-    rewritten: dict[str, int] | None = None,
-) -> dict:
-    """Contract-changed first (cohort -1), then never-attested (0),
-    then rewritten-since-attestation (0.5), then stalest — with family
+def _rotated(d: dict, last: dict[str, int] | None = None) -> dict:
+    """Never-attested first (cohort 0), then stalest — with family
     round-robin inside every cohort.
-
-    Contract-changed queries get a strictly earlier cohort than
-    never-attested ones so a flagged re-attestation can never be pushed
-    out of the driver's ~50-query window by registry growth (the r05
-    failure mode: ~200 never-attested queries shared cohort 0 and
-    module import order buried the flagged query).
 
     Within each (cohort, heavy) block, queries are interleaved
     round-robin by family prefix (``ev_``, ``dp_``, ``j_``, ...) so one
@@ -132,18 +77,11 @@ def _rotated(
     keeping the sequence deterministic across runs.
     """
     last = last if last is not None else _attestation_rounds()
-    reattest = reattest if reattest is not None else _REATTEST
-    rewritten = rewritten if rewritten is not None else _REWRITTEN
     # multi-round iterative / multi-model jobs, tens of seconds each
     heavy = {"dp_dedup_pipeline", "dp_ann_selfcheck"}
 
-    def cohort(k: str) -> float:
-        rnd = last.get(k, 0)
-        if k in reattest and rnd < _REATTEST_AS_OF:
-            return -1  # strictly ahead of even never-attested queries
-        if 0 < rnd < rewritten.get(k, 0):
-            return 0.5  # attested, but the plan moved on since
-        return rnd
+    def cohort(k: str) -> int:
+        return last.get(k, 0)
 
     def is_heavy(k: str) -> bool:
         return k.startswith("ml_") or k in heavy
@@ -182,8 +120,8 @@ def entry(spark: SparkSession) -> DataFrame:
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     """One entry per implemented operator from SURVEY.md §2.
 
-    Ordered so never-attested / contract-changed queries come first,
-    then least-recently-attested (see ``_attestation_rounds`` and
+    Ordered so never-attested queries come first, then
+    least-recently-attested (see ``_attestation_rounds`` and
     ``_rotated``).
     """
     return _rotated(all_queries())

@@ -1,4 +1,4 @@
-"""Hash-based signature expressions: MinHash, SimHash, fingerprints.
+"""Hash-based signature expressions: shingles, LSH bands, SimHash.
 
 Everything is built from JVM-side ``xxhash64``/``md5`` inside
 higher-order functions — vectorized, codegen-friendly, zero Python.
@@ -151,20 +151,6 @@ def shingles_expr(text_col: str, n: int = 3) -> str:
     )
 
 
-def minhash(words_expr: str, num_hashes: int = 32) -> Column:
-    """MinHash signature, row-local HOF form: for permutation i, min
-    over tokens of xxhash64(xxhash64(token), i) — the SAME hash family
-    as operators/dedup.minhash_signatures, so the two forms produce
-    interchangeable signatures. Prefer the explode+agg form for any
-    plan that also bands the signature: Catalyst's project-collapsing
-    re-inlines this expression per downstream reference (~bands×
-    recompute)."""
-    return F.expr(
-        f"transform(sequence(0, {num_hashes - 1}), i -> "
-        f"array_min(transform({words_expr}, w -> xxhash64(xxhash64(w), i))))"
-    )
-
-
 def band_hashes(sig_expr: str, bands: int, rows_per_band: int) -> Column:
     """LSH banding: hash each ``rows_per_band``-slice of the signature
     (chain-hash over the longs — no string materialization). Two docs
@@ -186,8 +172,3 @@ def simhash(words_expr: str, bits: int = SIMHASH_BITS) -> Column:
     return F.expr(
         f"aggregate(transform(sequence({bits - 1}, 0, -1), {bit_j}), 0L, (acc, b) -> acc * 2 + b)"
     )
-
-
-def hamming64(a: str, b: str) -> Column:
-    """Hamming distance between two packed signatures (bit_count of XOR)."""
-    return F.expr(f"bit_count({a} ^ {b})")

@@ -46,12 +46,11 @@ def with_minhash(
 
     Implementation: explode shingles → one partial-aggregated groupBy
     computing min(hash(shingle ⊕ i)) for every permutation i. Each
-    shingle is hashed exactly ``num_hashes`` times; the nested
-    higher-order-function form (functions/hashing.minhash) is kept for
-    single-pass row-local use, but Catalyst's project-collapsing
-    re-inlines the shingle construction into every downstream band
-    expression, multiplying work ~bands× — the explode+agg shape is
-    the scale-correct plan."""
+    shingle is hashed exactly ``num_hashes`` times; a nested
+    higher-order-function form would be re-inlined by Catalyst's
+    project-collapsing into every downstream band expression,
+    multiplying work ~bands× — the explode+agg shape is the
+    scale-correct plan."""
     return df.join(
         minhash_signatures(df, text_col, num_hashes, shingle_n, id_col),
         on=id_col,

@@ -135,11 +135,11 @@ def dp_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "dp_ann_bruteforce",
     oracle=f"""
-    WITH q AS (SELECT vec_id AS query_id, embedding AS qe FROM embeddings WHERE (CASE WHEN embedding IS NULL THEN FALSE WHEN len(embedding) <> 64 THEN FALSE WHEN len(list_filter(embedding, x -> x IS NULL)) > 0 THEN FALSE WHEN len(list_filter(embedding, x -> NOT isfinite(x))) > 0 THEN FALSE WHEN len(list_filter(embedding, x -> x <> 0)) = 0 THEN FALSE ELSE TRUE END) AND vec_id < 5),
+    WITH q AS (SELECT vec_id AS query_id, embedding AS qe FROM embeddings WHERE ({EMBEDDING_WELL_FORMED_SQL}) AND vec_id < 5),
     scored AS (
       SELECT q.query_id, e.vec_id AS cand_id,
              ROUND({cosine_sql('q.qe', 'e.embedding')}, 6) AS cos
-      FROM (SELECT * FROM embeddings WHERE CASE WHEN embedding IS NULL THEN FALSE WHEN len(embedding) <> 64 THEN FALSE WHEN len(list_filter(embedding, x -> x IS NULL)) > 0 THEN FALSE WHEN len(list_filter(embedding, x -> NOT isfinite(x))) > 0 THEN FALSE WHEN len(list_filter(embedding, x -> x <> 0)) = 0 THEN FALSE ELSE TRUE END) e CROSS JOIN q
+      FROM (SELECT * FROM embeddings WHERE {EMBEDDING_WELL_FORMED_SQL}) e CROSS JOIN q
       WHERE e.vec_id <> q.query_id),
     ranked AS (
       SELECT query_id, cand_id, cos,
@@ -356,14 +356,14 @@ def dp_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "dp_audio_rms",
-    oracle="""
+    oracle=f"""
     SELECT vec_id,
            CAST(len(embedding) AS BIGINT) AS n_samples,
            ROUND(sqrt(list_sum(list_transform(embedding,
                  x -> pow(trunc(CAST(x AS DOUBLE) * 20000), 2))) / len(embedding)),
                  6) AS rms
     FROM embeddings
-    WHERE (CASE WHEN embedding IS NULL THEN FALSE WHEN len(embedding) <> 64 THEN FALSE WHEN len(list_filter(embedding, x -> x IS NULL)) > 0 THEN FALSE WHEN len(list_filter(embedding, x -> NOT isfinite(x))) > 0 THEN FALSE WHEN len(list_filter(embedding, x -> x <> 0)) = 0 THEN FALSE ELSE TRUE END)
+    WHERE ({EMBEDDING_WELL_FORMED_SQL})
     ORDER BY vec_id
     """,
     tags=("multimodal", "audio", "binary"),
@@ -396,12 +396,12 @@ def dp_audio_rms(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "dp_audio_spectral",
-    oracle="""
+    oracle=f"""
     SELECT vec_id, CAST(64 AS INTEGER) AS n_fft,
            CAST(ROUND(list_sum(list_transform(list_slice(embedding, 1, 64),
                 x -> pow(trunc(CAST(x AS DOUBLE) * 20000), 2))), 0) AS BIGINT)
                AS energy
-    FROM embeddings WHERE (CASE WHEN embedding IS NULL THEN FALSE WHEN len(embedding) <> 64 THEN FALSE WHEN len(list_filter(embedding, x -> x IS NULL)) > 0 THEN FALSE WHEN len(list_filter(embedding, x -> NOT isfinite(x))) > 0 THEN FALSE WHEN len(list_filter(embedding, x -> x <> 0)) = 0 THEN FALSE ELSE TRUE END)
+    FROM embeddings WHERE ({EMBEDDING_WELL_FORMED_SQL})
     ORDER BY vec_id
     """,
     tags=("multimodal", "audio", "fft", "binary"),
@@ -430,13 +430,13 @@ def dp_audio_spectral(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "dp_audio_frame_stats",
-    oracle="""
+    oracle=f"""
     WITH s AS (
       SELECT vec_id AS media_id,
              list_transform(embedding,
                             x -> trunc(CAST(x AS DOUBLE) * 20000)) AS sm
       FROM embeddings
-      WHERE (CASE WHEN embedding IS NULL THEN FALSE WHEN len(embedding) <> 64 THEN FALSE WHEN len(list_filter(embedding, x -> x IS NULL)) > 0 THEN FALSE WHEN len(list_filter(embedding, x -> NOT isfinite(x))) > 0 THEN FALSE WHEN len(list_filter(embedding, x -> x <> 0)) = 0 THEN FALSE ELSE TRUE END)
+      WHERE ({EMBEDDING_WELL_FORMED_SQL})
     ),
     fr AS (
       SELECT media_id, CAST(i AS INTEGER) AS frame_idx,
@@ -547,11 +547,11 @@ def dp_ann_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "dp_ann_refine_selfcheck",
-    oracle="""
+    oracle=f"""
     SELECT CAST(COUNT(*) AS BIGINT) AS n_corpus,
            5 AS n_queries, 5 AS k, 8 AS expand,
            TRUE AS refined_ge_base, TRUE AS refined_recall_ok
-    FROM embeddings WHERE CASE WHEN embedding IS NULL THEN FALSE WHEN len(embedding) <> 64 THEN FALSE WHEN len(list_filter(embedding, x -> x IS NULL)) > 0 THEN FALSE WHEN len(list_filter(embedding, x -> NOT isfinite(x))) > 0 THEN FALSE WHEN len(list_filter(embedding, x -> x <> 0)) = 0 THEN FALSE ELSE TRUE END
+    FROM embeddings WHERE {EMBEDDING_WELL_FORMED_SQL}
     """,
     tags=("similarity", "ann", "refine", "invariant"),
 )
@@ -603,12 +603,12 @@ def dp_ann_refine_selfcheck(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "dp_ann_selfcheck",
-    oracle="""
+    oracle=f"""
     SELECT CAST(COUNT(*) AS BIGINT) AS n_corpus,
            5 AS n_queries, 5 AS k,
            TRUE AS lsh_recall_ok, TRUE AS ivf_recall_ok,
            TRUE AS pq_recall_ok, TRUE AS ivfpq_recall_ok
-    FROM embeddings WHERE CASE WHEN embedding IS NULL THEN FALSE WHEN len(embedding) <> 64 THEN FALSE WHEN len(list_filter(embedding, x -> x IS NULL)) > 0 THEN FALSE WHEN len(list_filter(embedding, x -> NOT isfinite(x))) > 0 THEN FALSE WHEN len(list_filter(embedding, x -> x <> 0)) = 0 THEN FALSE ELSE TRUE END
+    FROM embeddings WHERE {EMBEDDING_WELL_FORMED_SQL}
     """,
     tags=("similarity", "ann", "invariant"),
 )
@@ -671,14 +671,14 @@ def dp_ann_selfcheck(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "dp_embedding_near_dups",
-    oracle="""
+    oracle=f"""
     WITH corpus AS (
-      SELECT vec_id, embedding FROM embeddings WHERE CASE WHEN embedding IS NULL THEN FALSE WHEN len(embedding) <> 64 THEN FALSE WHEN len(list_filter(embedding, x -> x IS NULL)) > 0 THEN FALSE WHEN len(list_filter(embedding, x -> NOT isfinite(x))) > 0 THEN FALSE WHEN len(list_filter(embedding, x -> x <> 0)) = 0 THEN FALSE ELSE TRUE END
+      SELECT vec_id, embedding FROM embeddings WHERE {EMBEDDING_WELL_FORMED_SQL}
       UNION ALL
       SELECT vec_id + 1000000 AS vec_id,
              list_transform(embedding,
                             x -> CAST(x * CAST(1.0001 AS FLOAT) AS FLOAT)) AS embedding
-      FROM embeddings WHERE (CASE WHEN embedding IS NULL THEN FALSE WHEN len(embedding) <> 64 THEN FALSE WHEN len(list_filter(embedding, x -> x IS NULL)) > 0 THEN FALSE WHEN len(list_filter(embedding, x -> NOT isfinite(x))) > 0 THEN FALSE WHEN len(list_filter(embedding, x -> x <> 0)) = 0 THEN FALSE ELSE TRUE END) AND vec_id < 10
+      FROM embeddings WHERE ({EMBEDDING_WELL_FORMED_SQL}) AND vec_id < 10
     )
     SELECT a.vec_id AS id_a, b.vec_id AS id_b,
            CAST(ROUND(CAST(list_cosine_similarity(a.embedding, b.embedding)
@@ -1668,12 +1668,12 @@ def dp_simhash_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "dp_embedding_normalize",
-    oracle="""
+    oracle=f"""
     WITH n AS (
       SELECT vec_id,
              sqrt(list_dot_product(CAST(embedding AS DOUBLE[]),
                                    CAST(embedding AS DOUBLE[]))) AS l2
-      FROM embeddings WHERE CASE WHEN embedding IS NULL THEN FALSE WHEN len(embedding) <> 64 THEN FALSE WHEN len(list_filter(embedding, x -> x IS NULL)) > 0 THEN FALSE WHEN len(list_filter(embedding, x -> NOT isfinite(x))) > 0 THEN FALSE WHEN len(list_filter(embedding, x -> x <> 0)) = 0 THEN FALSE ELSE TRUE END)
+      FROM embeddings WHERE {EMBEDDING_WELL_FORMED_SQL})
     SELECT vec_id,
            ROUND(l2, 6) AS l2_norm,
            ROUND(list_dot_product(CAST(embedding AS DOUBLE[]),
@@ -2365,10 +2365,10 @@ def dp_winsorize(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "dp_scalar_quantize_int8",
-    oracle="""
+    oracle=f"""
     WITH ex AS (
       SELECT vec_id, label, i AS dim, CAST(embedding[i] AS DOUBLE) AS x
-      FROM (SELECT * FROM embeddings WHERE CASE WHEN embedding IS NULL THEN FALSE WHEN len(embedding) <> 64 THEN FALSE WHEN len(list_filter(embedding, x -> x IS NULL)) > 0 THEN FALSE WHEN len(list_filter(embedding, x -> NOT isfinite(x))) > 0 THEN FALSE WHEN len(list_filter(embedding, x -> x <> 0)) = 0 THEN FALSE ELSE TRUE END) embeddings, UNNEST(generate_series(1, len(embedding))) AS u(i)
+      FROM (SELECT * FROM embeddings WHERE {EMBEDDING_WELL_FORMED_SQL}) embeddings, UNNEST(generate_series(1, len(embedding))) AS u(i)
     ), dims AS (
       SELECT dim, min(x) AS lo, max(x) AS hi FROM ex GROUP BY dim
     ), codes AS (
@@ -2534,11 +2534,11 @@ def dp_phash_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     WITH q AS (
       SELECT vec_id AS query_id, embedding AS qe, label AS ql
-      FROM embeddings WHERE (CASE WHEN embedding IS NULL THEN FALSE WHEN len(embedding) <> 64 THEN FALSE WHEN len(list_filter(embedding, x -> x IS NULL)) > 0 THEN FALSE WHEN len(list_filter(embedding, x -> NOT isfinite(x))) > 0 THEN FALSE WHEN len(list_filter(embedding, x -> x <> 0)) = 0 THEN FALSE ELSE TRUE END) AND vec_id < 8
+      FROM embeddings WHERE ({EMBEDDING_WELL_FORMED_SQL}) AND vec_id < 8
     ), scored AS (
       SELECT q.query_id, e.vec_id AS cand_id,
              ROUND({cosine_sql('q.qe', 'e.embedding')}, 6) AS cos
-      FROM (SELECT * FROM embeddings WHERE CASE WHEN embedding IS NULL THEN FALSE WHEN len(embedding) <> 64 THEN FALSE WHEN len(list_filter(embedding, x -> x IS NULL)) > 0 THEN FALSE WHEN len(list_filter(embedding, x -> NOT isfinite(x))) > 0 THEN FALSE WHEN len(list_filter(embedding, x -> x <> 0)) = 0 THEN FALSE ELSE TRUE END) e JOIN q ON e.label = q.ql
+      FROM (SELECT * FROM embeddings WHERE {EMBEDDING_WELL_FORMED_SQL}) e JOIN q ON e.label = q.ql
       WHERE e.vec_id <> q.query_id
     ), ranked AS (
       SELECT query_id, cand_id, cos,
@@ -2863,11 +2863,11 @@ def dp_ngram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "dp_label_centroids",
-    oracle="""
+    oracle=f"""
     SELECT label, i - 1 AS dim,
            ROUND(avg(CAST(embedding[i] AS DOUBLE)), 6) AS centroid,
            CAST(count(*) AS BIGINT) AS n_vecs
-    FROM (SELECT * FROM embeddings WHERE CASE WHEN embedding IS NULL THEN FALSE WHEN len(embedding) <> 64 THEN FALSE WHEN len(list_filter(embedding, x -> x IS NULL)) > 0 THEN FALSE WHEN len(list_filter(embedding, x -> NOT isfinite(x))) > 0 THEN FALSE WHEN len(list_filter(embedding, x -> x <> 0)) = 0 THEN FALSE ELSE TRUE END) embeddings, UNNEST(generate_series(1, len(embedding))) AS u(i)
+    FROM (SELECT * FROM embeddings WHERE {EMBEDDING_WELL_FORMED_SQL}) embeddings, UNNEST(generate_series(1, len(embedding))) AS u(i)
     GROUP BY label, i ORDER BY label, dim
     """,
     tags=("datapipe", "embeddings", "centroids"),
@@ -3466,7 +3466,7 @@ def dp_equidepth_hist2d(spark: SparkSession, sf_dir: str) -> DataFrame:
            ROUND(sqrt(list_dot_product(CAST(e.embedding AS DOUBLE[]),
                                        CAST(e.embedding AS DOUBLE[]))), 6)
              AS emb_norm
-    FROM documents d JOIN (SELECT * FROM embeddings WHERE CASE WHEN embedding IS NULL THEN FALSE WHEN len(embedding) <> 64 THEN FALSE WHEN len(list_filter(embedding, x -> x IS NULL)) > 0 THEN FALSE WHEN len(list_filter(embedding, x -> NOT isfinite(x))) > 0 THEN FALSE WHEN len(list_filter(embedding, x -> x <> 0)) = 0 THEN FALSE ELSE TRUE END) e ON d.doc_id = e.vec_id
+    FROM documents d JOIN (SELECT * FROM embeddings WHERE {EMBEDDING_WELL_FORMED_SQL}) e ON d.doc_id = e.vec_id
     WHERE d.text IS NOT NULL
     ORDER BY d.doc_id
     """,
@@ -4054,14 +4054,14 @@ def dp_jsonl_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "dp_semdedup",
-    oracle="""
+    oracle=f"""
     WITH corpus AS (
-      SELECT vec_id, embedding FROM embeddings WHERE CASE WHEN embedding IS NULL THEN FALSE WHEN len(embedding) <> 64 THEN FALSE WHEN len(list_filter(embedding, x -> x IS NULL)) > 0 THEN FALSE WHEN len(list_filter(embedding, x -> NOT isfinite(x))) > 0 THEN FALSE WHEN len(list_filter(embedding, x -> x <> 0)) = 0 THEN FALSE ELSE TRUE END
+      SELECT vec_id, embedding FROM embeddings WHERE {EMBEDDING_WELL_FORMED_SQL}
       UNION ALL
       SELECT vec_id + 1000000 AS vec_id,
              list_transform(embedding,
                             x -> CAST(x * CAST(1.0001 AS FLOAT) AS FLOAT)) AS embedding
-      FROM embeddings WHERE (CASE WHEN embedding IS NULL THEN FALSE WHEN len(embedding) <> 64 THEN FALSE WHEN len(list_filter(embedding, x -> x IS NULL)) > 0 THEN FALSE WHEN len(list_filter(embedding, x -> NOT isfinite(x))) > 0 THEN FALSE WHEN len(list_filter(embedding, x -> x <> 0)) = 0 THEN FALSE ELSE TRUE END) AND vec_id < 20
+      FROM embeddings WHERE ({EMBEDDING_WELL_FORMED_SQL}) AND vec_id < 20
     ),
     pairs AS (
       SELECT a.vec_id AS ka, b.vec_id AS kb,
@@ -7040,11 +7040,11 @@ def dp_training_data_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
              CAST(ROW_NUMBER() OVER (ORDER BY score DESC, doc_id) AS INTEGER)
                  AS rk_bm25
       FROM bm_top),
-    q AS (SELECT embedding AS qe FROM embeddings WHERE (CASE WHEN embedding IS NULL THEN FALSE WHEN len(embedding) <> 64 THEN FALSE WHEN len(list_filter(embedding, x -> x IS NULL)) > 0 THEN FALSE WHEN len(list_filter(embedding, x -> NOT isfinite(x))) > 0 THEN FALSE WHEN len(list_filter(embedding, x -> x <> 0)) = 0 THEN FALSE ELSE TRUE END) AND vec_id = 0),
+    q AS (SELECT embedding AS qe FROM embeddings WHERE ({EMBEDDING_WELL_FORMED_SQL}) AND vec_id = 0),
     cos_scored AS (
       SELECT e.vec_id AS doc_id,
              ROUND({cosine_sql('q.qe', 'e.embedding')}, 6) AS cos
-      FROM (SELECT * FROM embeddings WHERE CASE WHEN embedding IS NULL THEN FALSE WHEN len(embedding) <> 64 THEN FALSE WHEN len(list_filter(embedding, x -> x IS NULL)) > 0 THEN FALSE WHEN len(list_filter(embedding, x -> NOT isfinite(x))) > 0 THEN FALSE WHEN len(list_filter(embedding, x -> x <> 0)) = 0 THEN FALSE ELSE TRUE END) e CROSS JOIN q WHERE e.vec_id <> 0),
+      FROM (SELECT * FROM embeddings WHERE {EMBEDDING_WELL_FORMED_SQL}) e CROSS JOIN q WHERE e.vec_id <> 0),
     cos_top AS (
       SELECT doc_id, cos FROM cos_scored ORDER BY cos DESC, doc_id LIMIT 15),
     cs AS (
@@ -7301,11 +7301,11 @@ def dp_url_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "dp_embedding_drift",
-    oracle="""
+    oracle=f"""
     WITH expl AS (
         SELECT vec_id, u.dim - 1 AS dim,
                CAST(round(embedding[u.dim] * 1000000) AS BIGINT) AS v
-        FROM (SELECT * FROM embeddings WHERE CASE WHEN embedding IS NULL THEN FALSE WHEN len(embedding) <> 64 THEN FALSE WHEN len(list_filter(embedding, x -> x IS NULL)) > 0 THEN FALSE WHEN len(list_filter(embedding, x -> NOT isfinite(x))) > 0 THEN FALSE WHEN len(list_filter(embedding, x -> x <> 0)) = 0 THEN FALSE ELSE TRUE END) embeddings,
+        FROM (SELECT * FROM embeddings WHERE {EMBEDDING_WELL_FORMED_SQL}) embeddings,
              UNNEST(range(1, len(embedding) + 1)) AS u(dim)
     ),
     scal AS (
@@ -8340,11 +8340,11 @@ def dp_leakage_safe_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     WITH q AS (
       SELECT vec_id AS query_id, embedding AS qe
-      FROM embeddings WHERE (CASE WHEN embedding IS NULL THEN FALSE WHEN len(embedding) <> 64 THEN FALSE WHEN len(list_filter(embedding, x -> x IS NULL)) > 0 THEN FALSE WHEN len(list_filter(embedding, x -> NOT isfinite(x))) > 0 THEN FALSE WHEN len(list_filter(embedding, x -> x <> 0)) = 0 THEN FALSE ELSE TRUE END) AND vec_id < 5),
+      FROM embeddings WHERE ({EMBEDDING_WELL_FORMED_SQL}) AND vec_id < 5),
     scored AS (
       SELECT q.query_id, e.vec_id AS cand_id, e.embedding AS ce,
              ROUND({cosine_sql('q.qe', 'e.embedding')}, 6) AS rel
-      FROM (SELECT * FROM embeddings WHERE CASE WHEN embedding IS NULL THEN FALSE WHEN len(embedding) <> 64 THEN FALSE WHEN len(list_filter(embedding, x -> x IS NULL)) > 0 THEN FALSE WHEN len(list_filter(embedding, x -> NOT isfinite(x))) > 0 THEN FALSE WHEN len(list_filter(embedding, x -> x <> 0)) = 0 THEN FALSE ELSE TRUE END) e CROSS JOIN q WHERE e.vec_id <> q.query_id),
+      FROM (SELECT * FROM embeddings WHERE {EMBEDDING_WELL_FORMED_SQL}) e CROSS JOIN q WHERE e.vec_id <> q.query_id),
     cand AS (
       SELECT * FROM (
         SELECT query_id, cand_id, ce, rel,
@@ -8544,7 +8544,7 @@ def _ddot(a: str, b: str) -> str:
       SELECT vec_id, CAST(embedding AS DOUBLE[]) AS x,
              list_transform({_JL_SQL_LIT}::DOUBLE[][], r ->
                list_dot_product(CAST(embedding AS DOUBLE[]), r) / 4.0) AS y
-      FROM embeddings WHERE CASE WHEN embedding IS NULL THEN FALSE WHEN len(embedding) <> 64 THEN FALSE WHEN len(list_filter(embedding, x -> x IS NULL)) > 0 THEN FALSE WHEN len(list_filter(embedding, x -> NOT isfinite(x))) > 0 THEN FALSE WHEN len(list_filter(embedding, x -> x <> 0)) = 0 THEN FALSE ELSE TRUE END),
+      FROM embeddings WHERE {EMBEDDING_WELL_FORMED_SQL}),
     pairs AS (
       SELECT a.vec_id AS ia,
              sqrt({_ddot('a.x', 'a.x')} - 2.0*{_ddot('a.x', 'b.x')}
@@ -8953,7 +8953,7 @@ def dp_offpolicy_ips(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "dp_rank_correlation",
-    oracle="""
+    oracle=f"""
     WITH feats AS (
       SELECT vec_id,
              CAST(embedding[1] AS DOUBLE) AS x,
@@ -8961,7 +8961,7 @@ def dp_offpolicy_ips(spark: SparkSession, sf_dir: str) -> DataFrame:
                * CAST(embedding[1] AS DOUBLE) AS y,
              CAST(embedding[2] AS DOUBLE) AS z,
              CAST(embedding[1] AS DOUBLE) + CAST(embedding[2] AS DOUBLE) AS w
-      FROM embeddings WHERE CASE WHEN embedding IS NULL THEN FALSE WHEN len(embedding) <> 64 THEN FALSE WHEN len(list_filter(embedding, x -> x IS NULL)) > 0 THEN FALSE WHEN len(list_filter(embedding, x -> NOT isfinite(x))) > 0 THEN FALSE WHEN len(list_filter(embedding, x -> x <> 0)) = 0 THEN FALSE ELSE TRUE END),
+      FROM embeddings WHERE {EMBEDDING_WELL_FORMED_SQL}),
     long AS (
       SELECT vec_id, f.name, f.v
       FROM feats, UNNEST([struct_pack(name := 'f1_x', v := x),
@@ -9541,7 +9541,7 @@ def _kcenter_oracle(k: int) -> str:
     ctes = [
         # well-formed filter once, then every round reads the CTE
         "emb_wf AS (SELECT vec_id, embedding FROM embeddings"
-        " WHERE CASE WHEN embedding IS NULL THEN FALSE WHEN len(embedding) <> 64 THEN FALSE WHEN len(list_filter(embedding, x -> x IS NULL)) > 0 THEN FALSE WHEN len(list_filter(embedding, x -> NOT isfinite(x))) > 0 THEN FALSE WHEN len(list_filter(embedding, x -> x <> 0)) = 0 THEN FALSE ELSE TRUE END)",
+        f" WHERE {EMBEDDING_WELL_FORMED_SQL})",
         "sel1 AS (SELECT vec_id, embedding FROM emb_wf"
         " WHERE vec_id = (SELECT MIN(vec_id) FROM emb_wf))"
     ]
@@ -11258,7 +11258,7 @@ _LN_ARGMAX = (
                  "CAST(ROUND(CAST(embedding[" + str(d + 1) + "] AS DOUBLE)"
                  " * 1000000.0, 0) AS BIGINT) AS x" + str(d)
                  for d in range(5))}
-      FROM embeddings WHERE CASE WHEN embedding IS NULL THEN FALSE WHEN len(embedding) <> 64 THEN FALSE WHEN len(list_filter(embedding, x -> x IS NULL)) > 0 THEN FALSE WHEN len(list_filter(embedding, x -> NOT isfinite(x))) > 0 THEN FALSE WHEN len(list_filter(embedding, x -> x <> 0)) = 0 THEN FALSE ELSE TRUE END),
+      FROM embeddings WHERE {EMBEDDING_WELL_FORMED_SQL}),
     lab AS (
       SELECT *, {_LN_ARGMAX} AS t,
              CASE WHEN CAST(('0x' || substr(md5('ln-v1|' ||
@@ -11793,7 +11793,7 @@ _MAXSIM_DOT = " + ".join(f"q.q{k} * d.d{k}" for k in range(8))
                  "CAST(ROUND(CAST(embedding[CAST(t * 8 + " + str(k + 1)
                  + " AS INT)] AS DOUBLE) * 1000.0, 0) AS BIGINT) AS d" + str(k)
                  for k in range(8))}
-      FROM (SELECT * FROM embeddings WHERE CASE WHEN embedding IS NULL THEN FALSE WHEN len(embedding) <> 64 THEN FALSE WHEN len(list_filter(embedding, x -> x IS NULL)) > 0 THEN FALSE WHEN len(list_filter(embedding, x -> NOT isfinite(x))) > 0 THEN FALSE WHEN len(list_filter(embedding, x -> x <> 0)) = 0 THEN FALSE ELSE TRUE END) embeddings, UNNEST(range(0, 8)) u(t)
+      FROM (SELECT * FROM embeddings WHERE {EMBEDDING_WELL_FORMED_SQL}) embeddings, UNNEST(range(0, 8)) u(t)
     ),
     q AS (
       SELECT t AS qt,
@@ -12236,12 +12236,12 @@ def dp_fairness_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "dp_learning_curve",
-    oracle="""
+    oracle=f"""
     WITH emb_wf AS (
       -- filter level SEPARATE from the projection: DuckDB evaluates
       -- same-SELECT projections on the scan batch, so the NaN cast
       -- would still raise with the WHERE inline
-      SELECT * FROM embeddings WHERE CASE WHEN embedding IS NULL THEN FALSE WHEN len(embedding) <> 64 THEN FALSE WHEN len(list_filter(embedding, x -> x IS NULL)) > 0 THEN FALSE WHEN len(list_filter(embedding, x -> NOT isfinite(x))) > 0 THEN FALSE WHEN len(list_filter(embedding, x -> x <> 0)) = 0 THEN FALSE ELSE TRUE END),
+      SELECT * FROM embeddings WHERE {EMBEDDING_WELL_FORMED_SQL}),
     q AS (
       SELECT vec_id,
              TRY_CAST(ROUND(CAST(embedding[1] AS DOUBLE) * 1000000.0, 0) AS BIGINT) AS x0,
@@ -12785,7 +12785,7 @@ def _gm_oracle() -> str:
       SELECT vec_id, embedding,
              CAST(('0x' || substr(md5('gm|' || vec_id), 1, 8)) AS BIGINT)
                  % 10 = 0 AS poisoned
-      FROM embeddings WHERE CASE WHEN embedding IS NULL THEN FALSE WHEN len(embedding) <> 64 THEN FALSE WHEN len(list_filter(embedding, x -> x IS NULL)) > 0 THEN FALSE WHEN len(list_filter(embedding, x -> NOT isfinite(x))) > 0 THEN FALSE WHEN len(list_filter(embedding, x -> x <> 0)) = 0 THEN FALSE ELSE TRUE END
+      FROM embeddings WHERE {EMBEDDING_WELL_FORMED_SQL}
     ),
     long AS (
       SELECT vec_id, d,
@@ -12926,14 +12926,14 @@ def dp_geometric_median(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "dp_silhouette_simplified",
-    oracle="""
+    oracle=f"""
     WITH pts AS (
       SELECT vec_id, embedding,
              CAST(('0x' || substr(md5('sl|' || vec_id), 1, 8)) AS BIGINT)
                  % 8 AS lab,
              CAST(('0x' || substr(md5('sr|' || vec_id), 1, 8)) AS BIGINT)
                  % 8 AS rnd
-      FROM embeddings WHERE CASE WHEN embedding IS NULL THEN FALSE WHEN len(embedding) <> 64 THEN FALSE WHEN len(list_filter(embedding, x -> x IS NULL)) > 0 THEN FALSE WHEN len(list_filter(embedding, x -> NOT isfinite(x))) > 0 THEN FALSE WHEN len(list_filter(embedding, x -> x <> 0)) = 0 THEN FALSE ELSE TRUE END
+      FROM embeddings WHERE {EMBEDDING_WELL_FORMED_SQL}
     ),
     paired AS (
       SELECT 'planted' AS pair, vec_id, lab AS cl, lab, embedding FROM pts
@@ -13863,7 +13863,7 @@ def _em_oracle() -> str:
                  % 1000
               + CAST(('0x' || substr(md5('emm|' || vec_id), 1, 8)) AS BIGINT)
                  % 1000) AS noise2k
-      FROM embeddings WHERE CASE WHEN embedding IS NULL THEN FALSE WHEN len(embedding) <> 64 THEN FALSE WHEN len(list_filter(embedding, x -> x IS NULL)) > 0 THEN FALSE WHEN len(list_filter(embedding, x -> NOT isfinite(x))) > 0 THEN FALSE WHEN len(list_filter(embedding, x -> x <> 0)) = 0 THEN FALSE ELSE TRUE END
+      FROM embeddings WHERE {EMBEDDING_WELL_FORMED_SQL}
     ),
     pts AS (
       SELECT 10.0 * comp + (noise2k - 1000) / 500.0 AS x FROM raw

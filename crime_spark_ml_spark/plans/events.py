@@ -24,7 +24,7 @@ from ..operators.rank import (
     grouped_row_number,
     ntile_sql,
 )
-from ..sources.catalog import load_table, well_formed_events
+from ..sources.catalog import EVENTS_WELL_FORMED_SQL, load_table, well_formed_events
 from .registry import register
 
 
@@ -35,7 +35,7 @@ from .registry import register
            event_type,
            COUNT(*) AS cnt,
            {dec_sum_sql('value', 6)} AS sum_value
-    FROM events WHERE ts IS NOT NULL AND user_id IS NOT NULL AND event_type IS NOT NULL
+    FROM events WHERE {EVENTS_WELL_FORMED_SQL}
     GROUP BY 1, 2
     ORDER BY 1, 2
     """,
@@ -61,16 +61,16 @@ def ev_window_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "ev_window_sliding",
-    oracle="""
+    oracle=f"""
     WITH buckets AS (
       SELECT make_timestamp((epoch_us(CAST(ts AS TIMESTAMP)) // 1800000000) * 1800000000)
                AS window_start, event_id
       FROM events
-      WHERE ts IS NOT NULL AND user_id IS NOT NULL AND event_type IS NOT NULL
+      WHERE {EVENTS_WELL_FORMED_SQL}
       UNION ALL
       SELECT make_timestamp((epoch_us(CAST(ts AS TIMESTAMP)) // 1800000000) * 1800000000
                             - 1800000000) AS window_start, event_id
-      FROM events WHERE ts IS NOT NULL AND user_id IS NOT NULL AND event_type IS NOT NULL)
+      FROM events WHERE {EVENTS_WELL_FORMED_SQL})
     SELECT strftime(window_start, '%Y-%m-%d %H:%M:%S') AS window_start,
            COUNT(*) AS cnt
     FROM buckets GROUP BY 1 ORDER BY 1
@@ -94,9 +94,9 @@ def ev_window_sliding(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "ev_sessionize",
-    oracle="""
+    oracle=f"""
     WITH base AS (
-      SELECT user_id, event_id, epoch_us(CAST(ts AS TIMESTAMP)) AS ts_us FROM events WHERE ts IS NOT NULL AND user_id IS NOT NULL AND event_type IS NOT NULL),
+      SELECT user_id, event_id, epoch_us(CAST(ts AS TIMESTAMP)) AS ts_us FROM events WHERE {EVENTS_WELL_FORMED_SQL}),
     gaps AS (
       SELECT user_id, ts_us, event_id,
              CASE WHEN ts_us - LAG(ts_us) OVER (PARTITION BY user_id ORDER BY ts_us, event_id)
@@ -602,11 +602,11 @@ def ev_variant_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "ev_time_weighted_avg",
-    oracle="""
+    oracle=f"""
     WITH e AS (
       SELECT user_id, event_id, value,
              epoch_us(CAST(ts AS TIMESTAMP)) AS ts_us
-      FROM events WHERE ts IS NOT NULL AND user_id IS NOT NULL AND event_type IS NOT NULL), seg AS (
+      FROM events WHERE {EVENTS_WELL_FORMED_SQL}), seg AS (
       SELECT user_id, value, ts_us,
              LEAD(value) OVER (PARTITION BY user_id
                                ORDER BY ts_us, event_id) AS v_next,
@@ -734,11 +734,11 @@ def ev_anomaly_mad(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "ev_cumulative_distinct_users",
-    oracle="""
+    oracle=f"""
     WITH days AS (
       SELECT user_id,
              CAST(epoch_us(CAST(ts AS TIMESTAMP)) // 86400000000 AS BIGINT) AS day
-      FROM events WHERE ts IS NOT NULL AND user_id IS NOT NULL AND event_type IS NOT NULL), dau AS (
+      FROM events WHERE {EVENTS_WELL_FORMED_SQL}), dau AS (
       SELECT day, count(DISTINCT user_id) AS dau FROM days GROUP BY day
     ), firsts AS (
       SELECT min(day) AS first_day FROM days GROUP BY user_id
@@ -980,10 +980,10 @@ def ev_first_touch_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "ev_ewma_value",
-    oracle="""
+    oracle=f"""
     WITH base AS (
       SELECT user_id, event_id, epoch_us(CAST(ts AS TIMESTAMP)) AS ts_us, value
-      FROM events WHERE ts IS NOT NULL AND user_id IS NOT NULL AND event_type IS NOT NULL),
+      FROM events WHERE {EVENTS_WELL_FORMED_SQL}),
     ranked AS (
       SELECT *, row_number() OVER (PARTITION BY user_id
                                    ORDER BY ts_us DESC, event_id DESC) AS rk
@@ -1157,12 +1157,12 @@ def ev_peak_concurrency(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "ev_holt_forecast",
-    oracle="""
+    oracle=f"""
     WITH daily AS (
       SELECT event_type,
              epoch_us(CAST(ts AS TIMESTAMP)) // 86400000000 AS d,
              CAST(COUNT(*) AS DOUBLE) AS y
-      FROM events WHERE ts IS NOT NULL AND user_id IS NOT NULL AND event_type IS NOT NULL GROUP BY 1, 2),
+      FROM events WHERE {EVENTS_WELL_FORMED_SQL} GROUP BY 1, 2),
     series AS (
       SELECT event_type, list(y ORDER BY d) AS ys,
              CAST(count(*) AS BIGINT) AS n_days
@@ -1360,11 +1360,11 @@ def ev_busy_time_per_day(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "ev_markov_transitions",
-    oracle="""
+    oracle=f"""
     WITH base AS (
       SELECT user_id, event_id, event_type,
              epoch_us(CAST(ts AS TIMESTAMP)) AS ts_us
-      FROM events WHERE ts IS NOT NULL AND user_id IS NOT NULL AND event_type IS NOT NULL),
+      FROM events WHERE {EVENTS_WELL_FORMED_SQL}),
     seq AS (
       SELECT event_type AS to_type,
              LAG(event_type) OVER (PARTITION BY user_id
@@ -1460,12 +1460,12 @@ def ev_sequence_pattern(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "ev_cusum_alerts",
-    oracle="""
+    oracle=f"""
     WITH daily AS (
       SELECT event_type,
              epoch_us(CAST(ts AS TIMESTAMP)) // 86400000000 AS d,
              COUNT(*) AS x
-      FROM events WHERE ts IS NOT NULL AND user_id IS NOT NULL AND event_type IS NOT NULL GROUP BY 1, 2),
+      FROM events WHERE {EVENTS_WELL_FORMED_SQL} GROUP BY 1, 2),
     tot AS (SELECT event_type, COUNT(*) AS n, SUM(x) AS sx
             FROM daily GROUP BY 1),
     dev AS (
@@ -2379,7 +2379,7 @@ def _mm_cte(a: str, out: str) -> str:
     WITH base AS (
         SELECT user_id, event_id, event_type,
                epoch_us(CAST(ts AS TIMESTAMP)) AS ts_us
-        FROM events WHERE ts IS NOT NULL AND user_id IS NOT NULL AND event_type IS NOT NULL),
+        FROM events WHERE {EVENTS_WELL_FORMED_SQL}),
     seq AS (
         SELECT event_type AS to_type,
                LAG(event_type) OVER (PARTITION BY user_id
@@ -2649,11 +2649,11 @@ def ev_session_paths(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "ev_forecast_backtest",
-    oracle="""
+    oracle=f"""
     WITH daily AS (
         SELECT epoch_us(CAST(ts AS TIMESTAMP)) // 86400000000 AS d,
                CAST(COUNT(*) AS BIGINT) AS n
-        FROM events WHERE ts IS NOT NULL AND user_id IS NOT NULL AND event_type IS NOT NULL GROUP BY 1
+        FROM events WHERE {EVENTS_WELL_FORMED_SQL} GROUP BY 1
     ),
     preds AS (
         SELECT d, n,
@@ -3201,11 +3201,11 @@ def ev_cuped_adjustment(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "ev_changepoint_cusum",
-    oracle="""
+    oracle=f"""
     WITH base AS (
       SELECT event_id,
              epoch_us(CAST(ts AS TIMESTAMP)) // 86400000000 AS day
-      FROM events WHERE ts IS NOT NULL AND user_id IS NOT NULL AND event_type IS NOT NULL),
+      FROM events WHERE {EVENTS_WELL_FORMED_SQL}),
     bounds AS (
       SELECT MIN(day) + 7 * (MAX(day) - MIN(day)) // 10 AS plant_day
       FROM base),
@@ -3537,7 +3537,7 @@ _HW_AMPL = (
       SELECT event_type,
              epoch_us(CAST(ts AS TIMESTAMP)) // 86400000000 AS d,
              CAST(COUNT(*) AS DOUBLE) AS y
-      FROM events WHERE ts IS NOT NULL AND user_id IS NOT NULL AND event_type IS NOT NULL GROUP BY 1, 2),
+      FROM events WHERE {EVENTS_WELL_FORMED_SQL} GROUP BY 1, 2),
     series AS (
       SELECT event_type, list(y ORDER BY d) AS ys,
              CAST(count(*) AS BIGINT) AS n_days
@@ -3878,10 +3878,10 @@ def ev_funnel_latency(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "ev_kaplan_meier",
-    oracle="""
+    oracle=f"""
     WITH base AS (
       SELECT user_id, epoch_us(CAST(ts AS TIMESTAMP)) AS ts_us, event_id
-      FROM events WHERE ts IS NOT NULL AND user_id IS NOT NULL AND event_type IS NOT NULL),
+      FROM events WHERE {EVENTS_WELL_FORMED_SQL}),
     gaps AS (
       SELECT user_id,
              (LEAD(ts_us) OVER (PARTITION BY user_id
@@ -4832,13 +4832,13 @@ def _split_select_list(cols: str) -> list[str]:
 
 @register(
     "ev_growth_accounting",
-    oracle="""
+    oracle=f"""
     WITH uw AS (
       SELECT DISTINCT user_id,
              (epoch_us(CAST(ts AS TIMESTAMP)) // 86400000000
               - (SELECT MIN(epoch_us(CAST(ts AS TIMESTAMP))
-                            // 86400000000) FROM events WHERE ts IS NOT NULL AND user_id IS NOT NULL AND event_type IS NOT NULL)) // 7 AS w
-      FROM events WHERE ts IS NOT NULL AND user_id IS NOT NULL AND event_type IS NOT NULL),
+                            // 86400000000) FROM events WHERE {EVENTS_WELL_FORMED_SQL})) // 7 AS w
+      FROM events WHERE {EVENTS_WELL_FORMED_SQL}),
     flagged AS (
       SELECT user_id, w,
              MIN(w) OVER (PARTITION BY user_id) AS first_w,
@@ -5766,7 +5766,7 @@ _SPRT_CROSS = f"({_SPRT_LLR} >= LN(19.0) OR {_SPRT_LLR} <= -LN(19.0))"
                    AND CAST(('0x' || substr(md5('sprt-lift|' || event_id), 1, 8))
                        AS BIGINT) % 10 = 0 THEN 1
                   ELSE 0 END AS succ
-      FROM events WHERE ts IS NOT NULL AND user_id IS NOT NULL AND event_type IS NOT NULL),
+      FROM events WHERE {EVENTS_WELL_FORMED_SQL}),
     walk AS (
       SELECT arm, succ,
              CAST(ROW_NUMBER() OVER w AS BIGINT) AS rn,
@@ -6229,10 +6229,10 @@ def ev_cluster_randomized_icc(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "ev_littles_law",
-    oracle="""
+    oracle=f"""
     WITH base AS (
       SELECT user_id, event_id, epoch_us(CAST(ts AS TIMESTAMP)) AS ts_us
-      FROM events WHERE ts IS NOT NULL AND user_id IS NOT NULL AND event_type IS NOT NULL),
+      FROM events WHERE {EVENTS_WELL_FORMED_SQL}),
     gaps AS (
       SELECT user_id, ts_us, event_id,
              CASE WHEN LAG(ts_us) OVER w IS NULL THEN 1
@@ -6709,7 +6709,7 @@ _OBF_Z = (
                   THEN 1 ELSE 0 END AS lift,
              ROW_NUMBER() OVER (ORDER BY ts, event_id) AS rn,
              COUNT(*) OVER () AS n
-      FROM events WHERE ts IS NOT NULL AND user_id IS NOT NULL AND event_type IS NOT NULL),
+      FROM events WHERE {EVENTS_WELL_FORMED_SQL}),
     tagged AS (
       SELECT e.experiment, r.arm,
              CASE WHEN e.experiment = 'planted' AND r.arm = 1
@@ -7949,7 +7949,7 @@ _MW_Z = (
                   AS BIGINT) AS base,
              CAST(('0x' || substr(md5('mw|' || user_id), 1, 8)) AS BIGINT) % 2
                  AS t
-      FROM events WHERE ts IS NOT NULL AND user_id IS NOT NULL AND event_type IS NOT NULL GROUP BY user_id
+      FROM events WHERE {EVENTS_WELL_FORMED_SQL} GROUP BY user_id
     ),
     pairs AS (
       SELECT 'planted' AS pair, t, base + 15000 * t AS y FROM per_user
@@ -8234,7 +8234,7 @@ _LR_V = (
       SELECT user_id, epoch_us(CAST(ts AS TIMESTAMP)) AS ts_us, event_id,
              CAST(('0x' || substr(md5('lr2|' || user_id), 1, 8)) AS BIGINT) % 2
                  AS arm
-      FROM events WHERE ts IS NOT NULL AND user_id IS NOT NULL AND event_type IS NOT NULL),
+      FROM events WHERE {EVENTS_WELL_FORMED_SQL}),
     gaps AS (
       SELECT arm,
              (LEAD(ts_us) OVER (PARTITION BY user_id
@@ -8446,7 +8446,7 @@ _LB_Q = (
     oracle=f"""
     WITH daily AS (
       SELECT CAST(ts AS DATE) AS d, CAST(COUNT(*) AS BIGINT) AS x
-      FROM events WHERE ts IS NOT NULL AND user_id IS NOT NULL AND event_type IS NOT NULL GROUP BY 1
+      FROM events WHERE {EVENTS_WELL_FORMED_SQL} GROUP BY 1
     ),
     shuf AS (
       SELECT CAST(ROW_NUMBER() OVER (ORDER BY md5('lb|' || d)) AS BIGINT)
@@ -8988,7 +8988,7 @@ _GC_F = f"((n - 3) * ({_GC_RSSR} - {_GC_RSSU}) / {_GC_RSSU})"
                   AS BIGINT) AS x,
              CAST(SUM(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END)
                   AS BIGINT) AS y
-      FROM events WHERE ts IS NOT NULL AND user_id IS NOT NULL AND event_type IS NOT NULL GROUP BY 1
+      FROM events WHERE {EVENTS_WELL_FORMED_SQL} GROUP BY 1
     ),
     idx AS (
       SELECT CAST(ROW_NUMBER() OVER (ORDER BY d) AS BIGINT) AS t, x, y
@@ -9169,7 +9169,7 @@ _ITS_CHAT = (
     oracle=f"""
     WITH daily AS (
       SELECT CAST(ts AS DATE) AS d, CAST(COUNT(*) AS BIGINT) AS x
-      FROM events WHERE ts IS NOT NULL AND user_id IS NOT NULL AND event_type IS NOT NULL GROUP BY 1
+      FROM events WHERE {EVENTS_WELL_FORMED_SQL} GROUP BY 1
     ),
     tot AS (SELECT CAST(SUM(x) AS BIGINT) AS s FROM daily),
     shuf AS (
@@ -9590,7 +9590,7 @@ _PACF_KERNEL = (100, 70, 49, 34, 24, 17, 12, 8)
     oracle=f"""
     WITH daily AS (
       SELECT CAST(ts AS DATE) AS d, CAST(COUNT(*) AS BIGINT) AS x
-      FROM events WHERE ts IS NOT NULL AND user_id IS NOT NULL AND event_type IS NOT NULL GROUP BY 1
+      FROM events WHERE {EVENTS_WELL_FORMED_SQL} GROUP BY 1
     ),
     shuf AS (
       SELECT CAST(ROW_NUMBER() OVER (ORDER BY md5('pf|' || d)) AS BIGINT)
@@ -9824,7 +9824,7 @@ def ev_circular_rayleigh(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "ev_entropy_rate",
-    oracle="""
+    oracle=f"""
     WITH base AS (
       SELECT user_id, event_id,
              epoch_us(CAST(ts AS TIMESTAMP)) AS ts_us,
@@ -9832,7 +9832,7 @@ def ev_circular_rayleigh(spark: SparkSession, sf_dir: str) -> DataFrame:
                  % 5 AS iid_step,
              CAST(('0x' || substr(md5('er2|' || event_id), 1, 8)) AS BIGINT)
                  % 2 AS walk_step
-      FROM events WHERE ts IS NOT NULL AND user_id IS NOT NULL AND event_type IS NOT NULL),
+      FROM events WHERE {EVENTS_WELL_FORMED_SQL}),
     seq AS (
       SELECT user_id,
              CAST(ROW_NUMBER() OVER (PARTITION BY user_id

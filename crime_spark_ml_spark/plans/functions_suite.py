@@ -10,7 +10,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..sources.catalog import load_table, well_formed_events
+from ..sources.catalog import EVENTS_WELL_FORMED_SQL, load_table, well_formed_events
 from .registry import register
 
 
@@ -503,11 +503,11 @@ def fn_ordered_agg_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "fn_approx_top_k",
-    oracle="""
+    oracle=f"""
     SELECT event_type, CAST(count(*) AS BIGINT) AS cnt,
            CAST(row_number() OVER (ORDER BY count(*) DESC, event_type)
                 AS INTEGER) AS rk
-    FROM events WHERE ts IS NOT NULL AND user_id IS NOT NULL AND event_type IS NOT NULL GROUP BY event_type
+    FROM events WHERE {EVENTS_WELL_FORMED_SQL} GROUP BY event_type
     ORDER BY rk
     """,
     tags=("functions", "sketch", "topk"),

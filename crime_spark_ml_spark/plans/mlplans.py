@@ -19,6 +19,8 @@ from pyspark.sql import functions as F
 
 from ..functions.aggs import dec_sum, dec_sum_sql
 from ..sources.catalog import (
+    EMBEDDING_WELL_FORMED_SQL,
+    EVENTS_WELL_FORMED_SQL,
     load_table,
     well_formed_embeddings,
     well_formed_events,
@@ -34,12 +36,12 @@ def _vectors(df: DataFrame, vec_col: str = "embedding") -> DataFrame:
 
 @register(
     "ml_kmeans_clusters",
-    oracle="""
+    oracle=f"""
     SELECT 10 AS k_requested,
            COUNT(*) AS n_points,
            TRUE AS n_clusters_bounded,
            TRUE AS sizes_positive
-    FROM embeddings WHERE CASE WHEN embedding IS NULL THEN FALSE WHEN len(embedding) <> 64 THEN FALSE WHEN len(list_filter(embedding, x -> x IS NULL)) > 0 THEN FALSE WHEN len(list_filter(embedding, x -> NOT isfinite(x))) > 0 THEN FALSE WHEN len(list_filter(embedding, x -> x <> 0)) = 0 THEN FALSE ELSE TRUE END
+    FROM embeddings WHERE {EMBEDDING_WELL_FORMED_SQL}
     """,
     tags=("ml", "M2", "invariant"),
 )
@@ -71,11 +73,11 @@ def ml_kmeans_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "ml_logreg_accuracy",
-    oracle="""
+    oracle=f"""
     SELECT TRUE AS acc_in_range,
            COUNT(DISTINCT label) AS n_classes,
            TRUE AS split_covers_all
-    FROM embeddings WHERE CASE WHEN embedding IS NULL THEN FALSE WHEN len(embedding) <> 64 THEN FALSE WHEN len(list_filter(embedding, x -> x IS NULL)) > 0 THEN FALSE WHEN len(list_filter(embedding, x -> NOT isfinite(x))) > 0 THEN FALSE WHEN len(list_filter(embedding, x -> x <> 0)) = 0 THEN FALSE ELSE TRUE END
+    FROM embeddings WHERE {EMBEDDING_WELL_FORMED_SQL}
     """,
     tags=("ml", "M3", "M4", "M5", "M6", "invariant"),
 )
@@ -111,13 +113,13 @@ def ml_logreg_accuracy(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "ml_pca_embeddings",
-    oracle="""
+    oracle=f"""
     SELECT 8 AS n_components,
            MAX(len(embedding)) AS input_dim,
            TRUE AS ratios_sorted_desc,
            TRUE AS ratios_positive,
            TRUE AS ratios_sum_le_one
-    FROM embeddings WHERE CASE WHEN embedding IS NULL THEN FALSE WHEN len(embedding) <> 64 THEN FALSE WHEN len(list_filter(embedding, x -> x IS NULL)) > 0 THEN FALSE WHEN len(list_filter(embedding, x -> NOT isfinite(x))) > 0 THEN FALSE WHEN len(list_filter(embedding, x -> x <> 0)) = 0 THEN FALSE ELSE TRUE END
+    FROM embeddings WHERE {EMBEDDING_WELL_FORMED_SQL}
     """,
     tags=("ml", "M6", "PCA", "invariant"),
 )
@@ -246,11 +248,11 @@ def ml_crime_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "ml_gbt_binary_auc",
-    oracle="""
+    oracle=f"""
     SELECT TRUE AS auc_in_range,
            COUNT(DISTINCT label % 2) AS n_label_values,
            10 AS n_trees
-    FROM embeddings WHERE CASE WHEN embedding IS NULL THEN FALSE WHEN len(embedding) <> 64 THEN FALSE WHEN len(list_filter(embedding, x -> x IS NULL)) > 0 THEN FALSE WHEN len(list_filter(embedding, x -> NOT isfinite(x))) > 0 THEN FALSE WHEN len(list_filter(embedding, x -> x <> 0)) = 0 THEN FALSE ELSE TRUE END
+    FROM embeddings WHERE {EMBEDDING_WELL_FORMED_SQL}
     """,
     tags=("ml", "M6", "GBT", "invariant"),
 )
@@ -284,12 +286,12 @@ def ml_gbt_binary_auc(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "ml_gbt_multiclass",
-    oracle="""
+    oracle=f"""
     SELECT TRUE AS acc_in_range,
            COUNT(DISTINCT label) AS n_classes,
            TRUE AS one_model_per_class,
            TRUE AS predicted_classes_bounded
-    FROM embeddings WHERE CASE WHEN embedding IS NULL THEN FALSE WHEN len(embedding) <> 64 THEN FALSE WHEN len(list_filter(embedding, x -> x IS NULL)) > 0 THEN FALSE WHEN len(list_filter(embedding, x -> NOT isfinite(x))) > 0 THEN FALSE WHEN len(list_filter(embedding, x -> x <> 0)) = 0 THEN FALSE ELSE TRUE END
+    FROM embeddings WHERE {EMBEDDING_WELL_FORMED_SQL}
     """,
     tags=("ml", "M3", "GBT", "multiclass", "invariant"),
 )
@@ -589,11 +591,11 @@ def ml_naive_bayes_text(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "ml_kmeans_elbow",
-    oracle="""
+    oracle=f"""
     SELECT COUNT(*) AS n_points,
            TRUE AS cost_monotone_nonincreasing,
            TRUE AS all_costs_positive
-    FROM embeddings WHERE CASE WHEN embedding IS NULL THEN FALSE WHEN len(embedding) <> 64 THEN FALSE WHEN len(list_filter(embedding, x -> x IS NULL)) > 0 THEN FALSE WHEN len(list_filter(embedding, x -> NOT isfinite(x))) > 0 THEN FALSE WHEN len(list_filter(embedding, x -> x <> 0)) = 0 THEN FALSE ELSE TRUE END
+    FROM embeddings WHERE {EMBEDDING_WELL_FORMED_SQL}
     """,
     tags=("ml", "kmeans", "invariant"),
 )
@@ -864,13 +866,13 @@ def ml_isotonic_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "ml_gmm_clusters",
-    oracle="""
+    oracle=f"""
     SELECT 6 AS k_requested,
            CAST(COUNT(*) AS BIGINT) AS n_points,
            TRUE AS weights_sum_to_one,
            TRUE AS weights_positive,
            TRUE AS every_point_assigned
-    FROM embeddings WHERE CASE WHEN embedding IS NULL THEN FALSE WHEN len(embedding) <> 64 THEN FALSE WHEN len(list_filter(embedding, x -> x IS NULL)) > 0 THEN FALSE WHEN len(list_filter(embedding, x -> NOT isfinite(x))) > 0 THEN FALSE WHEN len(list_filter(embedding, x -> x <> 0)) = 0 THEN FALSE ELSE TRUE END
+    FROM embeddings WHERE {EMBEDDING_WELL_FORMED_SQL}
     """,
     tags=("ml", "gmm", "invariant"),
 )
@@ -1290,7 +1292,7 @@ def ml_word2vec_synonyms(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "ml_aft_survival",
-    oracle="""
+    oracle=f"""
     WITH per_user AS (
       SELECT user_id,
              CAST(('0x' || substr(md5('aft-v1|' || CAST(user_id AS VARCHAR)), 1, 8))
@@ -1298,7 +1300,7 @@ def ml_word2vec_synonyms(spark: SparkSession, sf_dir: str) -> DataFrame:
              MIN(epoch_us(CAST(ts AS TIMESTAMP))) AS fe_us,
              MIN(CASE WHEN event_type = 'purchase'
                       THEN epoch_us(CAST(ts AS TIMESTAMP)) END) AS fp_us
-      FROM events WHERE ts IS NOT NULL AND user_id IS NOT NULL AND event_type IS NOT NULL GROUP BY user_id
+      FROM events WHERE {EVENTS_WELL_FORMED_SQL} GROUP BY user_id
     )
     SELECT CAST(COUNT(*) AS BIGINT) AS n_users,
            CAST(SUM(CASE WHEN fp_us IS NULL
@@ -1396,12 +1398,12 @@ def ml_aft_survival(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "ml_prefixspan_sequences",
-    oracle="""
+    oracle=f"""
     WITH ranked AS (
       SELECT user_id, event_type,
              ROW_NUMBER() OVER (PARTITION BY user_id
                  ORDER BY epoch_us(CAST(ts AS TIMESTAMP)), event_id) AS rn
-      FROM events WHERE ts IS NOT NULL AND user_id IS NOT NULL AND event_type IS NOT NULL),
+      FROM events WHERE {EVENTS_WELL_FORMED_SQL}),
     first5 AS (SELECT user_id, event_type, rn FROM ranked WHERE rn <= 5),
     singles AS (
       SELECT event_type AS pattern,
@@ -1557,14 +1559,14 @@ def ml_lda_topics(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "ml_feature_importance_planted",
-    oracle="""
+    oracle=f"""
     SELECT CAST(COUNT(*) AS BIGINT) AS n_vecs,
            CAST(SUM(CASE WHEN embedding[1] + embedding[2] > 0
                          THEN 1 ELSE 0 END) AS BIGINT) AS n_pos,
            TRUE AS informative_dims_top2,
            TRUE AS accuracy_beats_chance,
            TRUE AS importances_normalized
-    FROM embeddings WHERE CASE WHEN embedding IS NULL THEN FALSE WHEN len(embedding) <> 64 THEN FALSE WHEN len(list_filter(embedding, x -> x IS NULL)) > 0 THEN FALSE WHEN len(list_filter(embedding, x -> NOT isfinite(x))) > 0 THEN FALSE WHEN len(list_filter(embedding, x -> x <> 0)) = 0 THEN FALSE ELSE TRUE END
+    FROM embeddings WHERE {EMBEDDING_WELL_FORMED_SQL}
     """,
     tags=("ml", "interpretability", "feature-importance", "invariant"),
 )

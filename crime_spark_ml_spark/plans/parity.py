@@ -51,6 +51,16 @@ def _norm_cell(v):
     return v
 
 
+def _strict_cell(v):
+    """Like _norm_cell but keeps the sign of a zero ("-0.0")."""
+    if isinstance(v, float):
+        if math.isnan(v):
+            return "NaN"
+        if v == 0.0 and math.copysign(1.0, v) < 0:
+            return "-0.0"
+    return v
+
+
 def _sorted_rows(cols: list[str], rows: list[tuple]) -> tuple[list[str], list[tuple]]:
     # compare and reorder case-insensitively: lowercase BEFORE sorting,
     # otherwise a mixed-case name list lowercased after the sort may no

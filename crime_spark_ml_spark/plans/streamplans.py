@@ -16,6 +16,7 @@ from pyspark.sql import functions as F
 
 from ..functions.aggs import dec_sum, dec_sum_sql
 from ..sources.catalog import (
+    EVENTS_WELL_FORMED_SQL,
     load_table,
     normalize_events,
     raw_events_schema,
@@ -56,7 +57,7 @@ def events_stream(spark: SparkSession, sf_dir: str, staged: str | None = None) -
            COUNT(*) AS cnt,
            {dec_sum_sql('value', 6)} AS sum_value
     FROM events
-    WHERE ts IS NOT NULL AND user_id IS NOT NULL AND event_type IS NOT NULL
+    WHERE {EVENTS_WELL_FORMED_SQL}
     GROUP BY 1, 2
     ORDER BY 1, 2
     """,
@@ -397,10 +398,10 @@ def stream_static_broadcast_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "stream_stateful_running_counts",
-    oracle="""
+    oracle=f"""
     SELECT event_type, CAST(2 * COUNT(*) AS BIGINT) AS total_events
     FROM events
-    WHERE ts IS NOT NULL AND user_id IS NOT NULL AND event_type IS NOT NULL
+    WHERE {EVENTS_WELL_FORMED_SQL}
     GROUP BY event_type
     ORDER BY event_type
     """,
@@ -687,11 +688,11 @@ def stream_incremental_rollup(
 
 @register(
     "stream_left_outer_join",
-    oracle="""
+    oracle=f"""
     WITH c AS (SELECT user_id, epoch_us(CAST(ts AS TIMESTAMP)) AS ts_us
-               FROM events WHERE ts IS NOT NULL AND user_id IS NOT NULL AND event_type IS NOT NULL AND event_type = 'click'),
+               FROM events WHERE {EVENTS_WELL_FORMED_SQL} AND event_type = 'click'),
     p AS (SELECT user_id, epoch_us(CAST(ts AS TIMESTAMP)) AS ts_us
-          FROM events WHERE ts IS NOT NULL AND user_id IS NOT NULL AND event_type IS NOT NULL AND event_type = 'purchase'),
+          FROM events WHERE {EVENTS_WELL_FORMED_SQL} AND event_type = 'purchase'),
     wm AS (SELECT least((SELECT max(ts_us) FROM c),
                         (SELECT max(ts_us) FROM p)) - 3600000000 AS w),
     pairs AS (
@@ -774,11 +775,11 @@ def stream_left_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "stream_full_outer_join",
-    oracle="""
+    oracle=f"""
     WITH c AS (SELECT user_id, epoch_us(CAST(ts AS TIMESTAMP)) AS ts_us
-               FROM events WHERE ts IS NOT NULL AND user_id IS NOT NULL AND event_type IS NOT NULL AND event_type = 'click'),
+               FROM events WHERE {EVENTS_WELL_FORMED_SQL} AND event_type = 'click'),
     p AS (SELECT user_id, epoch_us(CAST(ts AS TIMESTAMP)) AS ts_us
-          FROM events WHERE ts IS NOT NULL AND user_id IS NOT NULL AND event_type IS NOT NULL AND event_type = 'purchase'),
+          FROM events WHERE {EVENTS_WELL_FORMED_SQL} AND event_type = 'purchase'),
     wm AS (SELECT least((SELECT max(ts_us) FROM c),
                         (SELECT max(ts_us) FROM p)) - 3600000000 AS w),
     matched AS (
@@ -864,10 +865,10 @@ def stream_full_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "stream_ewma_stateful",
-    oracle="""
+    oracle=f"""
     WITH base AS (
       SELECT user_id, event_id, epoch_us(CAST(ts AS TIMESTAMP)) AS ts_us, value
-      FROM events WHERE ts IS NOT NULL AND user_id IS NOT NULL AND event_type IS NOT NULL),
+      FROM events WHERE {EVENTS_WELL_FORMED_SQL}),
     ranked AS (
       SELECT *, row_number() OVER (PARTITION BY user_id
                                    ORDER BY ts_us DESC, event_id DESC) AS rk

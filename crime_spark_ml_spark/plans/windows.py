@@ -13,7 +13,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..sources.catalog import load_table, well_formed_events
+from ..sources.catalog import EVENTS_WELL_FORMED_SQL, load_table, well_formed_events
 from .registry import register
 
 
@@ -259,14 +259,14 @@ def w_value_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "w_moving_avg_rows_frame",
-    oracle="""
+    oracle=f"""
     SELECT user_id, event_id,
            ROUND(avg(value) OVER (PARTITION BY user_id
                                   ORDER BY epoch_us(CAST(ts AS TIMESTAMP)), event_id
                                   ROWS BETWEEN 6 PRECEDING AND CURRENT ROW),
                  6) AS mavg7
     FROM events
-    WHERE ts IS NOT NULL AND user_id IS NOT NULL AND event_type IS NOT NULL
+    WHERE {EVENTS_WELL_FORMED_SQL}
     ORDER BY user_id, epoch_us(CAST(ts AS TIMESTAMP)), event_id
     """,
     tags=("windows", "frame", "rows"),
@@ -488,11 +488,11 @@ def j_scd2_temporal_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "w_session_window_native",
-    oracle="""
+    oracle=f"""
     WITH base AS (
       SELECT user_id, event_id,
              epoch_us(CAST(ts AS TIMESTAMP)) AS ts_us
-      FROM events WHERE ts IS NOT NULL AND user_id IS NOT NULL AND event_type IS NOT NULL),
+      FROM events WHERE {EVENTS_WELL_FORMED_SQL}),
     gaps AS (
       SELECT user_id, ts_us,
              CASE WHEN ts_us - LAG(ts_us) OVER

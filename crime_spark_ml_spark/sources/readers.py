@@ -65,14 +65,6 @@ def read_crime_test_csv(spark: SparkSession, path: str) -> DataFrame:
     return read_csv(spark, path, CRIME_TEST_CSV_SCHEMA)
 
 
-def read_json_lines(
-    spark: SparkSession, path: str, schema: T.StructType
-) -> DataFrame:
-    """NDJSON scan with declared schema (the batch twin of the
-    streaming wire parse)."""
-    return spark.read.schema(schema).json(path)
-
-
 def local_frame(
     spark: SparkSession, rows: Iterable[Sequence], schema: str | T.StructType
 ) -> DataFrame:

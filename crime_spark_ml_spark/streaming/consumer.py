@@ -160,33 +160,20 @@ def run_available_now(
     """Process everything currently available, block until done, and
     return the materialized result (deterministic test/driver runs).
 
-    ``SPARK_GRAFT_STREAM_SHUFFLE_PARTITIONS`` (optional env) sets
-    spark.sql.shuffle.partitions for the duration of the run — a
-    stateful query's state-store count is fixed at first start from
-    that conf, and it is THE sizing lever for stateful streaming: the
-    local 32 stores are per-batch commit overhead for kilobyte state
-    (progress metrics r10: commit+update wall time across stores
-    dwarfs addBatch for 98.5k session rows), while a production
-    deployment sizes stores to state volume, not driver cores. Unset
-    — the default — leaves the session conf untouched, keeping the
-    driver bench comparable round over round. (RocksDB provider
-    measured 1.4x SLOWER than HDFS-backed at this state size — JNI +
-    per-store file overhead; see OPTIMIZATION_r10.md.)"""
-    import os
-
+    A stateful query's state-store count is fixed at first start from
+    spark.sql.shuffle.partitions, which makes it THE sizing lever for
+    stateful streaming: the local 32 stores are per-batch commit
+    overhead for kilobyte state (progress metrics r10: commit+update
+    wall time across stores dwarfs addBatch for 98.5k session rows),
+    while a production deployment sizes stores to state volume, not
+    driver cores. (RocksDB provider measured 1.4x SLOWER than
+    HDFS-backed at this state size — JNI + per-store file overhead; see
+    OPTIMIZATION_r10.md.)"""
     spark = df.sparkSession
-    override = os.environ.get("SPARK_GRAFT_STREAM_SHUFFLE_PARTITIONS")
-    prev = spark.conf.get("spark.sql.shuffle.partitions") if override else None
-    if override:
-        spark.conf.set("spark.sql.shuffle.partitions", override)
-    try:
-        query = (
-            to_memory(df, name, output_mode, checkpoint)
-            .trigger(availableNow=True)
-            .start()
-        )
-        query.awaitTermination()
-    finally:
-        if override:
-            spark.conf.set("spark.sql.shuffle.partitions", prev)
+    query = (
+        to_memory(df, name, output_mode, checkpoint)
+        .trigger(availableNow=True)
+        .start()
+    )
+    query.awaitTermination()
     return spark.table(name)

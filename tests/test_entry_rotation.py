@@ -34,12 +34,10 @@ def test_attestation_rounds_reads_latest_green(tmp_path):
 def test_rotated_orders_by_staleness_then_defers_heavy():
     d = {k: k for k in ["q_new", "ml_new", "q_r1", "ml_r1", "q_r2", "dp_dedup_pipeline"]}
     last = {"q_r1": 1, "ml_r1": 1, "q_r2": 2, "dp_dedup_pipeline": 1}
-    got = list(entry._rotated(d, last=last, reattest={"dp_dedup_pipeline"}))
-    # cohort -1: dp_dedup_pipeline (contract-changed with a pre-change
-    # attestation) STRICTLY before the never-attested cohort 0 — the
-    # r05 failure mode was re-attests sharing cohort 0 with ~200
-    # never-attested queries; then cohort 0 cheap-before-heavy; r1; r2
-    assert got == ["dp_dedup_pipeline", "q_new", "ml_new", "q_r1", "ml_r1", "q_r2"]
+    got = list(entry._rotated(d, last=last))
+    # cohort 0 (never attested) cheap-before-heavy, then r1 with the
+    # heavy ml_r1/dp_dedup_pipeline after the cheap q_r1, then r2
+    assert got == ["q_new", "ml_new", "q_r1", "ml_r1", "dp_dedup_pipeline", "q_r2"]
 
 
 def test_rotated_ties_break_by_registry_order():
@@ -76,87 +74,3 @@ def test_rotated_preserves_membership():
     qpos = {k: i for i, k in enumerate(q)}
     opos = [qpos[k] for k in o]
     assert opos == sorted(opos)
-
-
-def test_rotated_reattests_contract_changed_queries():
-    """A query in the reattest set with only a pre-change attestation
-    rejoins cohort 0; one already re-attested at/after _REATTEST_AS_OF
-    does not. (The production _REATTEST set is drained — all r04
-    conversions re-attested — so membership is injected here.)"""
-    d = {k: k for k in ["plain_old", "ml_kmeans_clusters", "ml_logreg_accuracy"]}
-    last = {
-        "plain_old": 1,
-        "ml_kmeans_clusters": 3,  # attested before the oracle change
-        "ml_logreg_accuracy": entry._REATTEST_AS_OF,  # new contract attested
-    }
-    got = list(
-        entry._rotated(
-            d, last=last, reattest={"ml_kmeans_clusters", "ml_logreg_accuracy"}
-        )
-    )
-    assert got == ["ml_kmeans_clusters", "plain_old", "ml_logreg_accuracy"]
-
-
-def test_flagged_reattest_fronts_the_production_window():
-    """The production registry must surface every un-drained _REATTEST
-    entry inside the first len(_REATTEST) positions — the guarantee the
-    r05 rotation lacked."""
-    if not entry._REATTEST:
-        return
-    q = list(entry.queries())
-    front = set(q[: len(entry._REATTEST)])
-    last = entry._attestation_rounds()
-    pending = {
-        n for n in entry._REATTEST if last.get(n, 0) < entry._REATTEST_AS_OF
-    }
-    assert pending <= front
-
-
-def test_rotated_prefers_rewritten_since_attestation():
-    """A value-preserving rewrite after attestation queues the query in
-    cohort 0.5: behind every never-attested query (its old green row is
-    still valid — no urgency) but ahead of untouched attested rows (a
-    rewrite is where a fresh regression would hide). A query re-attested
-    at/after its rewrite round leaves the cohort; a never-attested query
-    is NOT demoted by a rewrite entry."""
-    d = {k: k for k in ["q_new", "q_rewritten", "q_reattested", "q_stale"]}
-    last = {"q_rewritten": 3, "q_reattested": 6, "q_stale": 1}
-    rewritten = {"q_rewritten": 6, "q_reattested": 6, "q_new": 6}
-    got = list(entry._rotated(d, last=last, reattest=set(), rewritten=rewritten))
-    assert got == ["q_new", "q_rewritten", "q_stale", "q_reattested"]
-
-
-def test_production_rewritten_set_has_no_stale_entries():
-    """Housekeeping twin of the _REATTEST pin: every _REWRITTEN entry
-    must name a registered query and still lack a green row at/after
-    its rewrite round — once the driver re-attests the rewritten plan,
-    the entry must be pruned."""
-    from crime_spark_ml_spark.plans.registry import all_queries
-
-    registered = set(all_queries())
-    last = entry._attestation_rounds()
-    for name, rnd in entry._REWRITTEN.items():
-        assert name in registered, f"_REWRITTEN names unregistered query {name}"
-        assert last.get(name, 0) < rnd, (
-            f"{name} re-attested in r{last[name]} >= its r{rnd} rewrite; "
-            "prune it from _REWRITTEN"
-        )
-
-
-def test_production_reattest_set_has_no_stale_entries():
-    """Housekeeping invariant (replaces the r04 'drained' pin, which a
-    legitimate r05 contract change re-populated): every _REATTEST entry
-    must (a) name a registered query and (b) still LACK a green row
-    at/after _REATTEST_AS_OF — once the driver re-attests the new
-    contract, the entry must be pruned. An empty set trivially
-    passes."""
-    from crime_spark_ml_spark.plans.registry import all_queries
-
-    registered = set(all_queries())
-    last = entry._attestation_rounds()
-    for name in entry._REATTEST:
-        assert name in registered, f"_REATTEST names unregistered query {name}"
-        assert last.get(name, 0) < entry._REATTEST_AS_OF, (
-            f"{name} re-attested in r{last[name]} >= {entry._REATTEST_AS_OF}; "
-            "prune it from _REATTEST"
-        )

@@ -617,16 +617,17 @@ def test_rows_only_queries_survive_degenerate_inputs(spark, tmp_path):
 
 
 def test_inline_wellformed_predicates_match_canonical():
-    """The well-formed predicates are hand-inlined into ~80 oracle
-    strings (most are plain strings, not f-strings). Pin every inline
-    copy to the canonical constants so a future edit to
-    sources/catalog.py cannot silently leave oracles on the old text
-    while the Spark-side helpers move on — the exact drift that would
-    make Spark filter one row set and DuckDB another."""
+    """Oracles reference the well-formed predicates of
+    sources/catalog.py (f-string substitution) and never inline them, so
+    one module owns the oracle text and an edit there cannot leave
+    oracles on the old predicate while the Spark-side helpers move on —
+    the drift that would make Spark filter one row set and DuckDB
+    another."""
     import glob
     import os
     import re
 
+    from crime_spark_ml_spark.plans.registry import all_oracles
     from crime_spark_ml_spark.sources.catalog import (
         EMBEDDING_WELL_FORMED_SQL,
         EVENTS_WELL_FORMED_SQL,
@@ -639,17 +640,17 @@ def test_inline_wellformed_predicates_match_canonical():
         "crime_spark_ml_spark",
         "plans",
     )
-    emb_starts = ev_count = 0
     for path in glob.glob(os.path.join(plans, "*.py")):
         src = open(path).read()
-        # every CASE WHEN embedding... occurrence must be the FULL
-        # canonical predicate, not a stale or truncated variant
-        for m in re.finditer(r"CASE WHEN embedding IS NULL", src):
-            emb_starts += 1
-            assert src[m.start() : m.start() + len(EMBEDDING_WELL_FORMED_SQL)] == (
-                EMBEDDING_WELL_FORMED_SQL
-            ), f"stale embedding predicate copy in {path} at {m.start()}"
-        ev_count += src.count(EVENTS_WELL_FORMED_SQL)
+        for text in (
+            EMBEDDING_WELL_FORMED_SQL,
+            EVENTS_WELL_FORMED_SQL,
+            "CASE WHEN embedding IS NULL",
+        ):
+            assert text not in src, (
+                f"inline well-formed predicate in {path}: reference the "
+                "sources.catalog constant instead"
+            )
         # no partial events predicate: ts+user without event_type etc.
         partial = re.findall(
             r"ts IS NOT NULL AND user_id IS NOT NULL(?! AND event_type IS NOT NULL)",
@@ -658,7 +659,7 @@ def test_inline_wellformed_predicates_match_canonical():
         assert not partial, f"partial events predicate in {path}"
         # r7 fact-table predicates: any inline copy (none yet — today
         # they reach oracles only via f-string injection) must be the
-        # FULL canonical text, same rule as the embedding predicate
+        # FULL canonical text
         for anchor, full in (
             (r"o_custkey IS NOT NULL AND o_orderdate IS NOT NULL", ORDERS_WELL_FORMED_SQL),
             (r"l_orderkey IS NOT NULL AND l_shipdate IS NOT NULL", LINEITEM_WELL_FORMED_SQL),
@@ -667,7 +668,9 @@ def test_inline_wellformed_predicates_match_canonical():
                 assert src[m.start() : m.start() + len(full)] == full, (
                     f"stale fact-table predicate copy in {path} at {m.start()}"
                 )
-    # the campaign inlined dozens of copies — if these counts collapse,
-    # the predicates were renamed/retired without updating this pin
-    assert emb_starts >= 30, emb_starts
-    assert ev_count >= 30, ev_count
+    # dozens of oracles filter on each predicate — if these counts
+    # collapse, the predicates were renamed/retired without updating
+    # this pin
+    oracles = all_oracles().values()
+    assert sum(EMBEDDING_WELL_FORMED_SQL in o for o in oracles) >= 30
+    assert sum(EVENTS_WELL_FORMED_SQL in o for o in oracles) >= 30

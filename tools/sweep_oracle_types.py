@@ -37,11 +37,6 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-TABLES = (
-    "region nation customer supplier part orders lineitem events "
-    "documents embeddings"
-).split()
-
 # Exact-match portable scalar types (DuckDB DESCRIBE spelling).
 _PORTABLE_SCALARS = {
     "BOOLEAN",
@@ -92,13 +87,10 @@ def _is_portable(duck_type: str) -> bool:
 
 def sweep(sf_dir: str = "/root/testdata/sf0.001") -> list[tuple[str, str, str]]:
     """Return [(query, column, duck_type)] for every fragile column."""
-    import duckdb
-
+    from crime_spark_ml_spark.plans.parity import _duckdb_conn
     from crime_spark_ml_spark.plans.registry import load_all_plans
 
-    con = duckdb.connect()
-    for t in TABLES:
-        con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
+    con = _duckdb_conn(sf_dir)
     bad: list[tuple[str, str, str]] = []
     for name, spec in sorted(load_all_plans().items()):
         if spec.oracle is None:

@@ -40,10 +40,7 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-TABLES = (
-    "region nation customer supplier part orders lineitem events "
-    "documents embeddings"
-).split()
+from crime_spark_ml_spark.plans.parity import _duckdb_conn  # noqa: E402
 
 _ROUND_RE = re.compile(r"\bROUND\s*\(", flags=re.I)
 
@@ -103,11 +100,7 @@ def _rewrite_rounds(sql: str) -> str:
 
 
 def _conn(sf_dir: str, variant: str):
-    import duckdb
-
-    con = duckdb.connect()
-    for t in TABLES:
-        con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
+    con = _duckdb_conn(sf_dir)
     for stmt in _MACROS[variant]:
         con.sql(stmt)
     return con

@@ -27,23 +27,16 @@ engines agree by construction.
 
 from __future__ import annotations
 
-import math
 import os
 import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from crime_spark_ml_spark.plans.parity import _duckdb_conn, _norm_cell  # noqa: E402
-
-
-def _strict_cell(v):
-    if isinstance(v, float):
-        if math.isnan(v):
-            return "NaN"
-        if v == 0.0 and math.copysign(1.0, v) < 0:
-            return "-0.0"
-        return v
-    return v
+from crime_spark_ml_spark.plans.parity import (  # noqa: E402
+    _duckdb_conn,
+    _norm_cell,
+    _strict_cell,
+)
 
 
 def _sorted_raw(cols: list[str], rows: list[tuple]) -> list[tuple]:

@@ -26,37 +26,20 @@ or restructuring so the float fold has a deterministic order.
 
 from __future__ import annotations
 
-import math
 import os
 import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-TABLES = (
-    "region nation customer supplier part orders lineitem events "
-    "documents embeddings"
-).split()
+from crime_spark_ml_spark.plans.parity import _duckdb_conn, _strict_cell  # noqa: E402
 
 THREADS = (1, 4, 32)
 
 
 def _conn(sf_dir: str, threads: int):
-    import duckdb
-
-    con = duckdb.connect()
+    con = _duckdb_conn(sf_dir)
     con.sql(f"SET threads TO {threads}")
-    for t in TABLES:
-        con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
     return con
-
-
-def _canon(v):
-    if isinstance(v, float):
-        if math.isnan(v):
-            return "NaN"
-        if v == 0.0 and math.copysign(1.0, v) < 0:
-            return "-0.0"
-    return v
 
 
 def sweep(sf_dir: str, only: list[str] | None = None) -> list[tuple[str, str]]:
@@ -71,7 +54,7 @@ def sweep(sf_dir: str, only: list[str] | None = None) -> list[tuple[str, str]]:
         for t, con in cons.items():
             try:
                 outs[t] = sorted(
-                    repr(tuple(_canon(c) for c in row))
+                    repr(tuple(_strict_cell(c) for c in row))
                     for row in con.sql(spec.oracle).fetchall()
                 )
             except Exception as e:  # noqa: BLE001
