@@ -4,9 +4,11 @@ Pipeline — SURVEY.md §3.2's target design.
 Reference trace → stage mapping:
 - split Dates → date/time + Year (crime.py:97-104, E3/E4)   → prepare_crime()
 - impute (crime.py:85-94, E5, declared-unused)              → prepare_crime()
-- label-encode columns (crime.py:108-120, E1/E2)            → StringIndexer
-  stack with ``stringOrderType="alphabetAsc"`` (sklearn LabelEncoder orders
-  classes lexicographically; Spark's default frequencyDesc would diverge)
+- label-encode columns (crime.py:108-120, E1/E2)            → one
+  multi-column StringIndexer (the four feature columns + Category, all
+  dictionaries in one fit pass) with ``stringOrderType="alphabetAsc"``
+  (sklearn LabelEncoder orders classes lexicographically; Spark's default
+  frequencyDesc would diverge)
 - rename X/Y → Longitude/Latitude (crime.py:122-124, P3)    → prepare_crime()
 - z-score lon/lat (crime.py:127-134, E6)                    → StandardScaler
   (withMean+withStd; MLlib uses the sample std, matching pandas ddof=1)
@@ -67,18 +69,10 @@ def build_crime_pipeline(
     num_trees: int = 40,
     max_depth: int = 10,
 ) -> Pipeline:
-    indexers = [
-        StringIndexer(
-            inputCol=c,
-            outputCol=f"{c}_code",
-            stringOrderType="alphabetAsc",
-            handleInvalid="keep",
-        )
-        for c in index_cols
-    ]
-    label = StringIndexer(
-        inputCol="Category",
-        outputCol="label",
+    # one multi-column indexer: all five dictionaries in one fit pass
+    indexer = StringIndexer(
+        inputCols=[*index_cols, "Category"],
+        outputCols=[*(f"{c}_code" for c in index_cols), "label"],
         stringOrderType="alphabetAsc",
         handleInvalid="keep",
     )
@@ -105,7 +99,7 @@ def build_crime_pipeline(
         maxDepth=max_depth,
         seed=seed,
     )
-    return Pipeline(stages=[*indexers, label, geo, scaler, km, decat, features, clf])
+    return Pipeline(stages=[indexer, geo, scaler, km, decat, features, clf])
 
 
 @dataclass
@@ -125,11 +119,8 @@ def decode_predictions(model: PipelineModel, scored: DataFrame) -> DataFrame:
     per action)."""
     from pyspark.ml.feature import StringIndexerModel
 
-    labels = next(
-        s.labels
-        for s in model.stages
-        if isinstance(s, StringIndexerModel) and s.getInputCol() == "Category"
-    )
+    indexer = next(s for s in model.stages if isinstance(s, StringIndexerModel))
+    labels = indexer.labelsArray[indexer.getInputCols().index("Category")]
     to_cat = F.element_at(
         F.array(*[F.lit(x) for x in labels]), F.col("prediction").cast("int") + 1
     )

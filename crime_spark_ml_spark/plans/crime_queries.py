@@ -333,7 +333,8 @@ def e1_label_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def e2_label_encode_multi(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Multi-column label-encode (crime.py:111-120: five train columns).
-    One broadcast dictionary join per column; no full-table window."""
+    Both string columns share one distributed ranking, then one broadcast
+    dictionary join per column; no full-table window."""
     o = load_table(spark, sf_dir, "orders")
     return label_encode(o, ["o_orderpriority", "o_orderstatus"]).select(
         "o_orderkey", "o_orderpriority_code", "o_orderstatus_code"

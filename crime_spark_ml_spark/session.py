@@ -17,6 +17,9 @@ import os
 
 from pyspark.sql import SparkSession
 
+# the directory holding the package: Python workers import it from here
+_PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 
 def default_parallelism() -> int:
     return int(os.environ.get("SPARK_GRAFT_CPUS", "4"))
@@ -32,6 +35,11 @@ def get_spark(
     cpus = cpus or default_parallelism()
     shuffle_partitions = shuffle_partitions or max(cpus, 4)
     driver_memory = driver_memory or os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g")
+    # the sys.path a launcher sets reaches only the driver; without this
+    # every mapInArrow/applyInArrow kernel fails to import the package
+    # when the driver starts outside the repo root
+    inherited = filter(None, os.environ.get("PYTHONPATH", "").split(os.pathsep))
+    worker_path = os.pathsep.join(dict.fromkeys([_PACKAGE_PARENT, *inherited]))
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)
@@ -44,6 +52,7 @@ def get_spark(
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.driver.memory", driver_memory)
         .config("spark.ui.enabled", "false")
+        .config("spark.executorEnv.PYTHONPATH", worker_path)
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

@@ -4,10 +4,15 @@ the synthetic crime fixture + encoder-fidelity checks."""
 from __future__ import annotations
 
 import pytest
+from pyspark.ml import PipelineModel
+from pyspark.ml.feature import StringIndexer
+from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from crime_spark_ml_spark.ml.pipeline import (
+    INDEX_COLS,
     build_crime_pipeline,
+    decode_predictions,
     prepare_crime,
     train_crime_model,
 )
@@ -56,17 +61,107 @@ def test_label_encode_bijection_and_order(crime_df):
     assert values == sorted(values)
 
 
+def _build_jobs(spark, group, build):
+    """Spark jobs ``build()`` launches, counted by job group."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        build()
+    finally:
+        for key in ("spark.jobGroup.id", "spark.job.description"):
+            sc.setLocalProperty(key, None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_label_encode_jobs_do_not_grow_with_columns(spark, crime_df):
+    """Same-dtype columns share one ranking: building the encoding for
+    four string columns launches no more jobs than for one."""
+    one = _build_jobs(spark, "encode-1", lambda: label_encode(crime_df, ["PdDistrict"]))
+    four = _build_jobs(
+        spark,
+        "encode-4",
+        lambda: label_encode(crime_df, ["DayOfWeek", "PdDistrict", "Address", "Category"]),
+    )
+    assert 0 < four <= one, (one, four)
+
+
+MIXED_ROWS = [
+    (0, "b", 3, 1.5),
+    (1, None, None, float("nan")),
+    (2, "a", 3, -0.0),
+    (3, "b", -7, 0.0),
+    (4, "", None, None),
+    (5, "c", 3, -2.25),
+    (6, None, 12, 1.5),
+]
+
+
+@pytest.mark.parametrize("broadcast", [True, False])
+def test_label_encode_matches_dense_rank(spark, broadcast):
+    """Codes equal a per-column ``DENSE_RANK() - 1`` over the non-NULL
+    values, NULL staying NULL, across string, int and double columns
+    (three dtype groups, so three rankings)."""
+    cols = ["s", "i", "d"]
+    df = spark.createDataFrame(MIXED_ROWS, "id int, s string, i int, d double")
+    got = label_encode(df, cols, broadcast=broadcast).select(
+        "id", *[f"{c}_code" for c in cols]
+    )
+    ref = df.select(
+        "id",
+        *[
+            F.when(
+                F.col(c).isNotNull(),
+                (F.dense_rank().over(Window.orderBy(F.col(c).asc_nulls_last())) - 1).cast("int"),
+            ).alias(f"{c}_code")
+            for c in cols
+        ],
+    )
+    assert sorted(got.collect()) == sorted(ref.collect())
+    assert got.schema == ref.schema
+
+
 def test_indexer_matches_sklearn_order(spark, crime_df):
     """StringIndexer(alphabetAsc) must agree with the dictionary-join
     encoder (both implement sklearn LabelEncoder semantics)."""
-    from pyspark.ml.feature import StringIndexer
-
     idx = StringIndexer(
         inputCol="PdDistrict", outputCol="ml_code", stringOrderType="alphabetAsc"
     ).fit(crime_df)
     ours = label_encode(crime_df, ["PdDistrict"])
     both = idx.transform(ours).select("PdDistrict_code", F.col("ml_code").cast("int"))
     assert both.where(F.col("PdDistrict_code") != F.col("ml_code")).count() == 0
+
+
+@pytest.fixture(scope="module")
+def crime_indexer(crime_df):
+    """The pipeline's one StringIndexer, fitted on the crime fixture."""
+    indexers = [
+        s for s in build_crime_pipeline().getStages() if isinstance(s, StringIndexer)
+    ]
+    assert len(indexers) == 1
+    return indexers[0].fit(prepare_crime(crime_df))
+
+
+def test_multi_column_indexer_matches_single_column_fits(crime_df, crime_indexer):
+    """The multi-column alphabetAsc fit yields, per column, the labels
+    of a separate single-column fit."""
+    prepared = prepare_crime(crime_df)
+    cols = [*INDEX_COLS, "Category"]
+    assert crime_indexer.getInputCols() == cols
+    singles = [
+        StringIndexer(
+            inputCol=c, outputCol="o", stringOrderType="alphabetAsc", handleInvalid="keep"
+        ).fit(prepared).labels
+        for c in cols
+    ]
+    assert [list(x) for x in crime_indexer.labelsArray] == [list(x) for x in singles]
+
+
+def test_decode_predictions_maps_codes_to_categories(spark, crime_indexer):
+    labels = crime_indexer.labelsArray[crime_indexer.getInputCols().index("Category")]
+    assert set(labels) <= set(CATEGORIES)
+    scored = spark.range(len(labels)).select(F.col("id").cast("double").alias("prediction"))
+    got = decode_predictions(PipelineModel(stages=[crime_indexer]), scored)
+    assert [r.Category for r in got.orderBy("Id").collect()] == list(labels)
 
 
 def test_zscore_mean_zero_std_one(crime_df):

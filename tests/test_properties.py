@@ -47,14 +47,31 @@ def test_fingerprint_permutation_invariant(spark, words, rnd):
 
 
 @prop
-@given(st.lists(st.sampled_from(["a", "b", "c", "d", "e"]), min_size=1, max_size=40))
-def test_label_encode_bijection(spark, values):
-    df = spark.createDataFrame([(i, v) for i, v in enumerate(values)], "id long, v string")
-    enc = label_encode(df, ["v"])
-    pairs = {(r.v, r.v_code) for r in enc.collect()}
-    distinct = sorted({v for v in values})
-    # codes are exactly 0..n-1 assigned in sorted order
-    assert pairs == {(v, i) for i, v in enumerate(distinct)}
+@given(
+    st.lists(
+        st.tuples(
+            st.sampled_from(["a", "b", "c", "d", "e"]),
+            st.sampled_from(["x", "y", "z", None]),
+            st.sampled_from(["", "a", "ab", "b"]),
+        ),
+        min_size=1,
+        max_size=40,
+    )
+)
+def test_label_encode_bijection(spark, rows):
+    cols = ["u", "v", "w"]
+    df = spark.createDataFrame(
+        [(i, *r) for i, r in enumerate(rows)], "id long, u string, v string, w string"
+    )
+    enc = label_encode(df, cols).collect()
+    for j, c in enumerate(cols):
+        pairs = {(r[c], r[f"{c}_code"]) for r in enc}
+        distinct = sorted({r[j] for r in rows} - {None})
+        # codes are exactly 0..n-1 assigned in sorted order; NULL stays NULL
+        want = {(v, i) for i, v in enumerate(distinct)}
+        if any(r[j] is None for r in rows):
+            want.add((None, None))
+        assert pairs == want, c
 
 
 def test_pivot_row_sums_equal_group_counts(spark, sf_dir):
