@@ -17,8 +17,10 @@ each partition ranks in parallel, and per-(partition, column) offsets
 come from a tiny driver-side prefix sum. One call therefore runs one
 ranking per dtype group, not one per column. Works for near-unique
 columns (the reference encodes even its timestamp column, crime.py:38-39)
-as well as small dictionaries. Codes then broadcast- or shuffle-join
-back per column depending on dictionary size.
+as well as small dictionaries. The ranking also yields each
+dictionary's exact size, so codes join back per column by broadcast
+when that size fits the session's broadcast threshold; a larger
+dictionary's join is left to the planner.
 """
 
 from __future__ import annotations
@@ -29,9 +31,12 @@ from pyspark.sql import functions as F
 from crime_spark_ml_spark.operators.rank import grouped_row_number
 
 
-def label_dictionaries(df: DataFrame, cols: list[str]) -> dict[str, DataFrame]:
-    """Per column of ``cols``: its distinct non-NULL values with dense
-    codes 0..n-1 in ascending order (``<col>``, ``<col>_code``).
+def label_dictionaries(
+    df: DataFrame, cols: list[str]
+) -> dict[str, tuple[DataFrame, int]]:
+    """Per column of ``cols``: its dictionary, the distinct non-NULL
+    values with dense codes 0..n-1 in ascending order (``<col>``,
+    ``<col>_code``), and its exact size n.
 
     Columns of one dtype share one distributed ranking; each column's
     dictionary is a filter of that one checkpointed frame."""
@@ -45,15 +50,16 @@ def label_dictionaries(df: DataFrame, cols: list[str]) -> dict[str, DataFrame]:
             .where(F.col("__v").isNotNull())
             .distinct()
         )
-        ranked = grouped_row_number(values, ["__c"], ["__v"])
+        ranked, sizes = grouped_row_number(values, ["__c"], ["__v"])
         for c in group:
-            dictionaries[c] = ranked.where(F.col("__c") == c).select(
+            dic = ranked.where(F.col("__c") == c).select(
                 F.col("__v").alias(c), (F.col("__g") - 1).cast("int").alias(f"{c}_code")
             )
+            dictionaries[c] = (dic, sizes.get((c,), 0))
     return dictionaries
 
 
-def label_encode(df: DataFrame, cols: list[str], broadcast: bool = True) -> DataFrame:
+def label_encode(df: DataFrame, cols: list[str]) -> DataFrame:
     """Append ``<col>_code`` for each requested column (E1/E2).
 
     Fit-on-this-frame semantics; for train/test flows fit the
@@ -61,16 +67,20 @@ def label_encode(df: DataFrame, cols: list[str], broadcast: bool = True) -> Data
     (the reference's independent re-fit on test, crime.py:117-120, is a
     leakage bug we do not replicate by default — SURVEY.md §2.4 E2).
 
-    ``broadcast=True`` hints the dictionary joins — right for the usual
-    low-cardinality categorical. Pass ``broadcast=False`` for
-    near-unique columns (timestamps, addresses): their dictionaries are
-    table-sized and must shuffle-join instead.
+    A dictionary joins back by broadcast when its exact size (rows ×
+    ``8 + schema.defaultSize``, the planner's own row width) fits
+    ``spark.sql.autoBroadcastJoinThreshold`` (never when that is -1):
+    the usual low-cardinality categorical broadcasts at any scale, and
+    only a really large dictionary of a near-unique column (timestamps,
+    addresses) is left to the planner, to shuffle-join.
     """
+    conf = df.sparkSession._jsparkSession.sessionState().conf()
+    threshold = conf.autoBroadcastJoinThreshold()
     dictionaries = label_dictionaries(df, cols)
     out = df
     for c in cols:
-        dic = dictionaries[c]
-        if broadcast:
+        dic, n = dictionaries[c]
+        if n * (8 + dic._jdf.schema().defaultSize()) <= threshold:
             dic = F.broadcast(dic)
         out = out.join(dic, on=c, how="left")
     return out

@@ -4,127 +4,146 @@ A bare ``row_number() OVER (ORDER BY ...)`` funnels the whole relation
 through one task; at 100 TB that is the canonical scale-killer. This
 module holds the shared range-partitioned alternative used by label
 encoding (SURVEY.md §2.4 E1, reference crime.py:38-39), WoE binning,
-Gini ranking, and the group-sequential look assignment:
+Gini ranking, and the group-sequential look assignment. Row numbers
+and running sums are one mechanism (a row number is the running sum of
+``lit(1)``):
 
-    repartitionByRange on the total order (ascending key ranges land in
-    ascending partition ids) -> row_number within each partition in
-    parallel -> driver-side prefix sum of the <=#partitions partition
-    sizes -> broadcast the offsets back, built as a JVM LocalRelation
-    (``sources.readers.local_frame``) so the join's build side never
-    starts a Python worker.
+    repartitionByRange on (group, order) (ascending key ranges land in
+    ascending partition ids) -> running sums within each (partition,
+    group) in parallel -> localCheckpoint -> collect the per-(partition,
+    group) totals -> driver-side prefix sum per group -> add each row's
+    offset as a literal expression, ``CASE WHEN <group> <=> key THEN
+    element_at(<offsets by partition>, __pid + 1)``.
 
-The only collect is #partitions ints, so the pattern survives any
-corpus size; the order columns must form a deterministic TOTAL order
-(include a unique tie-break key), which every caller needs anyway for
-engine-parity determinism.
+The offsets never become a table, so the output plan is the checkpoint
+scan plus a projection: no join, and the planner's size estimate of the
+result stays that of the ranked rows. The only collect is
+#partitions × #groups totals, so the pattern survives any corpus size
+as long as the groups are FEW; the order columns must form a
+deterministic TOTAL order (include a unique tie-break key), which every
+caller needs anyway for engine-parity determinism.
 """
 
 from __future__ import annotations
 
 import functools
+import itertools
 import operator
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..sources.readers import local_frame
 
-
-def _offset_join(
-    ranked: DataFrame, offset_df: DataFrame, group_cols: list[str]
+def _pid_cumsums(
+    df: DataFrame,
+    group_cols: list[str],
+    order_cols: list,
+    sums: dict[str, Column | str],
 ) -> DataFrame:
-    """Broadcast-join per-(partition, group) offsets back NULL-safely.
-
-    A plain name-list equi-join is null-rejecting, so a NULL group key
-    would silently DROP its rows — window ``partitionBy`` semantics
-    (which these helpers advertise replacing) treat NULL as its own
-    partition instead. eqNullSafe on every group column keeps them.
-    """
-    off = offset_df
-    renames = {c: f"__k_{c}" for c in ["__pid", *group_cols]}
-    for c, r in renames.items():
-        off = off.withColumnRenamed(c, r)
-    cond = functools.reduce(
-        operator.and_,
-        [ranked[c].eqNullSafe(off[r]) for c, r in renames.items()],
-    )
-    return ranked.join(F.broadcast(off), cond).drop(*renames.values())
-
-
-def _sum_result_type(input_type: str) -> str:
-    """The Spark SQL type ``F.sum`` yields for a column of ``input_type``
-    — the offset columns must carry the SAME type or the broadcast
-    offsets would truncate (a double total stored as long shifts every
-    later partition's running sum)."""
-    t = input_type.lower()
-    if t in ("tinyint", "smallint", "int", "bigint", "long"):
-        return "bigint"
-    if t in ("float", "double"):
-        return "double"
-    if t.startswith("decimal"):
-        # sum over decimal(p,s) widens precision; 38 is the ceiling
-        scale = t.rstrip(")").split(",")[1] if "," in t else "0"
-        return f"decimal(38,{scale})"
-    raise ValueError(f"unsupported running-sum input type: {input_type}")
-
-
-def _pid_ranked(df: DataFrame, order_cols: list, group_cols: list = ()) -> DataFrame:
-    """The LAZY per-partition ranked frame both row-number helpers
-    checkpoint: range-partition on (group, order), then row_number
-    within each (partition, group) in parallel. Exposed separately so
-    tests can lint the pre-checkpoint plan (after ``localCheckpoint``
-    the Window node no longer appears in the returned frame's plan)."""
-    gcols = [F.col(c) if isinstance(c, str) else c for c in group_cols]
+    """The LAZY frame :func:`_prefix_offsets` checkpoints: range-partition
+    on (group, order), tag ``__pid``, then the running sum of each
+    ``sums`` value (``{out: value column}``) within each (partition,
+    group). Separate so tests can lint the pre-checkpoint plan (after
+    ``localCheckpoint`` the Window node no longer appears)."""
+    gcols = [F.col(c) for c in group_cols]
     ocols = [F.col(c) if isinstance(c, str) else c for c in order_cols]
     ranged = df.repartitionByRange(*gcols, *ocols).withColumn(
         "__pid", F.spark_partition_id()
     )
-    w = Window.partitionBy("__pid", *gcols).orderBy(*ocols)
-    return ranged.withColumn("__r", F.row_number().over(w))
+    w = (
+        Window.partitionBy("__pid", *gcols)
+        .orderBy(*ocols)
+        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    )
+    return ranged.withColumns({o: F.sum(v).over(w) for o, v in sums.items()})
+
+
+def _prefix_offsets(
+    df: DataFrame,
+    group_cols: list[str],
+    order_cols: list,
+    sums: dict[str, Column | str],
+) -> tuple[DataFrame, dict[tuple, list]]:
+    """Exact running totals of each ``sums`` value (``{out: value
+    column}``) over ``order_cols`` within each group, and the per-group
+    grand totals (``{group key tuple: [total per out]}``)."""
+    # localCheckpoint: the frame is consumed TWICE (totals collect, then
+    # the caller's action) and shuffle outputs are not reused across
+    # separate query executions — without materialization every call
+    # re-runs the input lineage end-to-end, and a caller chaining k
+    # rankings (j_rfm_segmentation) would recompute its rollup k+1
+    # times. Checkpoint, NOT persist(): persist pins the plan in the
+    # session CacheManager until an explicit unpersist (which a helper
+    # returning a lazy frame cannot issue), so a long-lived session
+    # running many registry queries accumulates pinned corpus-sized
+    # caches; checkpointed blocks are instead freed by the
+    # ContextCleaner once the caller drops the returned frame.
+    # Trade-off (same as dedup.py's CC loop): blocks are not
+    # fault-tolerant to executor loss — a lost executor fails the job,
+    # which re-runs deterministically.
+    cum = _pid_cumsums(df, group_cols, order_cols, sums).localCheckpoint(eager=True)
+    totals = (
+        cum.groupBy("__pid", *group_cols)
+        .agg(*[F.sum(v) for v in sums.values()])
+        .collect()
+    )
+    n_pids = 1 + max((r[0] for r in totals), default=-1)
+    ng = len(group_cols)
+    # per group, per partition: its totals. A partition the group does
+    # not reach adds 0, and so does a NULL total
+    by_group: dict[tuple, dict[int, list]] = {}
+    for r in totals:
+        by_group.setdefault(tuple(r[1 : 1 + ng]), {})[r[0]] = [t or 0 for t in r[1 + ng :]]
+    # per group, per output: the running offset of each partition (the
+    # totals of the partitions before it), ending in the group's grand
+    # total. Starting at int 0 keeps 0 + Decimal / 0 + float exact
+    zeros = [0] * len(sums)
+    offsets = {
+        key: [
+            list(itertools.accumulate((parts.get(p, zeros)[i] for p in range(n_pids)), initial=0))
+            for i in range(len(sums))
+        ]
+        for key, parts in by_group.items()
+    }
+    dtypes = dict(cum.dtypes)
+    # NULL-safe (<=>): window partitionBy semantics, which these helpers
+    # replace, give a NULL group key its own partition
+    matches = {
+        key: functools.reduce(
+            operator.and_,
+            [F.col(c).eqNullSafe(F.lit(k).cast(dtypes[c])) for c, k in zip(group_cols, key)],
+            F.lit(True),
+        )
+        for key in offsets
+    }
+    added = {}
+    for i, out in enumerate(sums):
+        # offsets carry the running sum's type (a long offset under a
+        # double sum would truncate every later partition's total),
+        # decimals at the top precision 38, which the output then keeps
+        t = dtypes[out]
+        if t.startswith("decimal"):
+            t = f"decimal(38,{t.split(',')[1]}"
+        offset = F.lit(None)
+        for key, match in matches.items():
+            by_pid = F.lit(offsets[key][i]).cast(f"array<{t}>")
+            offset = F.when(match, F.element_at(by_pid, F.col("__pid") + 1)).otherwise(offset)
+        added[out] = F.col(out) + offset
+    grand = {key: [offs[-1] for offs in per_out] for key, per_out in offsets.items()}
+    return cum.withColumns(added).drop("__pid"), grand
 
 
 def global_row_number(
     df: DataFrame, order_cols: list, out_col: str = "__g"
 ) -> tuple[DataFrame, int]:
-    """Append an exact 1-based global row number over ``order_cols``.
+    """Append an exact 1-based global row number (``bigint``) over
+    ``order_cols``.
 
     Returns ``(df + out_col, n_rows)`` — the total count falls out of
-    the prefix sum for free, saving callers a second pass. Internal
-    ``__pid``/``__r``/``__off`` columns are dropped from the result.
+    the prefix sum for free, saving callers a second pass.
     """
-    # localCheckpoint: the ranked frame is consumed TWICE (sizes
-    # collect, then the offset join the caller's action evaluates) and
-    # shuffle outputs are not reused across separate query executions —
-    # without materialization every call re-runs the input lineage
-    # end-to-end, and a caller chaining k rankings (j_rfm_segmentation)
-    # would recompute its rollup k+1 times. Checkpoint, NOT persist():
-    # persist pins the plan in the session CacheManager until an
-    # explicit unpersist (which a helper returning a lazy frame cannot
-    # issue), so a long-lived session running many registry queries
-    # accumulates pinned corpus-sized caches; checkpointed blocks are
-    # instead freed by the ContextCleaner once the caller drops the
-    # returned frame. Trade-off (same as dedup.py's CC loop): blocks
-    # are not fault-tolerant to executor loss — a lost executor fails
-    # the job, which re-runs deterministically.
-    ranked = _pid_ranked(df, order_cols).localCheckpoint(eager=True)
-    # per-partition sizes → prefix-sum offsets (≤ #partitions rows on the driver)
-    sizes = sorted(
-        (r["__pid"], r["n"])
-        for r in ranked.groupBy("__pid").agg(F.count("*").alias("n")).collect()
-    )
-    offsets, acc = {}, 0
-    for pid, cnt in sizes:
-        offsets[pid] = acc
-        acc += cnt
-    offset_df = local_frame(
-        df.sparkSession, offsets.items(), "__pid int, __off long"
-    )
-    out = (
-        ranked.join(F.broadcast(offset_df), "__pid")
-        .withColumn(out_col, F.col("__off") + F.col("__r"))
-        .drop("__pid", "__r", "__off")
-    )
-    return out, acc
+    out, grand = _prefix_offsets(df, [], order_cols, {out_col: F.lit(1)})
+    return out, grand.get((), [0])[0]
 
 
 def ntile_sql(rank: str, n: int | str, k: int) -> str:
@@ -155,63 +174,19 @@ def grouped_row_number(
     group_cols: list[str],
     order_cols: list,
     out_col: str = "__g",
-) -> DataFrame:
-    """Exact 1-based row number over ``order_cols`` WITHIN each group —
-    the grouped twin of :func:`global_row_number`, for when the groups
-    themselves are data-sized (a plain ``partitionBy(group)`` window
-    would funnel each whole group through one task).
+) -> tuple[DataFrame, dict[tuple, int]]:
+    """Exact 1-based row number (``bigint``) over ``order_cols`` WITHIN
+    each group — the grouped twin of :func:`global_row_number`, for when
+    the groups themselves are data-sized (a plain ``partitionBy(group)``
+    window would funnel each whole group through one task).
 
-    Range-partition on (group, order) so each partition holds
-    contiguous runs; row_number within (partition, group) in parallel;
-    collect the per-(partition, group) sizes (≤ #partitions × #groups
-    rows — callers should have FEW groups, e.g. a model/arm column)
-    and broadcast per-group prefix offsets back.
+    Returns ``(df + out_col, sizes)``: ``sizes`` maps each group key
+    (a tuple of the ``group_cols`` values) to its exact row count.
+    Callers should have FEW groups (e.g. a model/arm column): the
+    offsets are one literal branch per group.
     """
-    # checkpoint: double consumption, same rationale as global_row_number
-    ranked = _pid_ranked(df, order_cols, group_cols).localCheckpoint(eager=True)
-    sizes = (
-        ranked.groupBy("__pid", *group_cols)
-        .agg(F.count("*").alias("n"))
-        .collect()
-    )
-    acc: dict[tuple, int] = {}
-    rows = []
-    for r in sorted(sizes, key=lambda r: (tuple(str(r[c]) for c in group_cols), r["__pid"])):
-        key = tuple(r[c] for c in group_cols)
-        rows.append((r["__pid"], *key, acc.get(key, 0)))
-        acc[key] = acc.get(key, 0) + r["n"]
-    schema_groups = ", ".join(
-        f"{c} {dict(df.dtypes)[c]}" for c in group_cols
-    )
-    offset_df = local_frame(
-        df.sparkSession, rows, f"__pid int, {schema_groups}, __off long"
-    )
-    return (
-        _offset_join(ranked, offset_df, group_cols)
-        .withColumn(out_col, F.col("__off") + F.col("__r"))
-        .drop("__pid", "__r", "__off")
-    )
-
-
-def _pid_cumsums(
-    df: DataFrame, group_cols: list[str], order_cols: list, sums: dict[str, str]
-) -> DataFrame:
-    """The LAZY per-partition cumulative-sum frame ``grouped_prefix_sums``
-    checkpoints — exposed for plan-lint tests like :func:`_pid_ranked`."""
-    gcols = [F.col(c) for c in group_cols]
-    ocols = [F.col(c) if isinstance(c, str) else c for c in order_cols]
-    ranged = df.repartitionByRange(*gcols, *ocols).withColumn(
-        "__pid", F.spark_partition_id()
-    )
-    w = (
-        Window.partitionBy("__pid", *gcols)
-        .orderBy(*ocols)
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    cum = ranged
-    for vcol, out in sums.items():
-        cum = cum.withColumn(out, F.sum(vcol).over(w))
-    return cum
+    out, grand = _prefix_offsets(df, group_cols, order_cols, {out_col: F.lit(1)})
+    return out, {key: totals[0] for key, totals in grand.items()}
 
 
 def grouped_prefix_sums(
@@ -226,11 +201,8 @@ def grouped_prefix_sums(
     (SPRT log-likelihood paths, CUSUM) whose groups are data-sized.
 
     ``sums`` maps value column -> output running-total column (pass a
-    literal-1 column for a running count). Same machinery: range-
-    partition on (group, order), cumulative sums within each
-    (partition, group) in parallel, collect the per-(partition, group)
-    TOTALS (≤ #partitions × #groups tiny rows), prefix them per group
-    on the driver, broadcast the offsets back.
+    literal-1 column for a running count); each output carries the
+    type ``F.sum`` gives its value column, a decimal at precision 38.
 
     Exactness contract: bit-identical to a ``partitionBy(group)``
     cumulative window for INTEGER and DECIMAL value columns (the
@@ -240,38 +212,7 @@ def grouped_prefix_sums(
     needing hash-parity on a floating column must rescale to
     integer/decimal first (every current caller is integer-valued).
     """
-    # checkpoint: double consumption, same rationale as global_row_number
-    cum = _pid_cumsums(df, group_cols, order_cols, sums).localCheckpoint(
-        eager=True
+    out, _ = _prefix_offsets(
+        df, group_cols, order_cols, {o: v for v, o in sums.items()}
     )
-    totals = (
-        cum.groupBy("__pid", *group_cols)
-        .agg(*[F.sum(v).alias(f"__t_{o}") for v, o in sums.items()])
-        .collect()
-    )
-    dtypes = dict(df.dtypes)
-    outs = list(sums.values())
-    # offsets start at int 0: 0 + Decimal / 0 + float stay exact, and
-    # local_frame's Arrow build takes a plain 0 into double/decimal fields
-    acc: dict[tuple, list] = {}
-    rows = []
-    for r in sorted(
-        totals, key=lambda r: (tuple(str(r[c]) for c in group_cols), r["__pid"])
-    ):
-        key = tuple(r[c] for c in group_cols)
-        offs = acc.get(key, [0] * len(outs))
-        rows.append((r["__pid"], *key, *offs))
-        acc[key] = [o + (r[f"__t_{out}"] or 0) for o, out in zip(offs, outs)]
-    schema_groups = ", ".join(f"{c} {dtypes[c]}" for c in group_cols)
-    schema_offs = ", ".join(
-        f"__off_{o} {_sum_result_type(dtypes[v])}" for v, o in sums.items()
-    )
-    offset_df = local_frame(
-        df.sparkSession, rows, f"__pid int, {schema_groups}, {schema_offs}"
-    )
-    out_df = _offset_join(cum, offset_df, group_cols)
-    for o in outs:
-        out_df = out_df.withColumn(o, F.col(o) + F.col(f"__off_{o}")).drop(
-            f"__off_{o}"
-        )
-    return out_df.drop("__pid")
+    return out

@@ -470,6 +470,10 @@ def embedding_near_dups(
         n_np = ncol.to_numpy(zero_copy_only=False)
         n_null = np.asarray(ncol.is_null())
         iu, ju = np.triu_indices(m, k=1)
+        # an id repeated in a bucket never pairs with itself (the
+        # strict id_a < id_b of the pair contract)
+        distinct = ids_np[iu] != ids_np[ju]
+        iu, ju = iu[distinct], ju[distinct]
         # dot defined only when both sides sit in the same length group
         # (zip_with pads a length mismatch with NULLs → NULL fold)
         dots = np.zeros(len(iu), dtype=np.float64)

@@ -6114,8 +6114,9 @@ def dp_woe_binning(spark: SparkSession, sf_dir: str) -> DataFrame:
     partition. Instead the e1_label_encode technique: repartitionByRange
     on the deterministic total order (o_totalprice, o_orderkey) →
     per-partition row_number in parallel → driver-side prefix-sum of
-    the ≤#partitions partition sizes → broadcast offsets back. The
-    only collect is #partitions ints; bin = (global_rank*10) div n is
+    the ≤#partitions partition sizes → offsets added as a literal
+    expression (operators/rank.global_row_number). The only collect
+    is #partitions ints; bin = (global_rank*10) div n is
     integer arithmetic, identical in both engines. WoE/IV floats are
     written with the exact same op order and explicit DOUBLE casts on
     both sides (bit-exact under IEEE), then rounded to 6."""

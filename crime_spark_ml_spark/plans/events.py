@@ -5466,8 +5466,8 @@ def ev_uplift_qini(spark: SparkSession, sf_dir: str) -> DataFrame:
     partitionBy(model) window has only 2 values and would funnel half
     the corpus through each of two tasks) -> ntile closed form ->
     20-cell aggregate -> decile-sized windows and folds. The
-    per-model counts come off the helper's cached ranked frame, not a
-    second corpus pass."""
+    per-model counts come with the helper's ranking, not a second
+    corpus pass."""
     ev = load_table(spark, sf_dir, "events")
     users = ev.select("user_id").distinct()
     hashes = {
@@ -5514,17 +5514,18 @@ def ev_uplift_qini(spark: SparkSession, sf_dir: str) -> DataFrame:
     # per-model rank from the grouped distributed prefix-sum helper
     # (operators/rank.py), then ntile's closed form (first n%10 tiles
     # hold ceil(n/10) rows) — bit-identical to the oracle's window.
-    g = grouped_row_number(
+    g, sizes = grouped_row_number(
         both_m,
         ["model"],
         [F.col("score").desc(), F.col("user_id")],
         out_col="grn",
     )
-    # per-model sizes from the helper's persisted ranked frame — a
-    # groupBy on both_m here would re-run the whole distinct+union
-    # lineage as a second corpus pass
-    nmod = g.groupBy("model").agg(F.count("*").alias("nm"))
-    ranked = g.join(F.broadcast(nmod), "model").select(
+    # per-model sizes come with the ranking — a groupBy on both_m here
+    # would re-run the whole distinct+union lineage as a second pass
+    nm = F.lit(None)
+    for (model,), n in sizes.items():
+        nm = F.when(F.col("model") == model, n).otherwise(nm)
+    ranked = g.withColumn("nm", nm).select(
         "model", "treated", "conv",
         F.expr(ntile_sql("grn", "nm", 10)).alias("decile"),
     )

@@ -68,7 +68,7 @@ def read_crime_test_csv(spark: SparkSession, path: str) -> DataFrame:
 def local_frame(
     spark: SparkSession, rows: Iterable[Sequence], schema: str | T.StructType
 ) -> DataFrame:
-    """A driver-built table (offsets, model tables, probe LUTs) as a JVM
+    """A driver-built table (model tables, probe LUTs, small results) as a JVM
     ``LocalRelation``.
 
     ``spark.createDataFrame(<list>, schema)`` is a ``parallelize``

@@ -70,8 +70,7 @@ def run_crime_workload(
 
     # corr over label-encoded columns (E1 → A6), top-8 vs target (A7)
     str_cols = [c for c, t in train.dtypes if t == "string"]
-    # broadcast=False: Dates/Address dictionaries are near-table-sized
-    encoded = label_encode(train.na.fill("none", subset=str_cols), str_cols, broadcast=False)
+    encoded = label_encode(train.na.fill("none", subset=str_cols), str_cols)
     num_cols = [f"{c}_code" for c in str_cols] + [
         c for c, t in train.dtypes if t == "double"
     ]

@@ -670,6 +670,19 @@ def test_near_dups_group_kernel_matches_legacy_join(spark):
         assert len(new) > 0
 
 
+def test_near_dups_repeated_id_never_pairs_with_itself(spark):
+    """An id that appears twice in one bucket (two rows, near-identical
+    embeddings) yields no (id, id) pair, as the strict ``a.id < b.id``
+    of the former self-join: only the pairs of distinct ids remain."""
+    from crime_spark_ml_spark.operators.similarity import embedding_near_dups
+
+    v = [1.0, 0.5, -0.25, 2.0, 0.75, -1.0, 0.125, 1.5]
+    rows = [(7, v), (7, [x * 1.001 for x in v]), (9, [x * 1.002 for x in v])]
+    corpus = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+    got = {(r.id_a, r.id_b) for r in embedding_near_dups(corpus, 0.9).collect()}
+    assert got == {(7, 9)}
+
+
 def test_minhash_arrow_kernel_matches_expressions(spark, sf_dir):
     """r10 pin: _minhash_arrow_frame (one mapInArrow pass, zero
     exchanges) is bit-identical to the explode → groupBy(min(

@@ -111,31 +111,6 @@ def test_local_frame_equals_list_built_frame(vanilla_report, case):
     assert "LogicalRDD" not in got["frame_plan"]
 
 
-def test_rank_offsets_build_as_local_relation(spark):
-    """The offset join's build side is a LocalTableScan; the only
-    ExistingRDD scan left is the ranked frame's localCheckpoint."""
-    from pyspark.sql import functions as F
-
-    from crime_spark_ml_spark.operators.rank import (
-        global_row_number,
-        grouped_prefix_sums,
-        grouped_row_number,
-    )
-
-    df = spark.range(200).select(
-        F.col("id"), (F.col("id") % 3).cast("string").alias("g")
-    )
-    outs = {
-        "global_row_number": global_row_number(df, ["id"])[0],
-        "grouped_row_number": grouped_row_number(df, ["g"], ["id"]),
-        "grouped_prefix_sums": grouped_prefix_sums(df, ["g"], ["id"], {"id": "cum"}),
-    }
-    for name, out in outs.items():
-        plan = out._jdf.queryExecution().executedPlan().toString()
-        existing, local = plan.count("Scan ExistingRDD"), plan.count("LocalTableScan")
-        assert existing == 1 and local >= 1, (name, existing, local)
-
-
 # Modules whose driver-built tables must go through local_frame. plans/
 # is not covered yet: its result tables are still list-built.
 LINTED = ["operators", "ml", "functions", "sources", "streaming", "workload.py", "session.py"]

@@ -3,6 +3,8 @@ the synthetic crime fixture + encoder-fidelity checks."""
 
 from __future__ import annotations
 
+import re
+
 import pytest
 from pyspark.ml import PipelineModel
 from pyspark.ml.feature import StringIndexer
@@ -96,16 +98,36 @@ MIXED_ROWS = [
 ]
 
 
-@pytest.mark.parametrize("broadcast", [True, False])
-def test_label_encode_matches_dense_rank(spark, broadcast):
+def _join_strategies(df) -> list[str]:
+    """The join node of each join in ``df``'s physical plan before AQE."""
+    plan = df._jdf.queryExecution().sparkPlan().toString()
+    return re.findall(r"(BroadcastHashJoin|SortMergeJoin|ShuffledHashJoin)", plan)
+
+
+@pytest.mark.parametrize(
+    "threshold, broadcast",
+    [(None, True), ("1", False), ("-1", False)],
+    ids=["small", "large", "off"],
+)
+def test_label_encode_matches_dense_rank(spark, threshold, broadcast):
     """Codes equal a per-column ``DENSE_RANK() - 1`` over the non-NULL
     values, NULL staying NULL, across string, int and double columns
-    (three dtype groups, so three rankings)."""
+    (three dtype groups, so three rankings). A dictionary joins back by
+    broadcast when it is small for the session's broadcast threshold,
+    and by shuffle when it is large for it (a 1-byte threshold) or the
+    threshold is off (-1)."""
     cols = ["s", "i", "d"]
     df = spark.createDataFrame(MIXED_ROWS, "id int, s string, i int, d double")
-    got = label_encode(df, cols, broadcast=broadcast).select(
-        "id", *[f"{c}_code" for c in cols]
-    )
+    saved = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    if threshold is not None:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", threshold)
+    try:
+        enc = label_encode(df, cols)
+        joins = _join_strategies(enc)
+    finally:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", saved)
+    assert joins == ["BroadcastHashJoin" if broadcast else "SortMergeJoin"] * len(cols)
+    got = enc.select("id", *[f"{c}_code" for c in cols])
     ref = df.select(
         "id",
         *[
@@ -118,6 +140,17 @@ def test_label_encode_matches_dense_rank(spark, broadcast):
     )
     assert sorted(got.collect()) == sorted(ref.collect())
     assert got.schema == ref.schema
+
+
+def test_crime_dictionaries_join_back_by_broadcast(spark):
+    """The workload's call: every string column of the 16k-row crime
+    table, near-unique Dates and Address included, has a dictionary
+    whose exact size fits the default broadcast threshold, so each
+    join-back plans as a broadcast hash join before AQE."""
+    train = crime_table(spark, n_rows=16000)
+    str_cols = [c for c, t in train.dtypes if t == "string"]
+    enc = label_encode(train.na.fill("none", subset=str_cols), str_cols)
+    assert _join_strategies(enc) == ["BroadcastHashJoin"] * len(str_cols)
 
 
 def test_indexer_matches_sklearn_order(spark, crime_df):

@@ -54,13 +54,14 @@ def test_global_row_number_desc_expression(spark):
 
 def test_grouped_row_number_matches_window(spark):
     df = _scrambled(spark)
-    got = grouped_row_number(df, ["g"], ["v", "id"], out_col="r")
+    got, sizes = grouped_row_number(df, ["g"], ["v", "id"], out_col="r")
     truth = df.withColumn(
         "r", F.row_number().over(Window.partitionBy("g").orderBy("v", "id"))
     )
     assert sorted((r.id, r.r) for r in got.collect()) == sorted(
         (r.id, r.r) for r in truth.collect()
     )
+    assert sizes == {(r.g,): r.n for r in df.groupBy("g").agg(F.count("*").alias("n")).collect()}
 
 
 def test_grouped_prefix_sums_matches_window(spark):
@@ -83,39 +84,81 @@ def test_grouped_prefix_sums_matches_window(spark):
 
 def test_no_single_partition_window_in_helper_plans(spark):
     """The helpers must never themselves emit the node they exist to
-    avoid. Linted on the LAZY pre-checkpoint builders — after
+    avoid. Linted on the LAZY pre-checkpoint builder — after
     ``localCheckpoint`` the returned frame's plan is an ExistingRDD
     scan with no Window node at all, so linting the public helpers'
     output would pass vacuously."""
     import sys, os
 
     sys.path.insert(0, os.path.join(os.path.dirname(__file__)))
-    from crime_spark_ml_spark.operators.rank import _pid_cumsums, _pid_ranked
+    from crime_spark_ml_spark.operators.rank import _pid_cumsums
     from test_plan_linter import unpartitioned_unbounded_windows
 
     df = _scrambled(spark, 100)
     for lazy in (
-        _pid_ranked(df, ["v", "id"]),
-        _pid_ranked(df, ["v", "id"], ["g"]),
-        _pid_cumsums(df.withColumn("one", F.lit(1)), ["g"], ["v", "id"], {"one": "rn"}),
+        _pid_cumsums(df, [], ["v", "id"], {"r": F.lit(1)}),
+        _pid_cumsums(df, ["g"], ["v", "id"], {"rn": F.lit(1), "sx": "x"}),
     ):
         plan = lazy._jdf.queryExecution().executedPlan().toString()
         assert "Window" in plan  # the lint below must have a subject
         assert not unpartitioned_unbounded_windows(plan)
 
 
+def test_helper_plans_have_no_join(spark):
+    """Offsets are a literal expression on the checkpointed frame: each
+    helper's executed plan scans that checkpoint once, joins nothing
+    and starts no Python worker."""
+    df = _scrambled(spark, 200)
+    outs = {
+        "global_row_number": global_row_number(df, ["v", "id"])[0],
+        "grouped_row_number": grouped_row_number(df, ["g"], ["v", "id"])[0],
+        "grouped_prefix_sums": grouped_prefix_sums(df, ["g"], ["v", "id"], {"x": "cum"}),
+    }
+    for name, out in outs.items():
+        plan = out._jdf.queryExecution().executedPlan().toString()
+        assert plan.count("Scan ExistingRDD") == 1, (name, plan)
+        assert "Join" not in plan and "Python" not in plan, (name, plan)
+
+
+def test_helper_output_dtypes(spark):
+    """Row numbers are bigint; a running sum carries ``F.sum``'s type
+    of its input (bigint, double, decimal(38,s))."""
+    df = _scrambled(spark, 200).select(
+        "id", "v", "g",
+        F.col("x").cast("int").alias("xi"),
+        F.col("x").cast("double").alias("xd"),
+        F.col("x").cast("decimal(12,2)").alias("xm"),
+    )
+    assert dict(global_row_number(df, ["v", "id"], out_col="r")[0].dtypes)["r"] == "bigint"
+    assert dict(grouped_row_number(df, ["g"], ["v", "id"], out_col="r")[0].dtypes)["r"] == "bigint"
+    sums = grouped_prefix_sums(df, ["g"], ["v", "id"], {"xi": "si", "xd": "sd", "xm": "sm"})
+    assert [t for c, t in sums.dtypes] == [
+        "bigint", "bigint", "string", "int", "double", "decimal(12,2)",
+        "bigint", "double", "decimal(38,2)",
+    ]
+
+
+def test_helpers_on_empty_input(spark):
+    df = _scrambled(spark, 10).where(F.lit(False))
+    got, n = global_row_number(df, ["v", "id"])
+    assert n == 0 and got.count() == 0
+    got, sizes = grouped_row_number(df, ["g"], ["v", "id"])
+    assert sizes == {} and got.count() == 0
+    assert grouped_prefix_sums(df, ["g"], ["v", "id"], {"x": "sx"}).count() == 0
+
+
 def test_grouped_helpers_keep_null_group_rows(spark):
     """NULL group keys form their own partition under window
-    semantics — the offset join must be null-safe, not null-rejecting
-    (a plain name equi-join silently DROPS every NULL-group row)."""
+    semantics — the offset match must be null-safe (<=>): a plain
+    equality matches no NULL-group row, whose number would be NULL."""
     df = _scrambled(spark, 300).withColumn(
         "g", F.when(F.col("id") % 4 == 0, None).otherwise(F.col("g"))
     )
-    got = grouped_row_number(df, ["g"], ["v", "id"], out_col="r")
+    got, sizes = grouped_row_number(df, ["g"], ["v", "id"], out_col="r")
     truth = df.withColumn(
         "r", F.row_number().over(Window.partitionBy("g").orderBy("v", "id"))
     )
-    assert got.count() == 300
+    assert got.count() == 300 and sizes[(None,)] == 75
     assert sorted((r.id, r.r) for r in got.collect()) == sorted(
         (r.id, r.r) for r in truth.collect()
     )
@@ -136,8 +179,8 @@ def test_grouped_helpers_keep_null_group_rows(spark):
 
 
 def test_grouped_prefix_sums_double_values(spark):
-    """Running totals over a DOUBLE column: the broadcast offsets must
-    carry the sum's type — a long-typed offset would truncate the
+    """Running totals over a DOUBLE column: the offsets must carry the
+    sum's type — a long-typed offset would truncate the
     fractional part and shift every later partition's cumulative sum."""
     df = _scrambled(spark, 400).withColumn(
         "dx", F.col("x").cast("double") + F.lit(0.25)
@@ -157,7 +200,7 @@ def test_grouped_prefix_sums_double_values(spark):
 
 def test_grouped_prefix_sums_decimal_values(spark):
     """DECIMAL running totals are exact: offsets start from a plain 0
-    and must land in the decimal(38,s) offset column unrounded."""
+    and must land in the decimal(38,s) offset array unrounded."""
     df = _scrambled(spark, 400).withColumn(
         "dx", (F.col("x").cast("double") + F.lit(0.25)).cast("decimal(12,2)")
     )
