@@ -162,80 +162,3 @@ def load_ivf(spark, path: str) -> IvfIndex:
     )
     return IvfIndex(centroids=centroids, assigned=assigned)
 
-
-def two_level_assign_expr(
-    centroid_rows: list[tuple[int, list[float]]],
-    vec_col: str = "vec",
-    seed: int = 0,
-):
-    """Hierarchical (two-level) cell assignment — the encode-cost fix
-    for LARGE k_cells. Flat assignment evaluates O(k) literal-vector
-    distances per row; with cell splitting growing k into the
-    thousands (split_oversized_cells), that linear factor starts to
-    dominate the encode. This groups the k centroids driver-side into
-    g ≈ √k super-cells (a tiny k×dim k-means — the model of a model),
-    then assigns each row in two hops: argmin over g super-centroids,
-    then argmin over ONLY that group's member cells — O(√k + k/g) ≈
-    O(√k) distance folds per row, same narrow-map zero-shuffle shape.
-
-    APPROXIMATE by construction: a vector near a super-cell boundary
-    can route to a group that doesn't contain its true nearest cell
-    (the standard hierarchical-IVF recall tradeoff; probes compensate
-    with nprobe). tests/test_ivfpq.py pins the agreement floor against
-    flat argmin on the planted fixture.
-
-    Returns a Column: the chosen cell id (int).
-    """
-    import numpy as np
-
-    from .pq import _lloyd, _sq_l2_lit, argmin_cid_expr
-
-    k = len(centroid_rows)
-    if k < 4:
-        raise ValueError(f"two-level assignment needs k >= 4 cells, got {k}")
-    g = max(2, int(round(k ** 0.5)))
-    C = np.asarray(
-        [cv for _, cv in sorted(centroid_rows)], dtype=np.float64
-    )
-    cids = [int(c) for c, _ in sorted(centroid_rows)]
-    G = _lloyd(C, g, seed)
-    # driver-side membership: each cell joins its nearest super-centroid
-    d2 = ((C[:, None, :] - G[None, :, :]) ** 2).sum(axis=2)
-    owner = d2.argmin(axis=1)
-    members: dict[int, list[int]] = {}
-    for idx, grp in enumerate(owner):
-        members.setdefault(int(grp), []).append(idx)
-
-    def argmin_cells(idxs: list[int]):
-        return argmin_cid_expr([(cids[i], C[i]) for i in idxs], vec_col)
-
-    super_best = F.array_min(
-        F.array(
-            *[
-                F.struct(
-                    _sq_l2_lit(vec_col, 0, [float(x) for x in G[j]]).alias("d"),
-                    F.lit(j).alias("c"),
-                )
-                for j in sorted(members)
-            ]
-        )
-    ).getField("c")
-
-    # BIND the super-cell choice before branching: a bare CASE re-inlines
-    # super_best's O(√k) argmin into every branch CONDITION (evaluated
-    # sequentially — O(g·√k) = O(k) folds per row, the exact cost this
-    # function exists to remove). The one-element-array transform
-    # evaluates it once per row (same trick as the residual binding in
-    # build_ivfpq).
-    def routed(s):
-        expr = None
-        for j in sorted(members):
-            branch = argmin_cells(members[j])
-            expr = (
-                F.when(s == j, branch) if expr is None else expr.when(s == j, branch)
-            )
-        return expr
-
-    return F.element_at(
-        F.transform(F.array(super_best), lambda s: routed(s)), 1
-    ).cast("int")

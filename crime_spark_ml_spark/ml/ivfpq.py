@@ -125,14 +125,15 @@ def _coded_frame(
     (optional L2-normalize) → nearest-cell argmin → residual → m PQ
     codes, all in a single numpy pass per Arrow batch. This is the r9
     replacement for the interpreted Catalyst chain (argmin_cid_expr →
-    broadcast-join residual → pq_code_expr), whose CodegenFallback HOF
-    folds were the dominant per-row cost of a build at sqrt-n cell
-    counts (O(k_cells·dim) boxed lambda calls per row, guide §4.2).
-    Every numpy step reproduces its JVM twin's IEEE-754 double op in
-    the same order, so cids, residuals and codes are bit-identical
-    (tie break: first minimum = smallest cid / code; ``cids`` must be
-    sorted ascending). Shared by build / append / split so every path
-    stays bit-identical by construction.
+    broadcast-join residual → pq_code_expr, kept as test references
+    in tests/expression_refs.py), whose CodegenFallback HOF folds
+    were the dominant per-row cost of a build at sqrt-n cell counts
+    (O(k_cells·dim) boxed lambda calls per row, guide §4.2). Every
+    numpy step reproduces the chain's IEEE-754 double op in the same
+    order, so cids, residuals and codes are bit-identical (tie break:
+    first minimum = smallest cid / code; ``cids`` must be sorted
+    ascending; pinned in tests/test_pq.py). Shared by build / append
+    / split so every path stays bit-identical by construction.
 
     mapInPandas (a plan NODE, not an expression) rather than a
     struct-returning pandas UDF: projection collapse can fold a struct
@@ -143,7 +144,7 @@ def _coded_frame(
     dropped — the former expression chain dropped them at the residual
     inner join on cid. Model transport is size-gated (r10): below
     _MODEL_CLOSURE_CAP_BYTES the arrays ride the task closure (the
-    same bytes the folded literal carried in the plan); above it —
+    same bytes the former folded plan literal carried); above it —
     sqrt-n cell counts at large n — they ship once via sc.broadcast
     and the closure carries only the handle."""
     import numpy as np

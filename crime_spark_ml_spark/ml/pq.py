@@ -10,18 +10,23 @@ Jégou et al., TPAMI 2011): per query, precompute an m×k lookup table
 of exact subspace distances, then every corpus row scores with m
 table lookups — no float math per candidate.
 
-Spark mapping (everything DataFrame ops, no Python in the hot path):
+Spark mapping (numpy where a fold per element would dominate, JVM
+expressions elsewhere):
 - **train**: m seeded Lloyd's fits on a BOUNDED driver-side sample
   (numpy) — the codebook is m×k×(d/m) doubles, kilobytes; training
   it distributed would be pure scheduler overhead (the PCA-eigensolve
   split: Spark bounds the sample, the driver fits the tiny model).
 - **encode**: a pure narrow map — per subspace, an argmin over k
-  literal-array distances evaluated in codegen. Zero shuffles; the
-  100 TB encode is scan → project → write.
-- **search**: the query-side LUT is built the same way (tiny), then
-  corpus_codes ⋈ broadcast(LUT) scores via a pure JVM zip_with/
-  aggregate expression over the code array. The corpus never
+  codebook distances, one numpy pass per Arrow batch (pq_codes_udf).
+  Zero shuffles; the 100 TB encode is scan → project → write.
+- **search**: the query-side LUT is built driver-side in numpy
+  (tiny), then corpus_codes ⋈ broadcast(LUT) scores via a pure JVM
+  zip_with/aggregate expression over the code array. The corpus never
   shuffles; per-query top-k is a partitioned window.
+
+The numpy encode and assignment kernels are pinned bit-identical to
+the Catalyst expressions they replaced; those expressions are test
+code (tests/expression_refs.py).
 
 At 100 TB: encode once, store ``(id, codes)`` bucketed by id
 (sources/writers.write_bucketed); combine with IVF cell assignment so
@@ -30,7 +35,6 @@ a probe scans nprobe/k of the code table with LUT scoring.
 
 from __future__ import annotations
 
-import json
 from dataclasses import dataclass
 
 import pandas as pd  # module-level: pandas_udf type hints must resolve
@@ -38,22 +42,6 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..sources.readers import local_frame
-
-
-def _fold_lit(value, schema: str) -> F.Column:
-    """A complex-typed constant as ONE Catalyst node: ``from_json`` on
-    a literal string is constant-folded at optimization time into a
-    single Literal, so the plan carries O(1) nodes instead of an
-    O(elements) CreateArray tree. Load-bearing at the r9 sqrt-n
-    geometry: the per-cell literal trees made analysis + codegen the
-    dominant build cost (measured 33.6 s planning for a 447×64
-    centroid argmin vs 4.0 s folded; per-row evaluation is the same
-    interpreted HOF fold either way). json round-trips binary64
-    exactly (repr shortest-round-trip on the Python side, strtod on
-    the JVM side), so distances are bit-identical to the unrolled
-    form. Not for NaN/Inf payloads — quantizer models are finite by
-    construction."""
-    return F.from_json(F.lit(json.dumps(value)), schema)
 
 
 @dataclass
@@ -68,16 +56,6 @@ class PqModel:
     # py4j/analysis round-trip (~0.4 s measured). None on models built
     # by hand; _codebook_np falls back to one collect then.
     cb_np: object = None
-
-
-def _sq_l2(a: str, b: str) -> F.Column:
-    """Sequential double-precision squared L2 distance (JVM-side)."""
-    return F.expr(
-        f"aggregate(zip_with({a}, {b}, "
-        f"(x, y) -> (CAST(x AS DOUBLE) - CAST(y AS DOUBLE)) * "
-        f"(CAST(x AS DOUBLE) - CAST(y AS DOUBLE))), "
-        f"CAST(0.0 AS DOUBLE), (acc, v) -> acc + v)"
-    )
 
 
 _MAX_TRAIN_ROWS = 200_000  # ~100 MB of float64 at dim 64
@@ -207,7 +185,8 @@ def _lloyd(X, k: int, seed: int, iters: int = 25):
 
 
 # ----------------------------------------------------------- numpy twins
-# Vectorized (Arrow pandas-UDF) twins of the Catalyst HOF expressions.
+# Vectorized (Arrow pandas-UDF) twins of the Catalyst HOF expressions
+# (kept as test references in tests/expression_refs.py).
 # The JVM higher-order functions (zip_with/aggregate/transform) are
 # CodegenFallback — every element op is an interpreted, boxed lambda
 # call, which makes the O(k_cells·dim) assignment and O(m·k·sub_dim)
@@ -216,7 +195,8 @@ def _lloyd(X, k: int, seed: int, iters: int = 25):
 # reproduces its JVM twin's arithmetic ELEMENT-FOR-ELEMENT in the same
 # order — every step is one correctly-rounded IEEE-754 double op in
 # both engines — so assignments, residuals, codes and LUT entries are
-# bit-identical to the expression forms (pinned in tests/test_pq.py).
+# bit-identical to the expression references (pinned in
+# tests/test_pq.py).
 
 
 def _np_rows(series) -> "object":
@@ -245,7 +225,8 @@ def _np_l2_normalize(X):
 
 def _np_sq_dists_seq(X, C):
     """(n, k) squared-L2 matrix via the SAME sequential per-dimension
-    fold as _sq_l2 — acc += (x_i − c_i)² one dimension at a time, each
+    fold as the zip_with/aggregate distance of the expression
+    references — acc += (x_i − c_i)² one dimension at a time, each
     step a correctly-rounded double multiply + add — so distances are
     bit-identical to the JVM zip_with/aggregate fold. (Distinct from
     _chunked_argmin, whose pairwise-summed distances define the
@@ -278,8 +259,8 @@ def _codebook_np(model: PqModel):
 def _np_pq_codes(R, CB):
     """(n, m) int32 code matrix: per subspace, argmin over the k
     codebook entries by the sequential fold — first minimum wins =
-    lowest code on ties, the same contract as pq_code_expr's
-    array_min over (d, code) structs."""
+    lowest code on ties, the same contract as the reference
+    pq_code_expr's array_min over (d, code) structs."""
     import numpy as np
 
     m, _, sub_dim = CB.shape
@@ -292,7 +273,8 @@ def _np_pq_codes(R, CB):
 
 
 def pq_codes_udf(model: PqModel):
-    """Arrow pandas-UDF twin of ``pq_code_expr``: vec → array<int> of
+    """Arrow pandas-UDF twin of the ``pq_code_expr`` reference
+    (tests/expression_refs.py): vec → array<int> of
     m codes, bit-identical (same sequential fold, same lowest-code tie
     break), but evaluated as one numpy pass per Arrow batch instead of
     m·k interpreted HOF folds per row. NULL vectors yield NULL codes
@@ -318,7 +300,8 @@ def pq_codes_udf(model: PqModel):
 
 
 def argmin_cid_udf(pairs: list[tuple[int, list[float]]]):
-    """Arrow pandas-UDF twin of ``argmin_cid_expr``: vec → nearest
+    """Arrow pandas-UDF twin of the ``argmin_cid_expr`` reference
+    (tests/expression_refs.py): vec → nearest
     centroid id, bit-identical (sequential fold distances; ties fall
     to the smaller cid — centroids are sorted by cid and argmin keeps
     the first minimum). NULL vectors yield NULL."""
@@ -404,123 +387,6 @@ def train_pq(
     return _fit_codebooks(corpus.sparkSession, X, m=m, k=k, seed=seed)
 
 
-def _sq_l2_cols(a: F.Column, b: F.Column) -> F.Column:
-    """Column form of _sq_l2 — same Catalyst aggregate/zip_with ops,
-    same sequential double-precision fold, so distances are bit-equal
-    to the name-based variant."""
-    return F.aggregate(
-        F.zip_with(
-            a,
-            b,
-            lambda x, y: (x.cast("double") - y.cast("double"))
-            * (x.cast("double") - y.cast("double")),
-        ),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
-
-
-def _sq_l2_lit(vec: str | F.Column, offset: int, values: list[float]) -> F.Column:
-    """Squared L2 distance between ``vec[offset+1 .. offset+len]``
-    and a LITERAL vector, as a zip_with/aggregate fold. (An unrolled
-    sum-of-squares variant was measured strictly worse: it moves the
-    work from interpreted HOF eval into a multi-megabyte Catalyst tree
-    whose optimization + codegen dwarf the row math. The HOF form is
-    plan-cheap and the per-row cost parallelizes across input
-    splits.)"""
-    col = F.col(vec) if isinstance(vec, str) else vec
-    return _sq_l2_cols(
-        F.slice(col, offset + 1, len(values)),
-        F.array(*[F.lit(v) for v in values]),
-    )
-
-
-def argmin_cid_expr(
-    pairs: list[tuple[int, list[float]]], vec: str | F.Column
-) -> F.Column:
-    """Nearest-centroid id over LITERAL (cid, centroid) pairs as one
-    row-local expression: array_min over (distance, cid) structs. The
-    tie-break contract — smaller distance wins, equal distances fall
-    to the smaller cid (struct ordering) — is load-bearing for the
-    flat/two-level assignment agreement and for probe determinism, so
-    every assignment site (build_ivf, two_level_assign_expr,
-    append_ivfpq, split_oversized_cells, the scale harness) routes
-    through this one definition.
-
-    The (cid, centroid) table rides as ONE folded literal (_fold_lit)
-    rather than per-centroid expression subtrees — same zip_with/
-    aggregate distance fold in the same order, so assignments are
-    bit-identical to the unrolled form, but the plan stays O(1) in
-    k_cells (at sqrt-n cell counts the unrolled tree's analysis +
-    codegen dominated the whole build)."""
-    col = F.col(vec) if isinstance(vec, str) else vec
-    dim = len(pairs[0][1])
-    cents = _fold_lit(
-        [{"c": int(c), "v": [float(x) for x in cv]} for c, cv in pairs],
-        "array<struct<c:int,v:array<double>>>",
-    )
-    return (
-        F.array_min(
-            F.transform(
-                cents,
-                lambda s: F.struct(
-                    _sq_l2_cols(F.slice(col, 1, dim), s["v"]).alias("d"),
-                    s["c"].alias("c"),
-                ),
-            )
-        )
-        .getField("c")
-        .cast("int")
-    )
-
-
-def pq_code_expr(model: PqModel, vec: str | F.Column) -> F.Column:
-    """The m-code array as ONE row-local column expression — nearest
-    codebook entry per subspace, argmin over k literal-vector distances
-    (the codebook is m×k rows, kilobytes, collected once). Callers
-    project it next to whatever columns must ride along (ivfpq keeps
-    ``cid`` beside the codes with no join).
-
-    ``vec`` may be a Column (e.g. a lambda variable): when the input
-    vector is itself a computed expression, wrap the call as
-    ``element_at(transform(array(<expr>), v -> pq_code_expr(m, v)), 1)``
-    so the expression is evaluated ONCE per row — otherwise Catalyst's
-    projection collapse inlines it into all m*k distance subtrees
-    (measured: 4x the row work and seconds of codegen per fresh
-    codebook on the IVFPQ residual path)."""
-    cb: dict[int, list[list[float]]] = {}
-    for r in model.codebooks.collect():  # bounded: m*k rows
-        cb.setdefault(r.sub, [None] * model.k)[r.code] = [float(x) for x in r.cvec]
-    col = F.col(vec) if isinstance(vec, str) else vec
-    # whole codebook as ONE folded literal (sub -> code -> vector):
-    # plan size O(m) instead of O(m*k*sub_dim) — see _fold_lit
-    cbs = _fold_lit(
-        [[cb[j][c] for c in range(model.k)] for j in range(model.m)],
-        "array<array<array<double>>>",
-    )
-
-    def code_for(j: int) -> F.Column:
-        # array_min over (d, code) structs orders lexicographically —
-        # one evaluation per distance (array_position(.., array_min(..))
-        # would compute every aggregate twice), lowest code on ties;
-        # the transform index IS the code (codebook list is
-        # code-ordered), same tie contract as the unrolled form
-        best = F.array_min(
-            F.transform(
-                F.element_at(cbs, j + 1),
-                lambda cv, i: F.struct(
-                    _sq_l2_cols(
-                        F.slice(col, j * model.sub_dim + 1, model.sub_dim), cv
-                    ).alias("d"),
-                    i.alias("c"),
-                ),
-            )
-        )
-        return best.getField("c").cast("int")
-
-    return F.array(*[code_for(j) for j in range(model.m)])
-
-
 def pq_encode(
     corpus: DataFrame,
     model: PqModel,
@@ -530,12 +396,13 @@ def pq_encode(
     """(id, codes array<int> length m): a PURE NARROW MAP — zero
     shuffles, encoding 100 TB is scan → vectorized encode → write.
 
-    r9: the per-row math moved from the interpreted Catalyst HOF chain
-    (pq_code_expr — m·k boxed zip_with/aggregate folds per row,
-    CodegenFallback) to ONE numpy pass per Arrow batch (pq_codes_udf,
-    guide §4.2). Codes are bit-identical (same sequential fold, same
-    lowest-code tie break — pinned in tests/test_pq.py); only the two
-    projected columns cross the Python boundary."""
+    The per-row math is ONE numpy pass per Arrow batch (pq_codes_udf,
+    guide §4.2) instead of the m·k boxed zip_with/aggregate folds per
+    row of the Catalyst form it replaced. Codes are bit-identical to
+    that form (same sequential fold, same lowest-code tie break — the
+    reference is tests/expression_refs.pq_code_expr, the pin
+    tests/test_pq.py); only the two projected columns cross the
+    Python boundary."""
     return corpus.select(
         F.col(id_col).alias("id"), pq_codes_udf(model)(F.col(vec_col)).alias("codes")
     )
@@ -550,7 +417,8 @@ def _pq_luts_local(
     LUT table must broadcast anyway, and the collected query vectors
     are strictly smaller than it (k ≥ 1 codebook entries per
     sub-vector). Each pd entry is the same sequential double fold as
-    the former _sq_l2 expression, so values are bit-identical. NULL
+    the former zip_with/aggregate expression, so values are
+    bit-identical. NULL
     query vectors are skipped (they can never rank: every lookup
     against them is undefined)."""
     import numpy as np

@@ -3,7 +3,7 @@ image/video codecs, raw PCM needs only numpy's ``frombuffer``, so
 nothing here is stubbed).
 
 Audio rows are opaque ``binary`` payloads of little-endian int16
-samples plus typed metadata (MEDIA_SCHEMA in multimodal.py). Decode
+samples keyed by ``media_id`` (PCM_SCHEMA below). Decode
 and per-frame feature extraction run as Arrow-batched ``mapInPandas``
 — one vectorized numpy pass per batch, never per-row Python — and the
 partitioning story is the binary-column one: payload bytes stay inside

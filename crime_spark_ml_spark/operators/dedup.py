@@ -5,8 +5,9 @@ Scale design (the point of each implementation):
 - **exact_dedup**: hash-groupBy on md5(text) — one shuffle keyed by a
   16-byte digest instead of the full document payload.
 - **minhash_lsh_candidates**: shingle → minhash → band → bucket-join.
-  Signatures are computed row-locally (one pass, JVM higher-order
-  functions); the only shuffle is the band-bucket self-join, whose
+  Signatures and band hashes come from one Arrow pass (shingles
+  hashed JVM-side, permutation minima and band hashes in numpy, no
+  exchange); the only shuffle is the band-bucket self-join, whose
   key cardinality (bands × hash space) spreads uniformly. This is the
   classic sub-quadratic near-dup: candidate pairs ≈ colliding pairs,
   never all-pairs.
@@ -31,63 +32,6 @@ def exact_dedup(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -
     return (
         df.groupBy(F.md5(F.col(text_col)).alias("fp"))
         .agg(F.min(id_col).alias(id_col), F.count("*").alias("n_dups"))
-    )
-
-
-def with_minhash(
-    df: DataFrame,
-    text_col: str = "text",
-    num_hashes: int = 32,
-    shingle_n: int = 3,
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """MinHash over word-3-gram shingles (see shingles_expr for why
-    shingling, not raw word sets, keeps LSH buckets selective).
-
-    Implementation: explode shingles → one partial-aggregated groupBy
-    computing min(hash(shingle ⊕ i)) for every permutation i. Each
-    shingle is hashed exactly ``num_hashes`` times; a nested
-    higher-order-function form would be re-inlined by Catalyst's
-    project-collapsing into every downstream band expression,
-    multiplying work ~bands× — the explode+agg shape is the
-    scale-correct plan."""
-    return df.join(
-        minhash_signatures(df, text_col, num_hashes, shingle_n, id_col),
-        on=id_col,
-        how="left",  # NULL-text docs keep a NULL signature, never vanish
-    )
-
-
-def _minhash_agg(
-    df: DataFrame,
-    text_col: str,
-    num_hashes: int,
-    shingle_n: int,
-    id_col: str,
-    parallelism: int | None = None,
-) -> DataFrame:
-    """One column per permutation min (``__mh{i}``) — the shared
-    aggregation pass behind both the array-signature and the fused
-    banded forms. The shingle STRING is hashed once; permutation i
-    re-hashes the (long, i) pair — no per-permutation string concat
-    (32× cheaper per row).
-
-    ``parallelism``: optional repartition of the *input docs* before
-    the explode. The hash work is proportional to shingles × hashes
-    and happens inside the scan stage, so a source that yields few
-    input splits (the test fixtures are single-row-group parquet →
-    ONE task) serializes it; a cheap doc-level shuffle spreads it.
-    At 100 TB the scan already yields thousands of splits — leave it
-    None there."""
-    src = df.repartition(parallelism) if parallelism else df
-    ex = src.select(
-        id_col, F.explode(F.expr(shingles_expr(text_col, shingle_n))).alias("sh")
-    ).withColumn("__h", F.xxhash64("sh"))
-    return ex.groupBy(id_col).agg(
-        *[
-            F.min(F.xxhash64(F.col("__h"), F.lit(i))).alias(f"__mh{i}")
-            for i in range(num_hashes)
-        ]
     )
 
 
@@ -152,7 +96,8 @@ def _minhash_arrow_frame(
     (id, band_pos, band_hash) — via ONE mapInArrow pass over the
     exploded (id, xxhash64(shingle)) rows. Bit-identical to the
     explode→groupBy(min(xxhash64(__h, i)))→band-chain expression form
-    (pinned in tests/test_datapipe.py): the shingle string is still
+    (the reference lives in tests/expression_refs.py and the pin in
+    tests/test_datapipe.py): the shingle string is still
     hashed once JVM-side; the num_hashes permutation hashes and the
     per-doc minima — formerly the aggregation's dominant per-row cost
     AND a full shuffle of the exploded rows — run vectorized in numpy
@@ -160,7 +105,15 @@ def _minhash_arrow_frame(
     since explode and mapInArrow share the stage; guide §2.4/§4.2).
     Contract: ``id_col`` identifies each input row uniquely (a doc id)
     — duplicate ids across partitions would emit per-partition partial
-    signatures where the old groupBy merged them globally."""
+    signatures where the old groupBy merged them globally.
+
+    ``parallelism``: optional repartition of the *input docs* before
+    the explode. The hash work is proportional to shingles × hashes
+    and happens inside the scan stage, so a source that yields few
+    input splits (the test fixtures are single-row-group parquet →
+    ONE task) serializes it; a cheap doc-level shuffle spreads it.
+    At 100 TB the scan already yields thousands of splits — leave it
+    None there."""
     import numpy as np
     import pyarrow as pa
     from pyspark.sql.pandas.types import to_arrow_type
@@ -249,7 +202,11 @@ def minhash_signatures(
     parallelism: int | None = None,
 ) -> DataFrame:
     """(id, minhash_sig) only — the hot-path form (no payload re-join).
-    One Arrow pass, zero exchanges (see _minhash_arrow_frame)."""
+    One Arrow pass, zero exchanges (see _minhash_arrow_frame).
+
+    Contract: ``id_col`` identifies each input row uniquely. A doc's
+    minima are merged within one Arrow task, so an id repeated across
+    partitions yields one partial signature per partition."""
     return _minhash_arrow_frame(
         df, text_col, num_hashes, shingle_n, id_col, parallelism
     ).select(F.col("id").alias(id_col), "minhash_sig")
@@ -273,6 +230,10 @@ def minhash_lsh_candidates(
     yields b²/2 pairs, so one degenerate bucket (boilerplate, empty
     strings) can dominate the whole job; buckets above the cap are
     dropped (their members still pair through their other bands).
+
+    Contract: ``id_col`` identifies each input row uniquely, as in
+    ``minhash_signatures``: an id repeated across partitions gets band
+    rows from each partial signature.
     """
     if num_hashes % bands:
         raise ValueError(
@@ -323,8 +284,8 @@ def simhash_signatures(
     the signs pack big-endian into a LONG. The row-local
     higher-order-function form (functions/hashing.simhash) re-evaluates
     split+hash once per output bit under Catalyst project-collapsing —
-    ~bits× wasted work, same trap as the nested MinHash (see
-    with_minhash)."""
+    ~bits× wasted work, the same trap a nested higher-order-function
+    MinHash falls into."""
     toks = (
         df.select(
             id_col,

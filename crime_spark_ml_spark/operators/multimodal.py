@@ -32,25 +32,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-MEDIA_SCHEMA = T.StructType(
-    [
-        T.StructField("media_id", T.LongType()),
-        T.StructField("kind", T.StringType()),  # image | audio | video
-        T.StructField("payload", T.BinaryType()),
-        T.StructField(
-            "meta",
-            T.StructType(
-                [
-                    T.StructField("width", T.IntegerType()),
-                    T.StructField("height", T.IntegerType()),
-                    T.StructField("sample_rate", T.IntegerType()),
-                    T.StructField("n_frames", T.IntegerType()),
-                ]
-            ),
-        ),
-    ]
-)
-
 IMAGE_FEATURES_SCHEMA = T.StructType(
     [
         T.StructField("media_id", T.LongType()),

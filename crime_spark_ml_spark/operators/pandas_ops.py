@@ -5,49 +5,30 @@ is genuinely needed (native libs, custom stateful logic), only
 Arrow-batched forms — ``pandas_udf``, ``applyInPandas``,
 ``applyInPandasWithState`` — never row-at-a-time Python UDFs.
 
-Each operator here exists as a *twin* of a JVM implementation so tests
-can pin equivalence and benchmarks can quantify the JVM-vs-Arrow gap:
-- ``cosine_pandas_udf``      ↔ functions/vectors.cosine
-- ``source_stats_apply``     ↔ a groupBy aggregate
-- ``running_totals_stateful``↔ streaming windowed_counts (but with
-  arbitrary per-group Python state — the escape hatch Structured
-  Streaming's built-in aggs can't express)
+Each operator here backs a registered plan:
+- ``source_stats_apply``: per-group logic via applyInPandas, tested
+  against the groupBy aggregate it matches;
+- ``running_totals_stateful`` and ``ewma_last_n_stateful``: arbitrary
+  per-group Python state via applyInPandasWithState — the escape
+  hatch Structured Streaming's built-in aggregations can't express;
+- ``geo_mean_udaf`` and ``bloom_probe_udf``: a grouped-aggregate and a
+  scalar pandas UDF.
+
+The numpy kernels behind the engine's hot paths (LSH, MinHash, PQ/IVF
+encode) live with their operators in similarity.py, dedup.py and
+ml/pq.py.
 """
 
 from __future__ import annotations
 
 from collections.abc import Iterator
-from typing import Any
 
 import pandas as pd
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-
-def cosine_pandas_udf():
-    """Vectorized cosine over two array<float> columns (Arrow batches;
-    numpy math). Twin of the JVM higher-order-function cosine.
-    Built lazily — pandas_udf resolves its return type against the
-    active SparkSession, so decorating at import time would require a
-    session before the module can load."""
-
-    @pandas_udf("double")
-    def _cos(a: pd.Series, b: pd.Series) -> pd.Series:
-        import numpy as np
-
-        def one(x: Any, y: Any) -> float:
-            xv = np.asarray(x, dtype="float64")
-            yv = np.asarray(y, dtype="float64")
-            denom = float(np.sqrt(xv @ xv) * np.sqrt(yv @ yv))
-            return float(xv @ yv) / denom if denom else 0.0
-
-        return pd.Series([one(x, y) for x, y in zip(a, b)])
-
-    return _cos
 
 
 SOURCE_STATS_SCHEMA = T.StructType(
@@ -128,90 +109,6 @@ def running_totals_stateful(events: DataFrame) -> DataFrame:
             stateStructType=_STATE_SCHEMA,
             outputMode="update",
             timeoutConf=GroupStateTimeout.NoTimeout,
-        )
-    )
-
-
-def cosine_scores_pandas(
-    corpus: DataFrame,
-    queries: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """brute-force scoring with the pandas-UDF cosine (benchmark twin
-    of operators/similarity.brute_force_topk's JVM path)."""
-    q = queries.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("qe"))
-    c = corpus.select(F.col(id_col).alias("cand_id"), F.col(vec_col).alias("ce"))
-    return (
-        c.crossJoin(F.broadcast(q))
-        .where(F.col("cand_id") != F.col("query_id"))
-        .withColumn("cos", cosine_pandas_udf()(F.col("qe"), F.col("ce")))
-    )
-
-
-def running_totals_tws(events: DataFrame) -> DataFrame:
-    """The SAME running-totals operator through transformWithState
-    (Spark 4's arbitrary-stateful successor to applyInPandasWithState):
-    per event_type running count + value sum in a ValueState,
-    re-emitted every micro-batch. tests pin cross-API equivalence —
-    both stateful APIs over the same staged two-batch stream must
-    produce identical final totals, so a migration between them is
-    attested mechanical.
-
-    CONTAINER GATE (same convention as the image codecs in
-    operators/multimodal.py): transformWithState's state-server
-    protocol is protobuf-encoded, and this container has no working
-    ``google.protobuf`` — the engine's streaming runner crashes at
-    init with an ImportError, not here. Fail loudly up front instead;
-    the implementation below is complete and runs unchanged on a
-    standard Spark 4 cluster (tests/test_streaming.py runs the full
-    equivalence pin wherever protobuf imports)."""
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-    except ImportError as exc:
-        raise NotImplementedError(
-            "transformWithStateInPandas requires google.protobuf (the "
-            "state-server protocol); not available in this container — "
-            "run on a standard Spark 4 cluster"
-        ) from exc
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    class Processor(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._totals = handle.getValueState(
-                "totals", "total_events long, total_value double"
-            )
-
-        def handleInputRows(self, key, rows, timerValues) -> Iterator[pd.DataFrame]:
-            cnt, val = (
-                self._totals.get() if self._totals.exists() else (0, 0.0)
-            )
-            for pdf in rows:
-                cnt += len(pdf)
-                val += float(pdf["value"].sum())
-            self._totals.update((cnt, val))
-            yield pd.DataFrame(
-                {
-                    "event_type": [key[0]],
-                    "total_events": [cnt],
-                    "total_value": [round(val, 6)],
-                }
-            )
-
-        def close(self) -> None:
-            pass
-
-    return (
-        events.select("event_type", "value")
-        .groupBy("event_type")
-        .transformWithStateInPandas(
-            statefulProcessor=Processor(),
-            outputStructType=RUNNING_TOTALS_SCHEMA,
-            outputMode="Update",
-            timeMode="None",
         )
     )
 

@@ -4,12 +4,14 @@
   query set against the full corpus — the correctness baseline. One
   scan, no shuffle of the corpus side; per-query top-k via a
   partitioned window.
-- **sign_lsh_buckets / lsh_topk**: random-hyperplane (SRP) LSH — the
-  scale path. Hyperplane weights are ±1 derived from xxhash64(table,
-  plane, dim): deterministic, computed inline JVM-side, no stored
-  model. Candidates come from bucket equality joins over L tables;
-  exact cosine re-ranks candidates only. Corpus bucketing is a narrow
-  map; the join shuffles only (bucket, id) pairs.
+- **lsh_topk / embedding_near_dups**: random-hyperplane (SRP) LSH —
+  the scale path. Hyperplane weights are ±1 derived from
+  xxhash64(table, plane, dim): deterministic, no stored model.
+  Bucketing is one narrow numpy pass behind Arrow
+  (_lsh_bucketize_explode); candidates come from bucket equality over
+  L tables, and exact cosine re-ranks candidates only, so only
+  (bucket, id) rows shuffle. The JVM expression the kernel is pinned
+  bit-identical to is test code (tests/expression_refs.py).
 
 At 100 TB the brute-force path is a deliberate full-scan benchmark;
 LSH (or the IVF variant in ml/ivf.py) is what runs in production —
@@ -38,9 +40,10 @@ from ..functions.vectors import cosine, dot, dot_arrow, norm
 def _srp_weights(tables: int, planes: int, dim: int) -> "np.ndarray":
     """±1 hyperplane weight tensor (tables, planes, dim), float64 —
     weight[t, p, d] = +1 iff xxh64(f"{t}#{p}#{d}") is even, the exact
-    family `_bucket_expr` derives JVM-side (pinned bit-identical in
-    tests/test_datapipe.py). lru_cache + executor worker reuse make
-    this a once-per-process cost."""
+    family the JVM ``xxhash64`` reference in tests/expression_refs.py
+    derives per row (pinned bit-identical in tests/test_datapipe.py).
+    lru_cache + executor worker reuse make this a once-per-process
+    cost."""
     from ..functions.hashing import xxh64
 
     W = np.empty((tables, planes, dim), dtype=np.float64)
@@ -193,70 +196,6 @@ def brute_force_topk(
     )
 
 
-# hyperplane-weight literal width: vectors up to this many dims take
-# the folded-literal fast path; longer ones fall back to per-row hash
-# derivation (identical weights either way — same xxhash64 family)
-_LSH_DIM_CAP = 256
-
-
-def _bucket_expr(vec_col: str, planes: int, table: int) -> F.Column:
-    """SRP bucket id: ``planes`` sign bits packed into an int. Plane p
-    weight for dim d = ±1 from xxhash64('t#p#d') — deterministic and
-    DATA-INDEPENDENT, so (r9) the weight table is computed driver-side
-    (functions.hashing.xxh64, pinned bit-identical to the JVM
-    expression) and folded into the plan as ONE literal: the former
-    inline derivation re-ran concat + xxhash64 per (row, plane, dim) —
-    tables·planes·dim interpreted hash calls per row (measured: the
-    dominant cost of every LSH consumer). The projection keeps the
-    same zip-order sequential double fold, so bucket ids are
-    bit-identical. Vectors longer than _LSH_DIM_CAP use the original
-    per-row derivation (same weights, any width)."""
-    import json
-
-    from ..functions.hashing import xxh64
-
-    slow_proj = (
-        f"p -> CASE WHEN aggregate(sequence(0, size({vec_col}) - 1), CAST(0.0 AS DOUBLE), "
-        f"(acc, d) -> acc + IF(pmod(xxhash64(concat('{table}', '#', CAST(p AS STRING), '#', "
-        f"CAST(d AS STRING))), 2) = 0, 1.0, -1.0) * CAST(element_at({vec_col}, d + 1) AS DOUBLE)) "
-        f">= 0 THEN 1L ELSE 0L END"
-    )
-    W = [
-        [
-            1.0 if xxh64(f"{table}#{p}#{d}".encode()) & 1 == 0 else -1.0
-            for d in range(_LSH_DIM_CAP)
-        ]
-        for p in range(planes)
-    ]
-    wlit = f"from_json('{json.dumps(W)}', 'array<array<double>>')"
-    fast_proj = (
-        f"p -> CASE WHEN aggregate(zip_with({vec_col}, "
-        f"slice(element_at({wlit}, p + 1), 1, size({vec_col})), "
-        f"(x, w) -> w * CAST(x AS DOUBLE)), CAST(0.0 AS DOUBLE), "
-        f"(acc, v) -> acc + v) >= 0 THEN 1L ELSE 0L END"
-    )
-    # empty/corrupt vectors bucket to 0 instead of blowing up:
-    # sequence(0, size-1) on size=0 yields [0, -1] and element_at(_, 0)
-    # throws under ANSI — guard before evaluating the projection
-    return F.expr(
-        f"IF(size({vec_col}) < 1, 0L, "
-        f"IF(size({vec_col}) > {_LSH_DIM_CAP}, "
-        f"aggregate(transform(sequence(0, {planes - 1}), {slow_proj}), 0L, (acc, b) -> acc * 2 + b), "
-        f"aggregate(transform(sequence(0, {planes - 1}), {fast_proj}), 0L, (acc, b) -> acc * 2 + b)))"
-    )
-
-
-def sign_lsh_buckets(
-    df: DataFrame,
-    vec_col: str = "embedding",
-    planes: int = 4,
-    tables: int = 8,
-) -> DataFrame:
-    """Append bucket ids for L hash tables: array ``lsh_buckets[t]``."""
-    buckets = F.array(*[_bucket_expr(vec_col, planes, t) for t in range(tables)])
-    return df.withColumn("lsh_buckets", buckets)
-
-
 def _lsh_bucketize_explode(
     df: DataFrame,
     id_col: str,
@@ -266,8 +205,9 @@ def _lsh_bucketize_explode(
 ) -> DataFrame:
     """(id, e, n, t, bucket): SRP buckets for all L tables plus the L2
     norm in ONE vectorized Arrow pass, pre-exploded to a row per
-    (input row, table). Bit-identical to sign_lsh_buckets + norm +
-    posexplode — same hyperplane weights (xxh64 twin), same sequential
+    (input row, table). Bit-identical to the reference expression
+    (tests/expression_refs.sign_lsh_buckets) + norm + posexplode —
+    same hyperplane weights (xxh64 twin), same sequential
     per-dimension folds (_np_srp_fold/_np_norm_seq), pinned in
     tests/test_datapipe.py — with the interpreted-HOF per-element cost
     (tables·planes·dim CodegenFallback ops per row, the measured
@@ -361,7 +301,7 @@ def lsh_topk(
     bucket lose those candidates, which is the standard LSH trade: a
     bucket that large is not discriminative anyway."""
     # buckets + norms from the one-pass Arrow kernel (bit-identical to
-    # the expression forms — see _lsh_bucketize_explode); norms ride
+    # the expression references — see _lsh_bucketize_explode); norms ride
     # from before the table explode, so distinct() gains only
     # functionally-dependent columns and its row set is unchanged
     cb = _cap_buckets(

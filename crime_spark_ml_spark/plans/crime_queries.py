@@ -20,7 +20,6 @@ from ..sources.catalog import load_table
 from .registry import register
 
 ORDER_STATUS = ("F", "O", "P")
-ORDER_PRIORITIES = ("1-URGENT", "2-HIGH", "3-MEDIUM", "4-NOT SPECIFIED", "5-LOW")
 
 
 # ---------------------------------------------------------------- flagship

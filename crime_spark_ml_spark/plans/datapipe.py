@@ -116,7 +116,8 @@ def dp_minhash_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
     exactness + recall-vs-Jaccard are pinned in tests/test_datapipe.py.
     ``parallelism`` spreads the shingle-hash stage across cores — the
     fixture parquet is one row group → one input split (at production
-    scale the scan parallelizes itself; see _minhash_agg)."""
+    scale the scan parallelizes itself; see
+    operators/dedup._minhash_arrow_frame)."""
     docs = load_table(spark, sf_dir, "documents")
     return minhash_lsh_candidates(
         docs, parallelism=spark.sparkContext.defaultParallelism
@@ -11422,11 +11423,6 @@ def dp_label_noise_centroid(spark: SparkSession, sf_dir: str) -> DataFrame:
 # exists for. Rates are quantized to 1e-9 BIGINTs before any
 # cross-item moment, so the method-of-moments prior is identical in
 # both engines.
-_EB_SPARSE = (
-    "(k >= 80 AND {h} % 10 != 0)"
-)
-
-
 @register(
     "dp_empirical_bayes_ctr",
     oracle="""

@@ -60,12 +60,7 @@ def register(name: str, oracle: str | None = None, tags: tuple[str, ...] = ()) -
 
 def load_all_plans() -> dict[str, QuerySpec]:
     for mod in _PLAN_MODULES:
-        try:
-            importlib.import_module(mod)
-        except ModuleNotFoundError as e:
-            # tolerate not-yet-written plan modules during incremental build
-            if mod.split(".")[-1] not in str(e):
-                raise
+        importlib.import_module(mod)
     return dict(_REGISTRY)
 
 

@@ -18,9 +18,6 @@ from pyspark.sql import functions as F
 
 CATEGORIES = [f"CAT_{i:02d}" for i in range(39)]
 DISTRICTS = [f"DIST_{i}" for i in range(10)]
-WEEKDAYS = [
-    "Monday", "Tuesday", "Wednesday", "Thursday", "Friday", "Saturday", "Sunday",
-]
 RESOLUTIONS = [f"RES_{i}" for i in range(17)]
 
 

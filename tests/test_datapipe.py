@@ -486,54 +486,21 @@ def test_python_xxh64_matches_jvm_xxhash64(spark):
         assert xxh64(r.s.encode()) == r.h, r.s
 
 
-def test_lsh_fast_weight_path_matches_slow_path(spark):
-    """The folded-literal weight fast path (dim <= _LSH_DIM_CAP) and
-    the per-row hash derivation fall-back must produce identical
-    bucket ids — probed here by bucketing the same vectors padded past
-    the cap with zeros (zero dims contribute 0 to every projection, so
-    buckets must agree between the two code paths)."""
-    import random
-
-    from crime_spark_ml_spark.operators.similarity import (
-        _LSH_DIM_CAP,
-        sign_lsh_buckets,
-    )
-
-    random.seed(11)
-    rows = [
-        (i, [random.uniform(-1, 1) for _ in range(16)]) for i in range(50)
-    ]
-    short = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-    padded = spark.createDataFrame(
-        [(i, v + [0.0] * (_LSH_DIM_CAP + 16 - len(v))) for i, v in rows],
-        "vec_id long, embedding array<float>",
-    )
-    b_short = {
-        r.vec_id: tuple(r.lsh_buckets)
-        for r in sign_lsh_buckets(short).select("vec_id", "lsh_buckets").collect()
-    }
-    b_pad = {
-        r.vec_id: tuple(r.lsh_buckets)
-        for r in sign_lsh_buckets(padded).select("vec_id", "lsh_buckets").collect()
-    }
-    assert b_short == b_pad
-
-
 def test_arrow_lsh_kernel_matches_expressions(spark):
     """r10 pin: _lsh_bucketize_explode (one mapInArrow numpy pass) is
-    bit-identical to sign_lsh_buckets + norm + posexplode — buckets
-    AND norms — across regular float32 vectors, float64 vectors,
-    dims past the old 256 literal cap, empty arrays, NULL arrays, and
+    bit-identical to the reference expression (expression_refs.
+    sign_lsh_buckets, per-row JVM xxhash64 weights) + norm +
+    posexplode — buckets AND norms — across regular float32 vectors,
+    float64 vectors, 7/64/300 dims, empty arrays, NULL arrays, and
     ragged lengths. The numpy twin folds per dimension sequentially,
     never pairwise."""
     import random
     import struct
 
+    from expression_refs import sign_lsh_buckets
+
     from crime_spark_ml_spark.functions.vectors import norm
-    from crime_spark_ml_spark.operators.similarity import (
-        _lsh_bucketize_explode,
-        sign_lsh_buckets,
-    )
+    from crime_spark_ml_spark.operators.similarity import _lsh_bucketize_explode
 
     random.seed(23)
     rows = [(i, [random.uniform(-1, 1) for _ in range(64)]) for i in range(40)]
@@ -611,11 +578,12 @@ def test_near_dups_group_kernel_matches_legacy_join(spark):
     import random
     import struct
 
+    from expression_refs import sign_lsh_buckets
+
     from crime_spark_ml_spark.functions.vectors import norm
     from crime_spark_ml_spark.operators.similarity import (
         _cap_buckets,
         embedding_near_dups,
-        sign_lsh_buckets,
     )
 
     random.seed(31)
@@ -686,14 +654,15 @@ def test_near_dups_repeated_id_never_pairs_with_itself(spark):
 def test_minhash_arrow_kernel_matches_expressions(spark, sf_dir):
     """r10 pin: _minhash_arrow_frame (one mapInArrow pass, zero
     exchanges) is bit-identical to the explode → groupBy(min(
-    xxhash64(__h, i))) → chained-band expression form — signatures AND
+    xxhash64(__h, i))) → chained-band expression form
+    (expression_refs.minhash_agg) — signatures AND
     banded bucket rows — including the numpy uint64 xxhash64 twins
     (xxh64_long_np / xxh64_int_np) it builds on."""
     import numpy as np
+    from expression_refs import minhash_agg
 
     from crime_spark_ml_spark.functions.hashing import xxh64_int_np, xxh64_long_np
     from crime_spark_ml_spark.operators.dedup import (
-        _minhash_agg,
         minhash_lsh_candidates,
         minhash_signatures,
     )
@@ -723,7 +692,7 @@ def test_minhash_arrow_kernel_matches_expressions(spark, sf_dir):
     )
     sig_old = sorted(
         (r.doc_id, tuple(r.minhash_sig))
-        for r in _minhash_agg(docs, "text", 32, 3, "doc_id", None)
+        for r in minhash_agg(docs, "text", 32, 3, "doc_id")
         .select(
             "doc_id", F.array(*[f"__mh{i}" for i in range(32)]).alias("minhash_sig")
         )
@@ -733,7 +702,7 @@ def test_minhash_arrow_kernel_matches_expressions(spark, sf_dir):
 
     # banded path: band hashes equal the chained-expression band columns
     rows_per_band = 4
-    agg = _minhash_agg(docs, "text", 32, 3, "doc_id", None)
+    agg = minhash_agg(docs, "text", 32, 3, "doc_id")
     band_cols = []
     for b in range(8):
         acc = F.lit(42).cast("long")

@@ -317,32 +317,6 @@ def test_split_oversized_cells_noop_below_cap(spark, tmp_path):
     assert report == {"split": [], "unsplittable": [], "k_cells": len(sizes)}
 
 
-def test_two_level_assignment_agrees_with_flat(spark):
-    from crime_spark_ml_spark.ml.ivf import build_ivf, two_level_assign_expr
-
-    corpus = _planted_corpus(spark, n_clusters=8, per_cluster=5)
-    ivf = build_ivf(corpus, k=8, seed=0)
-    cent_rows = [
-        (int(r.cid), [float(x) for x in r.cvec]) for r in ivf.centroids.collect()
-    ]
-    two = ivf.assigned.withColumn(
-        "cid2", two_level_assign_expr(cent_rows, vec_col="vec")
-    )
-    total = two.count()
-    agree = two.where(F.col("cid") == F.col("cid2")).count()
-    # well-separated planted clusters: hierarchical routing must agree
-    # with flat argmin almost everywhere (boundary rows are the only
-    # legitimate divergence; this fixture has none)
-    assert agree / total >= 0.95
-
-
-def test_two_level_assignment_rejects_tiny_k(spark):
-    from crime_spark_ml_spark.ml.ivf import two_level_assign_expr
-
-    with pytest.raises(ValueError, match="k >= 4"):
-        two_level_assign_expr([(0, [0.0]), (1, [1.0])])
-
-
 def test_split_refuses_partial_corpus(spark, tmp_path):
     """The old cell directory is deleted after re-encode, so a corpus
     that does not cover every member (the append --id-shift flow fed

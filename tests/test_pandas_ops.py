@@ -1,34 +1,16 @@
-"""Arrow-path operators: equivalence with their JVM twins + the
-stateful streaming escape hatch."""
+"""Arrow-path operators: applyInPandas against the SQL aggregate it
+matches, and the applyInPandasWithState streaming escape hatch."""
 
 from __future__ import annotations
 
 import pytest
 from pyspark.sql import functions as F
 
-from crime_spark_ml_spark.functions.vectors import cosine
 from crime_spark_ml_spark.operators.pandas_ops import (
-    cosine_scores_pandas,
     running_totals_stateful,
     source_stats_apply,
 )
 from crime_spark_ml_spark.sources.catalog import load_table
-
-
-def test_pandas_cosine_matches_jvm(spark, sf_dir):
-    emb = load_table(spark, sf_dir, "embeddings")
-    q = emb.where(F.col("vec_id") < 3)
-    c = emb.where(F.col("vec_id").between(3, 40))
-    jvm = (
-        c.selectExpr("vec_id AS cand_id", "embedding AS ce")
-        .crossJoin(F.broadcast(q.selectExpr("vec_id AS query_id", "embedding AS qe")))
-        .withColumn("cos", cosine("qe", "ce"))
-        .select("query_id", "cand_id", "cos")
-    )
-    arrow = cosine_scores_pandas(c, q).select("query_id", "cand_id", "cos")
-    jvm_map = {(r.query_id, r.cand_id): r.cos for r in jvm.collect()}
-    for r in arrow.collect():
-        assert r.cos == pytest.approx(jvm_map[(r.query_id, r.cand_id)], abs=1e-9)
 
 
 def test_apply_in_pandas_matches_sql_agg(spark, sf_dir):

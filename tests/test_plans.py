@@ -22,6 +22,19 @@ def _plan(spark, sf_dir, name: str, mode: str = "formatted") -> str:
     return buf.getvalue()
 
 
+def test_missing_plan_module_raises(monkeypatch):
+    """A plan module that fails to import takes its whole query family
+    with it, so load_all_plans raises instead of skipping it."""
+    from crime_spark_ml_spark.plans import registry
+
+    missing = "crime_spark_ml_spark.plans.no_such_plans"
+    monkeypatch.setattr(
+        registry, "_PLAN_MODULES", (*registry._PLAN_MODULES, missing)
+    )
+    with pytest.raises(ModuleNotFoundError, match="no_such_plans"):
+        registry.load_all_plans()
+
+
 def test_q6_filters_pushed_to_scan(spark, sf_dir):
     plan = _plan(spark, sf_dir, "q6_forecast_revenue")
     assert "PushedFilters: [" in plan

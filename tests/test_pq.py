@@ -124,20 +124,20 @@ def test_pq_encode_plan_is_shuffle_free(spark, sf_dir):
 
 def test_numpy_twins_bit_identical_to_expression_forms(spark):
     """The r9 vectorized encode path (pq_codes_udf / argmin_cid_udf /
-    ivfpq._coded_frame) must be BIT-identical to the retained Catalyst
-    expression forms (pq_code_expr / argmin_cid_expr) — same
+    ivfpq._coded_frame) must be BIT-identical to the Catalyst
+    expression references (expression_refs.pq_code_expr /
+    argmin_cid_expr) — same
     sequential IEEE-754 fold, same smallest-id tie break — on a nasty
     fixture: float32 inputs, exact ties (duplicate centroids and
     mirror-image vectors), zero vectors, and denormal-ish magnitudes."""
     import numpy as np
+    from expression_refs import argmin_cid_expr, pq_code_expr
 
     from crime_spark_ml_spark.ml.ivfpq import _coded_frame
     from crime_spark_ml_spark.ml.pq import (
         PqModel,
         _codebook_np,
-        argmin_cid_expr,
         argmin_cid_udf,
-        pq_code_expr,
         pq_codes_udf,
     )
 
@@ -151,7 +151,9 @@ def test_numpy_twins_bit_identical_to_expression_forms(spark):
     df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
 
     cents = rng.standard_normal((6, 8))
-    cents[3] = cents[2]  # exact centroid tie: smaller cid must win
+    # exact centroid tie at distance 0 from rows 11 and 12: smaller cid
+    # must win
+    cents[2] = cents[3] = vecs[11]
     pairs = [(i, [float(x) for x in cents[i]]) for i in range(len(cents))]
     expr_cid = df.select(
         "vec_id", argmin_cid_expr(pairs, "embedding").alias("cid")
@@ -160,9 +162,10 @@ def test_numpy_twins_bit_identical_to_expression_forms(spark):
         "vec_id", argmin_cid_udf(pairs)(F.col("embedding")).alias("cid")
     ).collect()
     assert sorted(map(tuple, expr_cid)) == sorted(map(tuple, udf_cid))
+    assert 2 in {r.cid for r in udf_cid}  # the tie is exercised
 
     cb = rng.standard_normal((2, 4, 4))
-    cb[0][2] = cb[0][1]  # exact codeword tie: smaller code must win
+    cb[0][1] = cb[0][2] = vecs[11][:4]  # exact codeword tie: smaller code must win
     cb_rows = [
         (j, c, [float(x) for x in cb[j][c]]) for j in range(2) for c in range(4)
     ]
@@ -181,6 +184,7 @@ def test_numpy_twins_bit_identical_to_expression_forms(spark):
     assert sorted((r.vec_id, tuple(r.codes)) for r in expr_codes) == sorted(
         (r.vec_id, tuple(r.codes)) for r in udf_codes
     )
+    assert 1 in {r.codes[0] for r in udf_codes}  # the tie is exercised
 
     # the fused encode (normalize → assign → residual → codes) against
     # the composed expression chain, including the cosine normalize

@@ -717,71 +717,6 @@ def test_cdc_upsert_split_independent(spark, sf_dir):
     assert [tuple(r) for r in streamed] == [tuple(r) for r in batch]
 
 
-def test_transform_with_state_matches_legacy_api(spark, sf_dir):
-    """Cross-API equivalence: Spark 4's transformWithStateInPandas and
-    the legacy applyInPandasWithState implement the same running-totals
-    operator over the same two-micro-batch staged stream — final
-    per-key totals must be identical (state survives across batches in
-    BOTH, so each key's max emission is 2x the table's count).
-
-    Where the container lacks google.protobuf (the transformWithState
-    state-server protocol), the operator must fail loudly up front —
-    that gate is asserted instead and the equivalence half skips, same
-    convention as the image-codec stub."""
-    import shutil
-    import tempfile
-
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-    except ImportError:
-        from crime_spark_ml_spark.operators.pandas_ops import running_totals_tws
-        from crime_spark_ml_spark.plans.streamplans import events_stream
-
-        with pytest.raises(NotImplementedError, match="protobuf"):
-            running_totals_tws(events_stream(spark, sf_dir))
-        pytest.skip("no google.protobuf in container - loud gate asserted")
-
-    from crime_spark_ml_spark.operators.pandas_ops import (
-        running_totals_stateful,
-        running_totals_tws,
-    )
-    from crime_spark_ml_spark.plans.streamplans import events_stream
-    from crime_spark_ml_spark.streaming.consumer import run_available_now
-
-    def final_totals(op, tag):
-        stage = tempfile.mkdtemp(prefix=f"tws_{tag}_")
-        shutil.copyfile(f"{sf_dir}/events.parquet", f"{stage}/copy_a.parquet")
-        shutil.copyfile(f"{sf_dir}/events.parquet", f"{stage}/copy_b.parquet")
-        try:
-            emissions = run_available_now(
-                op(events_stream(spark, sf_dir, staged=stage)),
-                f"tws_{tag}",
-                output_mode="update",
-            )
-            rows = (
-                emissions.groupBy("event_type")
-                .agg(
-                    F.max("total_events").alias("total_events"),
-                    F.max("total_value").alias("total_value"),
-                )
-                .orderBy("event_type")
-                .collect()
-            )
-        finally:
-            shutil.rmtree(stage, ignore_errors=True)
-        return [tuple(r) for r in rows]
-
-    legacy = final_totals(running_totals_stateful, "legacy")
-    tws = final_totals(running_totals_tws, "new")
-    assert len(legacy) > 0
-    # counts exact; value sums float — compare at the operator's own
-    # 6-decimal emission rounding with a 1-ulp-of-rounding slack for
-    # cross-API batch-order differences
-    assert [t[:2] for t in tws] == [t[:2] for t in legacy]
-    for (_, _, v_new), (_, _, v_old) in zip(tws, legacy):
-        assert abs(v_new - v_old) <= 1e-5, (v_new, v_old)
-
-
 def test_wirestream_datasource_reads_producer_frames(spark, sf_dir, tmp_path):
     """The wire format through the Spark 4 streaming Python DataSource:
     producer-encoded frames land as one micro-batch each, parsed rows

@@ -740,46 +740,6 @@ def cmd_linkage(spark, args) -> None:
     _record("linkage", {"per_doc_count": per_size})
 
 
-def cmd_assign(spark, args) -> None:
-    """Flat vs two-level cell-assignment cost over the full fixture —
-    the measured basis for ml/ivf.two_level_assign_expr's O(√k) claim.
-    Times ONLY the assignment map (noop write, no PQ encode), at a
-    k_cells large enough for the coarse-quantizer term to matter."""
-    from crime_spark_ml_spark.ml.ivf import build_ivf, two_level_assign_expr
-    from crime_spark_ml_spark.ml.pq import argmin_cid_expr
-
-    emb = spark.read.parquet(f"{args.dir}/embeddings.parquet")
-    n = emb.count()
-    k = args.assign_k
-    ivf = build_ivf(emb, k=k, seed=0, sample_fraction=min(1.0, 40000 / n))
-    cent_rows = [
-        (int(r.cid), [float(x) for x in r.cvec]) for r in ivf.centroids.collect()
-    ]
-    vecs = emb.select(F.col("vec_id").alias("id"), F.col("embedding").alias("vec"))
-    if vecs.rdd.getNumPartitions() < 32:
-        vecs = vecs.repartition(32)
-    flat = argmin_cid_expr(cent_rows, "vec")
-    two = two_level_assign_expr(cent_rows, vec_col="vec")
-    out = {"n_vectors": n, "k_cells": k}
-    for name, expr in (("flat", flat), ("two_level", two)):
-        best = float("inf")
-        for _ in range(2):
-            t0 = time.perf_counter()
-            vecs.select("id", expr.alias("cid")).write.format("noop").mode(
-                "overwrite"
-            ).save()
-            best = min(best, time.perf_counter() - t0)
-        out[f"{name}_sec"] = round(best, 2)
-    agree = (
-        vecs.select(flat.alias("a"), two.alias("b"))
-        .where(F.col("a") == F.col("b"))
-        .count()
-    )
-    out["agreement"] = round(agree / n, 4)
-    print(f"[scale][assign] {out}")
-    _record("assign", out)
-
-
 def cmd_newops(spark, args) -> None:
     """Round-5-new operators under volume: greedy k-center (k corpus
     passes — the claim is LINEAR cost in corpus size at fixed k) and
@@ -1172,7 +1132,7 @@ def cmd_rewrites(spark, args) -> None:
 
 def main() -> None:
     ap = argparse.ArgumentParser(description=__doc__)
-    ap.add_argument("phase", choices=["gen", "ann", "recall", "cells", "dedup", "spans", "tpch", "events", "text", "linkage", "assign", "newops", "kcore", "gmedian", "newstats", "rewrites", "hygiene", "all"])
+    ap.add_argument("phase", choices=["gen", "ann", "recall", "cells", "dedup", "spans", "tpch", "events", "text", "linkage", "newops", "kcore", "gmedian", "newstats", "rewrites", "hygiene", "all"])
     ap.add_argument("--dir", default=os.path.join(REPO, ".scale"))
     ap.add_argument("--emb", type=int, default=400_000)
     ap.add_argument("--docs", type=int, default=100_000)
@@ -1181,7 +1141,6 @@ def main() -> None:
     ap.add_argument("--cell-rows", type=int, default=6250, dest="cell_rows")
     ap.add_argument("--n-queries", type=int, default=8, dest="n_queries")
     ap.add_argument("--factors", default="1,4,16")
-    ap.add_argument("--assign-k", type=int, default=256, dest="assign_k")
     ap.add_argument("--cells-corpus", type=int, default=200_000, dest="cells_corpus")
     ap.add_argument("--cells-points", dest="cells_points",
                     default="32:8,64:8,128:8,64:16,default:16",
@@ -1225,8 +1184,6 @@ def main() -> None:
     if args.phase in ("linkage", "all"):
         args.sizes = f"{args.docs // 4},{args.docs // 2},{args.docs}"
         cmd_linkage(spark, args)
-    if args.phase in ("assign",):
-        cmd_assign(spark, args)
     if args.phase in ("newops",):
         cmd_newops(spark, args)
     if args.phase in ("kcore",):
