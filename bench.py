@@ -11,6 +11,7 @@ the engine, not result transfer.
 
 from __future__ import annotations
 
+import functools
 import json
 import os
 import sys
@@ -53,6 +54,50 @@ HEADLINE_EXT = [
 ]
 
 
+def noop(df) -> None:
+    """Run ``df``'s whole plan into the noop sink: scans, shuffles and
+    aggregates execute, nothing crosses to the driver."""
+    df.write.format("noop").mode("overwrite").save()
+
+
+def best_seconds(run, runs: int = 2, prepare=None) -> float:
+    """Fastest of ``runs`` timed calls of ``run(prepare())``, or of
+    ``run()`` without ``prepare``. ``prepare`` runs before each call,
+    outside the timed span. Min of N, not the mean: the first run pays
+    JIT/codegen compilation that a long-lived cluster would not re-pay
+    per query."""
+    best = float("inf")
+    for _ in range(runs):
+        args = () if prepare is None else (prepare(),)
+        t0 = time.perf_counter()
+        run(*args)
+        best = min(best, time.perf_counter() - t0)
+    return best
+
+
+def time_queries(
+    spark, specs, names, sf_dir: str, time_build: bool, runs: int = 2
+) -> dict[str, float]:
+    """Best-of-``runs`` seconds per registered query, rounded to ms.
+    The timed region is the noop sink; ``time_build=True`` also times
+    the plan-builder call, for queries that do real work eagerly while
+    the plan is built. Each query's Spark jobs carry the description
+    ``time: <name>``."""
+    out: dict[str, float] = {}
+    for name in names:
+        build = functools.partial(specs[name].fn, spark, sf_dir)
+        spark.sparkContext.setJobDescription(f"time: {name}")
+        try:
+            if time_build:
+                best = best_seconds(lambda: noop(build()), runs)
+            else:
+                best = best_seconds(noop, runs, prepare=build)
+        finally:
+            spark.sparkContext.setJobDescription(None)
+        out[name] = round(best, 3)
+    return out
+
+
 def time_ivfpq_split(spark, sf_dir: str) -> dict[str, float]:
     """dp_ann_ivfpq's cost, split at the production boundary: BUILD
     (quantizer fits + zero-shuffle encode + cell-partitioned persist —
@@ -71,6 +116,8 @@ def time_ivfpq_split(spark, sf_dir: str) -> dict[str, float]:
     from crime_spark_ml_spark.plans.datapipe import _train_fraction
     from crime_spark_ml_spark.sources.catalog import load_table
 
+    # one paired loop rather than two best_seconds calls: each probe
+    # reads the index its own iteration built and persisted
     best_build = best_probe = float("inf")
     for _ in range(2):
         emb = load_table(spark, sf_dir, "embeddings").cache()
@@ -86,10 +133,10 @@ def time_ivfpq_split(spark, sf_dir: str) -> dict[str, float]:
             persist_ivfpq(index, path)
             best_build = min(best_build, time.perf_counter() - t0)
             t0 = time.perf_counter()
-            probe_ivfpq(
+            noop(probe_ivfpq(
                 spark, path, emb.where(F.col("vec_id") < 5), k=5,
                 nprobe=max(1, kc // 4),
-            ).write.format("noop").mode("overwrite").save()
+            ))
             best_probe = min(best_probe, time.perf_counter() - t0)
         finally:
             shutil.rmtree(path, ignore_errors=True)
@@ -110,31 +157,12 @@ def main() -> None:
     # JVM/codegen warmup outside the timed region
     spark.read.parquet(f"{sf_dir}/lineitem.parquet").count()
 
-    # two runs per query, min taken: the first run pays JIT/codegen
-    # compilation that a long-lived cluster wouldn't re-pay per query.
-    # time_build=True also times the plan-builder call — for queries
-    # that do real work eagerly at build time.
-    def time_queries(names: list[str], time_build: bool) -> dict[str, float]:
-        out: dict[str, float] = {}
-        for name in names:
-            best = float("inf")
-            for _ in range(2):
-                if time_build:
-                    t0 = time.perf_counter()
-                    df = specs[name].fn(spark, sf_dir)
-                else:
-                    df = specs[name].fn(spark, sf_dir)
-                    t0 = time.perf_counter()
-                df.write.format("noop").mode("overwrite").save()
-                best = min(best, time.perf_counter() - t0)
-            out[name] = round(best, 3)
-        return out
-
-    timings = time_queries(HEADLINE, time_build=False)
+    timings = time_queries(spark, specs, HEADLINE, sf_dir, time_build=False)
     # dp_ann_ivfpq reports as _build + _probe component lines; their
     # sum stays comparable to the single pre-split line in BENCH_r04
     ext_timings = time_queries(
-        [n for n in HEADLINE_EXT if n != "dp_ann_ivfpq"], time_build=True
+        spark, specs, [n for n in HEADLINE_EXT if n != "dp_ann_ivfpq"], sf_dir,
+        time_build=True,
     )
     ext_timings.update(time_ivfpq_split(spark, sf_dir))
 

@@ -1,34 +1,56 @@
 #!/usr/bin/env python
-"""Volume-scale pressure test for the ANN and dedup stacks.
+"""Volume-scale pressure tests: the curves a fixed-size bench cannot show.
 
-The shipped test fixtures cap `embeddings` at 2000 rows, so every ANN
-bench number there is fixed overhead (BASELINE.md's caveat) and the
-100 TB design claims — pruned probe reads, bounded quantizer training,
-capped LSH buckets — carry plan pins but no observed scaling curve.
-This tool generates a deterministic local fixture at 10-1000x that
-volume and records the curves:
+The shipped fixtures cap `embeddings` at 2000 rows, so every ANN bench
+number there is fixed overhead (BASELINE.md's caveat), and the 100 TB
+design claims (pruned probe reads, bounded quantizer training, capped
+LSH buckets, distributed window rewrites) need observed scaling
+curves. Usage:
 
-  gen    — synthesize `embeddings` (dim-64 float vectors drawn around
-           64 well-separated latent centers + per-vector noise, all
-           JVM-side hash math, no Python row loop) and `documents`
-           (hash-chosen word sequences over a small vocab, ~5% planted
-           near-duplicates = base text + one appended token) under
-           --dir (default .scale/, gitignored).
-  ann    — IVFPQ build+persist time and cell-occupancy distribution
-           per corpus size (cell size held ~constant by scaling
-           k_cells with the corpus, the production knob); probe time
-           vs corpus size at fixed nprobe (should stay ~flat when
-           cells are constant-sized: the scan reads nprobe cells, not
-           the corpus) and vs nprobe at fixed corpus (should grow
-           ~linearly: each probed cell is one more pruned read).
-  dedup  — MinHash-LSH -> connected-components funnel wall time per
-           doc count (should grow ~linearly at constant dup rate) and
-           the LSH band-bucket size distribution (tail vs the
-           max_bucket=200 skew cap).
-  all    — gen (if missing) + ann + dedup.
+  python tools/run_scale_test.py PHASE [--dir DIR] [--factors 1,4,16]
+      [--sizes N,N,...] [--emb N] [--docs N] [...]
 
-Results append to SCALE_r05.json (one JSON object per phase) so a run
-is resumable phase by phase.
+Phases on a deterministic synthetic fixture under --dir (default
+.scale/, gitignored):
+
+  gen      — synthesize `embeddings` (dim-64 float vectors around 64
+             well-separated latent centers + per-vector noise) and
+             `documents` (hash-chosen word sequences over a small vocab,
+             ~5% planted near-duplicates); JVM-side hash math only.
+  ann      — IVFPQ build+persist time and cell occupancy per corpus
+             size (k_cells scaled with the corpus); probe time vs
+             corpus size at nprobe=4 (should stay ~flat) and vs nprobe
+             at the largest corpus (should grow ~linearly).
+  recall   — IVFPQ refined-probe recall@10 vs nprobe and vs expand.
+  cells    — coarse-quantizer geometry (k_cells, m) vs recall at one
+             corpus size.
+  dedup    — MinHash-LSH -> connected-components funnel per doc count,
+             and the LSH band-bucket sizes against the max_bucket cap.
+  spans    — duplicated-span detection per doc count.
+  linkage  — sorted-neighbourhood, PPJoin and CDC chunking per doc count.
+  newops   — greedy k-center per corpus size; dynamic partition pruning
+             on a month-partitioned 16x lineitem.
+  kcore    — k-core peeling of a planted tree+clique graph (no fixture).
+  gmedian  — Weiszfeld geometric median on poisoned vectors.
+  hygiene  — cost of the catalog's well-formed predicates at volume.
+  all      — gen (if missing) + ann + spans + tpch + events + text +
+             dedup + linkage.
+
+Phases on sf0.1 replicated --factors times by key-shifted union
+(`REPLICATED`; dirs <--dir>/<prefix>_f<factor>). Per factor dir, the
+phase's first query runs once untimed (JIT/codegen warm-up), then every
+query is timed with bench.time_queries (fn() + noop sink, min of 2),
+and `<table>_rows` is counted from each replicated table:
+
+  tpch     — q1/q3/q6 on replicated lineitem, orders and customer.
+  events   — session, window, as-of and fold/sweep event queries.
+  text     — row-local text kernels and the top-terms aggregate.
+  rewrites — the 13 round-6 window-rewrite plans.
+  newstats — the statistical tests on the events fixture, timed as a
+             collect whose small result is checked.
+
+Results go to SCALE_r09.json, one JSON object per phase (a rerun
+replaces that phase's object), so a run is resumable phase by phase.
 """
 
 from __future__ import annotations
@@ -40,15 +62,19 @@ import os
 import shutil
 import sys
 import time
+from typing import NamedTuple
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F  # noqa: E402
 
+from bench import best_seconds, noop, time_queries  # noqa: E402
+from crime_spark_ml_spark.plans.registry import load_all_plans  # noqa: E402
 from crime_spark_ml_spark.session import get_spark  # noqa: E402
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 OUT_JSON = os.path.join(REPO, "SCALE_r09.json")
+SRC_DIR = "/root/testdata/sf0.1"
 
 def _replicate(df, shifts: dict[str, int], factor: int):
     """``factor``× volume by key-shifted union: each replica adds
@@ -176,9 +202,7 @@ def cmd_ann(spark, args) -> None:
         emb.where(F.col("vec_id") < 4000), k_cells=8, m=8, k=16, seed=0
     )
     persist_ivfpq(widx, wpath)
-    probe_ivfpq(
-        spark, wpath, emb.where(F.col("vec_id") < 4), k=10, nprobe=2
-    ).write.format("noop").mode("overwrite").save()
+    noop(probe_ivfpq(spark, wpath, emb.where(F.col("vec_id") < 4), k=10, nprobe=2))
     shutil.rmtree(wpath, ignore_errors=True)
     per_size = []
     biggest_path = None
@@ -208,13 +232,9 @@ def cmd_ann(spark, args) -> None:
             .first()
         )
         queries = emb.where(F.col("vec_id") < args.n_queries)
-        best = float("inf")
-        for _ in range(2):
-            t0 = time.perf_counter()
-            probe_ivfpq(spark, path, queries, k=10, nprobe=4).write.format(
-                "noop"
-            ).mode("overwrite").save()
-            best = min(best, time.perf_counter() - t0)
+        best = best_seconds(
+            lambda: noop(probe_ivfpq(spark, path, queries, k=10, nprobe=4))
+        )
         per_size.append(
             {
                 "corpus": s,
@@ -234,13 +254,9 @@ def cmd_ann(spark, args) -> None:
     nprobe_sweep = []
     queries = emb.where(F.col("vec_id") < args.n_queries)
     for np_ in nprobes:
-        best = float("inf")
-        for _ in range(2):
-            t0 = time.perf_counter()
-            probe_ivfpq(spark, biggest_path, queries, k=10, nprobe=np_).write.format(
-                "noop"
-            ).mode("overwrite").save()
-            best = min(best, time.perf_counter() - t0)
+        best = best_seconds(
+            lambda: noop(probe_ivfpq(spark, biggest_path, queries, k=10, nprobe=np_))
+        )
         nprobe_sweep.append({"nprobe": np_, "probe_sec": round(best, 2)})
         print(f"[scale][ann] nprobe={np_} {nprobe_sweep[-1]}")
     for s in sizes:  # indexes are experiment scratch, not fixture
@@ -523,153 +539,133 @@ def cmd_spans(spark, args) -> None:
     _record("spans", {"per_doc_count": per_size})
 
 
-def cmd_tpch(spark, args) -> None:
-    """Relational-core volume scaling: replicate the sf0.1 TPC-H-ish
-    fact tables 1x/4x/16x by key-shifted union (orderkey stride
-    150000, custkey stride 15000 — the sf0.1 key ranges), then time
-    the scan-agg (q1, q6) and 3-way-join (q3) headline shapes at each
-    factor with the bench harness's noop sink, min of 2. The claim
-    under test is the one the fixed-size bench cannot show: wall time
-    grows ~linearly with fact volume (partial aggregation and AQE keep
-    the plan shape constant), i.e. no super-linear shuffle blow-up
-    hiding in the relational core."""
-    from crime_spark_ml_spark.plans.registry import load_all_plans
+class Replicated(NamedTuple):
+    """A fixture of sf0.1 tables replicated ``factor`` times by key
+    shift, and the registered queries a phase times on it."""
 
+    prefix: str  # fixture dirs are <--dir>/<prefix>_f<factor>
+    shifts: dict  # {table: {key column: shift per replica}}
+    copied: tuple  # tables copied unchanged
+    queries: tuple
+
+
+REPLICATED = {
+    # relational core: wall time should grow ~linearly with fact volume
+    # (partial aggregation and AQE keep the plan shape constant), with
+    # no super-linear shuffle blow-up at the 3-way join
+    "tpch": Replicated(
+        "tpch",
+        {
+            "lineitem": {"l_orderkey": 150_000},
+            "orders": {"o_orderkey": 150_000, "o_custkey": 15_000},
+            "customer": {"c_custkey": 15_000},
+        },
+        ("supplier", "part", "nation", "region"),
+        ("q1_pricing_summary", "q3_shipping_priority", "q6_forecast_revenue"),
+    ),
+    # per-user event counts (and per-window work) stay constant, so
+    # growth is in the number of windows, the axis an event store grows
+    # along; the fold/sweep queries keep bounded per-user state
+    "events": Replicated(
+        "events",
+        {
+            "events": {"user_id": 15_000, "event_id": 10_000_000},
+            "customer": {"c_custkey": 15_000},
+        },
+        ("orders", "nation", "region"),
+        (
+            "ev_sessionize", "ev_window_tumbling", "ev_asof_last_purchase",
+            "ev_ewma_value", "ev_peak_concurrency", "ev_busy_time_per_day",
+            "ev_markov_transitions",
+        ),
+    ),
+    # row-local JVM text kernels should scale ~linearly; a stray Python
+    # UDF would show as a 10-100x cliff (a UDF-policy regression check)
+    "text": Replicated(
+        "text",
+        {"documents": {"doc_id": 10_000_000}},
+        (),
+        ("dp_token_stats", "dp_quality_score", "dp_lang_id", "dp_top_terms_per_lang"),
+    ),
+    # the round-6 rewrites of single-task global windows (operators/
+    # rank.py) must scale like their data-sized shuffles, never like a
+    # one-task sort
+    "rewrites": Replicated(
+        "rw",
+        {
+            "events": {"user_id": 15_000, "event_id": 10_000_000},
+            "documents": {"doc_id": 10_000_000},
+            "embeddings": {"vec_id": 10_000_000},
+            "orders": {"o_orderkey": 10_000_000, "o_custkey": 15_000},
+            "lineitem": {"l_orderkey": 10_000_000, "l_partkey": 1_000_000},
+        },
+        (),
+        (
+            "ev_bot_regularity", "ev_group_sequential_obf",
+            "ev_propensity_matching", "ev_littles_law", "ev_uplift_qini",
+            "ev_sprt_sequential", "dp_maxsim_late_interaction",
+            "dp_label_noise_centroid", "dp_rank_fusion_rrf",
+            "dp_equidepth_hist2d", "dp_heaps_law", "dp_link_prediction",
+            "j_rfm_segmentation",
+        ),
+    ),
+}
+# the statistical tests: moment pivots should stay flat with the number
+# of users; the permutation test (users x 200) and log-rank (per-hour
+# risk sets) are the two with real volume dependence
+REPLICATED["newstats"] = REPLICATED["events"]._replace(
+    queries=(
+        "ev_anova_oneway", "ev_welch_ttest", "ev_ratio_metric_delta",
+        "ev_mann_whitney", "ev_permutation_test", "ev_logrank_test",
+        "ev_cmh_test",
+    )
+)
+
+
+def cmd_replicated(spark, args, phase: str, timer=None) -> None:
+    """Per --factors: build the phase's fixture dir (each missing table
+    once), count its replicated tables, warm up on the first query
+    untimed, then time the queries (default: bench.time_queries with
+    the build inside the timed region) and record one row per factor."""
+    fx = REPLICATED[phase]
     specs = load_all_plans()
-    src_dir = "/root/testdata/sf0.1"
-    factors = [int(x) for x in args.factors.split(",")]
-    queries = ["q1_pricing_summary", "q3_shipping_priority", "q6_forecast_revenue"]
+    if timer is None:
+        def timer(d):
+            return time_queries(spark, specs, fx.queries, d, time_build=True)
     per = []
-    for fct in factors:
-        d = f"{args.dir}/tpch_f{fct}"
-        if not os.path.exists(f"{d}/lineitem.parquet"):
-            li = spark.read.parquet(f"{src_dir}/lineitem.parquet")
-            o = spark.read.parquet(f"{src_dir}/orders.parquet")
-            c = spark.read.parquet(f"{src_dir}/customer.parquet")
-            _replicate(li, {"l_orderkey": 150000}, fct).write.mode(
-                "overwrite"
-            ).parquet(f"{d}/lineitem.parquet")
-            _replicate(
-                o, {"o_orderkey": 150000, "o_custkey": 15000}, fct
-            ).write.mode("overwrite").parquet(f"{d}/orders.parquet")
-            _replicate(c, {"c_custkey": 15000}, fct).write.mode(
-                "overwrite"
-            ).parquet(f"{d}/customer.parquet")
-            for t in ("supplier", "part", "nation", "region"):
-                spark.read.parquet(f"{src_dir}/{t}.parquet").write.mode(
-                    "overwrite"
-                ).parquet(f"{d}/{t}.parquet")
-        # untimed warmup (JIT/codegen) — see cmd_ann
-        specs["q6_forecast_revenue"].fn(spark, d).write.format("noop").mode(
-            "overwrite"
-        ).save()
-        row = {"factor": fct, "lineitem_rows": 600000 * fct}
-        for q in queries:
-            best = float("inf")
-            for _ in range(2):
-                t0 = time.perf_counter()
-                specs[q].fn(spark, d).write.format("noop").mode("overwrite").save()
-                best = min(best, time.perf_counter() - t0)
-            row[q] = round(best, 3)
+    for fct in (int(x) for x in args.factors.split(",")):
+        d = f"{args.dir}/{fx.prefix}_f{fct}"
+        for t in (*fx.shifts, *fx.copied):
+            if not os.path.exists(f"{d}/{t}.parquet"):
+                src = spark.read.parquet(f"{SRC_DIR}/{t}.parquet")
+                if t in fx.shifts:
+                    src = _replicate(src, fx.shifts[t], fct)
+                src.write.mode("overwrite").parquet(f"{d}/{t}.parquet")
+        row = {"factor": fct}
+        for t in fx.shifts:
+            row[f"{t}_rows"] = spark.read.parquet(f"{d}/{t}.parquet").count()
+        noop(specs[fx.queries[0]].fn(spark, d))  # untimed warm-up
+        row.update(timer(d))
         per.append(row)
-        print(f"[scale][tpch] {row}")
-    _record("tpch", {"per_factor": per})
+        print(f"[scale][{phase}] {row}")
+    _record(phase, {"per_factor": per})
 
 
-def cmd_events(spark, args) -> None:
-    """Window/event-family volume scaling, completing the four-family
-    evidence (relational=tpch, dedup=dedup/spans, ANN=ann): replicate
-    events by user-shifted union (per-user event counts — and thus
-    per-window work — stay constant, so growth is in the number of
-    windows, the scale axis a 100 TB event store actually grows
-    along), then time sessionize / tumbling-window / as-of headline
-    shapes via the noop sink, min of 2."""
-    from crime_spark_ml_spark.plans.registry import load_all_plans
-
+def cmd_newstats(spark, args) -> None:
+    """The statistical tests time a collect, since their decisions must
+    stay sane: each statistic table is small and non-empty."""
     specs = load_all_plans()
-    src_dir = "/root/testdata/sf0.1"
-    factors = [int(x) for x in args.factors.split(",")]
-    queries = [
-        "ev_sessionize",
-        "ev_window_tumbling",
-        "ev_asof_last_purchase",
-        # r5 continuation additions — the fold/sweep family: per-user
-        # state is bounded (EWMA last-32) or day-partitioned (sweep
-        # lines), so these must scale like the session/window shapes
-        "ev_ewma_value",
-        "ev_peak_concurrency",
-        "ev_busy_time_per_day",
-        "ev_markov_transitions",
-    ]
-    per = []
-    for fct in factors:
-        d = f"{args.dir}/events_f{fct}"
-        if not os.path.exists(f"{d}/events.parquet"):
-            ev = spark.read.parquet(f"{src_dir}/events.parquet")
-            cu = spark.read.parquet(f"{src_dir}/customer.parquet")
-            _replicate(
-                ev, {"user_id": 15000, "event_id": 10_000_000}, fct
-            ).write.mode("overwrite").parquet(f"{d}/events.parquet")
-            _replicate(cu, {"c_custkey": 15000}, fct).write.mode(
-                "overwrite"
-            ).parquet(f"{d}/customer.parquet")
-            for t in ("orders", "nation", "region"):
-                spark.read.parquet(f"{src_dir}/{t}.parquet").write.mode(
-                    "overwrite"
-                ).parquet(f"{d}/{t}.parquet")
-        specs["ev_window_tumbling"].fn(spark, d).write.format("noop").mode(
-            "overwrite"
-        ).save()
-        row = {"factor": fct, "event_rows": 100000 * fct}
-        for q in queries:
-            best = float("inf")
-            for _ in range(2):
-                t0 = time.perf_counter()
-                specs[q].fn(spark, d).write.format("noop").mode("overwrite").save()
-                best = min(best, time.perf_counter() - t0)
-            row[q] = round(best, 3)
-        per.append(row)
-        print(f"[scale][events] {row}")
-    _record("events", {"per_factor": per})
 
+    def collect_checked(q, d):
+        assert 0 < len(specs[q].fn(spark, d).collect()) <= 20, q
 
-def cmd_text(spark, args) -> None:
-    """Text-family volume scaling (fifth family: relational, events,
-    dedup/spans, ANN, text): replicate documents by id-shifted union
-    and time the row-local text kernels (token stats, quality score,
-    langid confusion) plus the vocabulary-bounded top-terms groupBy.
-    Row-local JVM expressions should scale ~linearly with perfect
-    parallelism — this is the family where a stray Python UDF would
-    show up as a 10-100x cliff, so the curve doubles as a UDF-policy
-    regression check."""
-    from crime_spark_ml_spark.plans.registry import load_all_plans
+    def timer(d):
+        return {
+            q: round(best_seconds(lambda: collect_checked(q, d)), 3)
+            for q in REPLICATED["newstats"].queries
+        }
 
-    specs = load_all_plans()
-    src_dir = "/root/testdata/sf0.1"
-    factors = [int(x) for x in args.factors.split(",")]
-    queries = ["dp_token_stats", "dp_quality_score", "dp_lang_id", "dp_top_terms_per_lang"]
-    per = []
-    for fct in factors:
-        d = f"{args.dir}/text_f{fct}"
-        if not os.path.exists(f"{d}/documents.parquet"):
-            docs = spark.read.parquet(f"{src_dir}/documents.parquet")
-            _replicate(docs, {"doc_id": 10_000_000}, fct).write.mode(
-                "overwrite"
-            ).parquet(f"{d}/documents.parquet")
-        specs["dp_token_stats"].fn(spark, d).write.format("noop").mode(
-            "overwrite"
-        ).save()
-        row = {"factor": fct, "doc_rows": 2000 * fct}
-        for q in queries:
-            best = float("inf")
-            for _ in range(2):
-                t0 = time.perf_counter()
-                specs[q].fn(spark, d).write.format("noop").mode("overwrite").save()
-                best = min(best, time.perf_counter() - t0)
-            row[q] = round(best, 3)
-        per.append(row)
-        print(f"[scale][text] {row}")
-    _record("text", {"per_factor": per})
+    cmd_replicated(spark, args, "newstats", timer)
 
 
 def cmd_linkage(spark, args) -> None:
@@ -745,7 +741,6 @@ def cmd_newops(spark, args) -> None:
     passes — the claim is LINEAR cost in corpus size at fixed k) and
     dynamic partition pruning (the claim is the pruned probe beats
     the same join with DPP disabled on a month-partitioned fact)."""
-    import shutil
     import tempfile
 
     from crime_spark_ml_spark.operators.similarity import kcenter_select
@@ -754,18 +749,17 @@ def cmd_newops(spark, args) -> None:
     emb = spark.read.parquet(f"{args.dir}/embeddings.parquet")
     sizes = [int(x) for x in (args.sizes or "100000,200000,400000").split(",")]
     out = {"kcenter": [], "dpp": {}}
+
+    def kcenter(corpus):
+        radii = [r.maxmin_dist_r for r in kcenter_select(corpus, k=5).collect()[1:]]
+        assert radii == sorted(radii, reverse=True), "greedy invariant broke at scale"
+
     for n in sizes:
         corpus = emb.where(F.col("vec_id") < n).select("vec_id", "embedding")
-        best = float("inf")
-        for _ in range(2):
-            t0 = time.perf_counter()
-            rows = kcenter_select(corpus, k=5).collect()
-            best = min(best, time.perf_counter() - t0)
-        radii = [r.maxmin_dist_r for r in rows[1:]]
-        assert radii == sorted(radii, reverse=True), "greedy invariant broke at scale"
+        best = best_seconds(lambda: kcenter(corpus))
         out["kcenter"].append({"corpus": n, "k": 5, "sec": round(best, 2)})
         print(f"[scale][newops] kcenter n={n} sec={best:.2f}")
-    sf_dir = "/root/testdata/sf0.1"
+    sf_dir = SRC_DIR
     store = tempfile.mkdtemp(prefix="dpp_scale_")
     try:
         # 16x-replicated fact (same month layout, 16x rows/partition):
@@ -792,11 +786,9 @@ def cmd_newops(spark, args) -> None:
             spark.conf.set(
                 "spark.sql.optimizer.dynamicPartitionPruning.enabled", flag
             )
-            best = float("inf")
-            for _ in range(3):
-                t0 = time.perf_counter()
-                build_dpp_join(spark, sf_dir, store).collect()
-                best = min(best, time.perf_counter() - t0)
+            best = best_seconds(
+                lambda: build_dpp_join(spark, sf_dir, store).collect(), runs=3
+            )
             out["dpp"][key] = round(best, 2)
         spark.conf.set(
             "spark.sql.optimizer.dynamicPartitionPruning.enabled", "true"
@@ -923,50 +915,6 @@ def cmd_gmedian(spark, args) -> None:
     _record("gmedian", {"per_size": per})
 
 
-def cmd_newstats(spark, args) -> None:
-    """Volume scaling for the round-5 statistical-test family on the
-    replicated event fixtures (same user-shifted replication as the
-    events phase — growth is in the number of users, the axis an
-    experiment actually grows along). The tests are all
-    one-user-aggregate -> pivoted-moment shapes except the
-    permutation test (a users x 200 explode) and the log-rank test
-    (per-hour risk-set windows) — the two with real volume
-    dependence worth watching."""
-    from crime_spark_ml_spark.plans.registry import load_all_plans
-
-    specs = load_all_plans()
-    factors = [int(x) for x in args.factors.split(",")]
-    queries = [
-        "ev_anova_oneway",
-        "ev_welch_ttest",
-        "ev_ratio_metric_delta",
-        "ev_mann_whitney",
-        "ev_permutation_test",
-        "ev_logrank_test",
-        "ev_cmh_test",
-    ]
-    per = []
-    for fct in factors:
-        d = f"{args.dir}/events_f{fct}"
-        if not os.path.exists(f"{d}/events.parquet"):
-            raise SystemExit(
-                f"run the events phase first to materialize {d}"
-            )
-        row = {"factor": fct, "event_rows": 100000 * fct}
-        for q in queries:
-            best = float("inf")
-            for _ in range(2):
-                t0 = time.perf_counter()
-                out = specs[q].fn(spark, d).collect()
-                best = min(best, time.perf_counter() - t0)
-            # the statistic tables are tiny; decisions must stay sane
-            assert 0 < len(out) <= 20
-            row[q] = round(best, 3)
-        per.append(row)
-        print(f"[scale][newstats] {row}")
-    _record("newstats", {"per_factor": per})
-
-
 def cmd_hygiene(spark, args) -> None:
     """Cost of the round-6 canonical well-formed predicates at volume.
 
@@ -995,21 +943,23 @@ def cmd_hygiene(spark, args) -> None:
         "aggregate(embedding, CAST(0.0 AS DOUBLE),"
         " (a, x) -> a + CAST(x AS DOUBLE) * x)"
     )
+
+    def norm_scan(df) -> None:
+        df.agg(F.sum(F.expr(norm))).collect()
+
     curve = []
     for n in sizes:
         sub = emb.where(F.col("vec_id") < n)
+        arms = (
+            lambda: norm_scan(sub),
+            lambda: norm_scan(well_formed_embeddings(sub)),
+        )
         # warm BOTH plans (codegen + file cache) so neither side pays
         # first-run compilation inside its timed window; then best-of-2
-        sub.agg(F.sum(F.expr(norm))).collect()
-        well_formed_embeddings(sub).agg(F.sum(F.expr(norm))).collect()
-        base_s = filt_s = float("inf")
-        for _ in range(2):
-            t0 = time.perf_counter()
-            sub.agg(F.sum(F.expr(norm))).collect()
-            base_s = min(base_s, time.perf_counter() - t0)
-            t0 = time.perf_counter()
-            well_formed_embeddings(sub).agg(F.sum(F.expr(norm))).collect()
-            filt_s = min(filt_s, time.perf_counter() - t0)
+        # of each arm in turn
+        for arm in arms:
+            arm()
+        base_s, filt_s = (best_seconds(arm) for arm in arms)
         curve.append(
             {
                 "rows": n,
@@ -1022,9 +972,8 @@ def cmd_hygiene(spark, args) -> None:
     # events predicate: prove the IsNotNull conjuncts reach the scan.
     # Skippable data dependency — record None rather than crash after
     # the (slow) embeddings curve on a machine without the fixture.
-    ev_path = "/root/testdata/sf0.1/events.parquet"
+    ev_path = f"{SRC_DIR}/events.parquet"
     if os.path.exists(ev_path):
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
         raw = spark.read.parquet(ev_path)
         filtered = raw.where(
             F.col("ts").isNotNull()
@@ -1051,85 +1000,6 @@ def cmd_hygiene(spark, args) -> None:
 
 
 
-def cmd_rewrites(spark, args) -> None:
-    """Volume scaling for the round-6 window rewrites — the 13 plans
-    the r5 verdict flagged as single-partition global windows, each
-    rewritten onto the distributed-rank / post-limit / broadcast-
-    boundary patterns (operators/rank.py, commits 519098c/24f6eca/
-    829bf17/2a6a91d). The OLD plans were correct-but-single-task: a
-    bare ``OVER (ORDER BY ...)`` funnels the whole relation through
-    one task, so wall time would grow linearly-with-volume *through
-    one core* regardless of cluster width. The rewrites must instead
-    scale like their data-sized shuffles: roughly flat where output
-    is top-k/bounded-grain, mildly linear where the statistic really
-    touches every row — never a one-task sort wall.
-
-    Fixtures replicate sf0.1 by key-shifted union so per-key work
-    stays constant and growth is in the number of keys (users /
-    docs / vectors / customers / graph nodes) — the axis a 100 TB
-    store actually grows along."""
-    from crime_spark_ml_spark.plans.registry import load_all_plans
-
-    specs = load_all_plans()
-    src_dir = "/root/testdata/sf0.1"
-    factors = [int(x) for x in args.factors.split(",")]
-    # every table in `shifts` is replicated for every factor dir —
-    # queries just name which plans to time against those fixtures
-    queries = (
-        "ev_bot_regularity",
-        "ev_group_sequential_obf",
-        "ev_propensity_matching",
-        "ev_littles_law",
-        "ev_uplift_qini",
-        "ev_sprt_sequential",
-        "dp_maxsim_late_interaction",
-        "dp_label_noise_centroid",
-        "dp_rank_fusion_rrf",
-        "dp_equidepth_hist2d",
-        "dp_heaps_law",
-        "dp_link_prediction",
-        "j_rfm_segmentation",
-    )
-    # key-shift replication per table: per-key work constant, #keys grows
-    shifts = {
-        "events": {"user_id": 15_000, "event_id": 10_000_000},
-        "documents": {"doc_id": 10_000_000},
-        "embeddings": {"vec_id": 10_000_000},
-        "orders": {"o_orderkey": 10_000_000, "o_custkey": 15_000},
-        "lineitem": {"l_orderkey": 10_000_000, "l_partkey": 1_000_000},
-    }
-    base_rows = {
-        "events": 100_000,
-        "documents": 5_000,
-        "embeddings": 2_000,
-        "orders": 150_000,
-        "lineitem": 600_000,
-    }
-    per = []
-    for fct in factors:
-        d = f"{args.dir}/rw_f{fct}"
-        for t, shift in shifts.items():
-            if os.path.exists(f"{d}/{t}.parquet"):
-                continue
-            src = spark.read.parquet(f"{src_dir}/{t}.parquet")
-            _replicate(src, shift, fct).write.mode("overwrite").parquet(
-                f"{d}/{t}.parquet"
-            )
-        row = {"factor": fct}
-        for t, n in base_rows.items():
-            row[f"{t}_rows"] = n * fct
-        for q in queries:
-            best = float("inf")
-            for _ in range(2):
-                t0 = time.perf_counter()
-                specs[q].fn(spark, d).write.format("noop").mode("overwrite").save()
-                best = min(best, time.perf_counter() - t0)
-            row[q] = round(best, 3)
-        per.append(row)
-        print(f"[scale][rewrites] {row}")
-    _record("rewrites", {"per_factor": per})
-
-
 def main() -> None:
     ap = argparse.ArgumentParser(description=__doc__)
     ap.add_argument("phase", choices=["gen", "ann", "recall", "cells", "dedup", "spans", "tpch", "events", "text", "linkage", "newops", "kcore", "gmedian", "newstats", "rewrites", "hygiene", "all"])
@@ -1146,7 +1016,8 @@ def main() -> None:
                     default="32:8,64:8,128:8,64:16,default:16",
                     help="k_cells:m list; 'default' = build_ivfpq's derived sqrt-n")
     args = ap.parse_args()
-    spark = get_spark("scale-test", cpus=32, shuffle_partitions=32)
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    spark = get_spark("scale-test", cpus=cpus, shuffle_partitions=cpus)
     if args.phase in ("gen", "all", "newops", "gmedian", "hygiene") and (
         args.phase == "gen" or not os.path.exists(f"{args.dir}/embeddings.parquet")
     ):
@@ -1172,12 +1043,9 @@ def main() -> None:
         if args.phase == "all" or args.sizes is None:
             args.sizes = f"{args.docs // 4},{args.docs // 2},{args.docs}"
         cmd_spans(spark, args)
-    if args.phase in ("tpch", "all"):
-        cmd_tpch(spark, args)
-    if args.phase in ("events", "all"):
-        cmd_events(spark, args)
-    if args.phase in ("text", "all"):
-        cmd_text(spark, args)
+    for phase in ("tpch", "events", "text"):
+        if args.phase in (phase, "all"):
+            cmd_replicated(spark, args, phase)
     if args.phase in ("dedup", "all"):
         args.sizes = f"{args.docs // 4},{args.docs // 2},{args.docs}"
         cmd_dedup(spark, args)
@@ -1195,7 +1063,7 @@ def main() -> None:
     if args.phase in ("hygiene",):
         cmd_hygiene(spark, args)
     if args.phase in ("rewrites",):
-        cmd_rewrites(spark, args)
+        cmd_replicated(spark, args, "rewrites")
 
 
 if __name__ == "__main__":

@@ -1,6 +1,8 @@
 #!/usr/bin/env python
-"""Time registered queries with the bench methodology (noop sink,
-min of N runs, warmup scan) without being on the bench surface.
+"""Time registered queries with bench.py's own timing routine
+(`bench.time_queries`: noop sink, min of N runs, per-query job
+description ``time: <name>``) after the same warmup scan, without
+adding them to the bench surface.
 
 Usage:
   python tools/time_query.py dp_embedding_near_dups [more...] \
@@ -17,11 +19,11 @@ import argparse
 import io
 import os
 import sys
-import time
 from contextlib import redirect_stdout
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from bench import time_queries  # noqa: E402
 from crime_spark_ml_spark.plans.registry import load_all_plans  # noqa: E402
 from crime_spark_ml_spark.session import get_spark  # noqa: E402
 
@@ -41,27 +43,17 @@ def main() -> None:
     spark.read.parquet(f"{args.sf_dir}/lineitem.parquet").count()
 
     for name in args.queries:
-        spec = specs[name]
         if args.explain_dir:
             os.makedirs(args.explain_dir, exist_ok=True)
-            df = spec.fn(spark, args.sf_dir)
+            df = specs[name].fn(spark, args.sf_dir)
             buf = io.StringIO()
             with redirect_stdout(buf):
                 df.explain("formatted")
             with open(os.path.join(args.explain_dir, f"{name}.txt"), "w") as f:
                 f.write(buf.getvalue())
-        best = float("inf")
-        for _ in range(args.runs):
-            spark.sparkContext.setJobDescription(f"time: {name}")
-            t0 = time.perf_counter()
-            if args.time_build:
-                df = spec.fn(spark, args.sf_dir)
-            else:
-                df = spec.fn(spark, args.sf_dir)
-                t0 = time.perf_counter()
-            df.write.format("noop").mode("overwrite").save()
-            best = min(best, time.perf_counter() - t0)
-            spark.sparkContext.setJobDescription(None)
+        best = time_queries(
+            spark, specs, [name], args.sf_dir, args.time_build, args.runs
+        )[name]
         print(f"{name:36s} {best:.3f}s  (min of {args.runs}, sf_dir={args.sf_dir})")
 
 
