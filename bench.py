@@ -112,7 +112,12 @@ def time_ivfpq_split(spark, sf_dir: str) -> dict[str, float]:
     from pyspark.sql import functions as F
 
     from crime_spark_ml_spark.ml.ivf import suggest_k_cells
-    from crime_spark_ml_spark.ml.ivfpq import build_ivfpq, persist_ivfpq, probe_ivfpq
+    from crime_spark_ml_spark.ml.ivfpq import (
+        build_ivfpq,
+        ivfpq_topk,
+        load_ivfpq,
+        persist_ivfpq,
+    )
     from crime_spark_ml_spark.plans.datapipe import _train_fraction
     from crime_spark_ml_spark.sources.catalog import load_table
 
@@ -133,8 +138,8 @@ def time_ivfpq_split(spark, sf_dir: str) -> dict[str, float]:
             persist_ivfpq(index, path)
             best_build = min(best_build, time.perf_counter() - t0)
             t0 = time.perf_counter()
-            noop(probe_ivfpq(
-                spark, path, emb.where(F.col("vec_id") < 5), k=5,
+            noop(ivfpq_topk(
+                load_ivfpq(spark, path), emb.where(F.col("vec_id") < 5), k=5,
                 nprobe=max(1, kc // 4),
             ))
             best_probe = min(best_probe, time.perf_counter() - t0)

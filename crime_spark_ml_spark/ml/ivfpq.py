@@ -12,10 +12,12 @@ store is ``(id, codes)`` parquet partitioned by ``cid``. A probe then
      keeps its ``nprobe`` nearest cells,
   2. builds one m×k lookup table PER (query, probed cell) from the
      query's residual against that cell — kilobytes, broadcast,
-  3. reads ONLY the probed cells' files (directory-level partition
-     pruning — ``PartitionFilters`` on cid, nprobe/k of the corpus),
-  4. scores each code row with m integer LUT lookups (pure JVM
-     zip_with/aggregate — no float math per candidate, no Python),
+  3. reads ONLY the probed cells' files: on a persisted store
+     (``ivfpq_topk(load_ivfpq(spark, path), ...)``) the ``cid IN``
+     filter is directory-level partition pruning — ``PartitionFilters``
+     on cid, nprobe/k of the corpus,
+  4. scores each code row with m LUT lookups summed in double (pure
+     JVM zip_with/aggregate — m adds per candidate, no Python),
   5. takes per-query top-k with a rank window; Spark's
      WindowGroupLimit pushes the ``rank <= k`` limit below the
      exchange, so each scan partition forwards at most k candidate
@@ -46,17 +48,19 @@ from __future__ import annotations
 
 from dataclasses import dataclass
 
-import pandas as pd  # module-level: pandas_udf type hints must resolve
+import numpy as np
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..functions.vectors import l2_normalize
+from ..functions.vectors import _list_array, l2_normalize
 from ..sources.readers import local_frame
 from .pq import (
     PqModel,
     _codebook_np,
+    _dense_vectors,
     _np_l2_normalize,
-    _np_rows,
+    _np_pq_codes,
     _np_sq_dists_seq,
     train_pq,
 )
@@ -79,8 +83,6 @@ class IvfPqIndex:
 def _cent_arrays(index: IvfPqIndex):
     """(cids int64 ascending, C float64) for an index — cached numpy
     mirror when present, else one collect of the centroid relation."""
-    import numpy as np
-
     if index.cent_np is not None:
         return index.cent_cids, index.cent_np
     cents = sorted(index.centroids.collect(), key=lambda r: r.cid)
@@ -121,7 +123,7 @@ def _model_transport(spark: SparkSession, arrays: tuple):
 def _coded_frame(
     source: DataFrame, cids, C, CB, id_col: str, vec_col: str, normalize: bool
 ) -> DataFrame:
-    """(id, cid, codes) via ONE vectorized mapInPandas encode —
+    """(id, cid, codes) via ONE vectorized mapInArrow encode —
     (optional L2-normalize) → nearest-cell argmin → residual → m PQ
     codes, all in a single numpy pass per Arrow batch. This is the r9
     replacement for the interpreted Catalyst chain (argmin_cid_expr →
@@ -135,8 +137,8 @@ def _coded_frame(
     ascending; pinned in tests/test_pq.py). Shared by build / append
     / split so every path stays bit-identical by construction.
 
-    mapInPandas (a plan NODE, not an expression) rather than a
-    struct-returning pandas UDF: projection collapse can fold a struct
+    mapInArrow (a plan NODE, not an expression) rather than a
+    struct-returning Arrow UDF: projection collapse can fold a struct
     UDF's field accesses into grouping/filter expressions where
     ExtractPythonUDFs cannot place them (INTERNAL_ERROR Cannot
     evaluate). Only the projected (id, vec) columns cross the Python
@@ -147,10 +149,7 @@ def _coded_frame(
     same bytes the former folded plan literal carried); above it —
     sqrt-n cell counts at large n — they ship once via sc.broadcast
     and the closure carries only the handle."""
-    import numpy as np
     from pyspark.sql.types import ArrayType, IntegerType, StructField, StructType
-
-    from .pq import _np_pq_codes
 
     cids = np.asarray(cids, dtype=np.int64)
     if len(cids) > 1 and not (np.diff(cids) > 0).all():
@@ -167,24 +166,23 @@ def _coded_frame(
 
     def encode(batches):
         cids_, C_, CB_ = fetch()  # once per task
-        for pdf in batches:
-            mask = pdf["vec"].notna().to_numpy()
-            if not mask.any():
+        for batch in batches:
+            idx, X = _dense_vectors(batch.column(1))
+            if not len(idx):
                 continue
-            X = _np_rows(pdf["vec"][mask])
             if normalize:
                 X = _np_l2_normalize(X)
             a = _np_sq_dists_seq(X, C_).argmin(1)
-            codes = _np_pq_codes(X - C_[a], CB_)
-            yield pd.DataFrame(
-                {
-                    "id": pdf["id"][mask].reset_index(drop=True),
-                    "cid": pd.Series(cids_[a], dtype="int32"),
-                    "codes": list(codes),
-                }
+            yield pa.RecordBatch.from_arrays(
+                [
+                    batch.column(0).take(idx),
+                    pa.array(cids_[a].astype(np.int32)),
+                    _list_array(_np_pq_codes(X - C_[a], CB_)),
+                ],
+                names=["id", "cid", "codes"],
             )
 
-    return proj.mapInPandas(encode, schema)
+    return proj.mapInArrow(encode, schema)
 
 
 def build_ivfpq(
@@ -229,8 +227,6 @@ def build_ivfpq(
     sample collect). The encode is one vectorized Arrow pass
     (_encode_udf) instead of the interpreted argmin/residual/code
     expression chain; cids, residuals and codes are bit-identical."""
-    import numpy as np
-
     from .ivf import suggest_k_cells
     from .pq import _collect_train_sample_info, _fit_codebooks, _lloyd
 
@@ -285,7 +281,7 @@ def build_ivfpq(
 
 
 def _assign_residual_frame(normed: DataFrame, C) -> DataFrame:
-    """(id, cid, rvec) via one vectorized mapInPandas pass over
+    """(id, cid, rvec) via one vectorized mapInArrow pass over
     ALREADY-normalized (id, vec) rows — the over-cap training-sample
     source. Residuals are bit-identical to the former JVM
     broadcast-join + zip_with chain, so train_pq's xxhash64(rvec)
@@ -311,22 +307,21 @@ def _assign_residual_frame(normed: DataFrame, C) -> DataFrame:
 
     def assign(batches):
         (C,) = fetch()  # once per task
-        for pdf in batches:
-            mask = pdf["vec"].notna().to_numpy()
-            if not mask.any():
+        for batch in batches:
+            idx, X = _dense_vectors(batch.column(1))
+            if not len(idx):
                 continue
-            X = _np_rows(pdf["vec"][mask])
             a = _np_sq_dists_seq(X, C).argmin(1)
-            R = X - C[a]
-            yield pd.DataFrame(
-                {
-                    "id": pdf["id"][mask].reset_index(drop=True),
-                    "cid": pd.Series(a, dtype="int32"),
-                    "rvec": list(R),
-                }
+            yield pa.RecordBatch.from_arrays(
+                [
+                    batch.column(0).take(idx),
+                    pa.array(a.astype(np.int32)),
+                    _list_array(X - C[a]),
+                ],
+                names=["id", "cid", "rvec"],
             )
 
-    return normed.select("id", "vec").mapInPandas(assign, schema)
+    return normed.select("id", "vec").mapInArrow(assign, schema)
 
 
 def persist_ivfpq(index: IvfPqIndex, path: str) -> None:
@@ -380,8 +375,6 @@ def _centroids_arrow(cids, C):
     """(cid int32, cvec list<double>) pyarrow table — the centroid
     sidecar's exact parquet schema, built driver-side from the numpy
     mirror."""
-    import pyarrow as pa
-
     return pa.table(
         {
             "cid": pa.array([int(c) for c in cids], pa.int32()),
@@ -396,8 +389,6 @@ def _codebooks_arrow(CB):
     """(sub int32, code int32, cvec list<double>) pyarrow table — the
     codebook sidecar's exact parquet schema, in the same (sub, code)
     row order train_pq's relation carries."""
-    import pyarrow as pa
-
     m, k, _ = CB.shape
     return pa.table(
         {
@@ -439,8 +430,6 @@ def _write_stats(spark: SparkSession, path: str, n_base: int, n_appended: int) -
     # able to tell a cosine-format store from a pre-r8 raw-L2 one.
     # Written straight via pyarrow (same bigint/bigint/string schema
     # the former one-row DataFrame carried) — no py4j round-trip.
-    import pyarrow as pa
-
     from ..sources.writers import write_sidecar_arrow
 
     write_sidecar_arrow(
@@ -581,8 +570,6 @@ def load_ivfpq(spark: SparkSession, path: str) -> IvfPqIndex:
     rebuild normalizes any pre-schema-preserving sidecar's widened
     types. Spark's parquet reader still works on the same directories
     for any external consumer."""
-    import numpy as np
-
     from ..sources.writers import read_sidecar_rows
 
     _check_metric(path)  # refuse pre-cosine (unnormalized) stores
@@ -659,31 +646,6 @@ def _coded_schema(coded_path: str):
     raise FileNotFoundError(f"no parquet data files under {coded_path}")
 
 
-def _probe_luts(
-    index: IvfPqIndex,
-    queries: DataFrame,
-    nprobe: int,
-    id_col: str,
-    vec_col: str,
-) -> DataFrame:
-    """(query_id, cid, lut) as a LOCAL relation: for each query's
-    nprobe nearest cells, the m×k table of exact subspace distances
-    from the query's residual in that cell. Size nq·nprobe·m·k doubles
-    — always broadcastable, and therefore (r9) computed DRIVER-SIDE:
-    the former crossJoin → window → posexplode → two groupBys spent
-    four tiny shuffle stages per probe producing a kilobyte table the
-    driver derives in microseconds from one collect of the query
-    vectors (strictly smaller than the LUT table itself). Every value
-    is bit-identical: the same sequential double folds for cell
-    distances and pd entries, the same (cd, cid) tie order for the
-    probed-cell ranking (stable argsort over ascending cids), the same
-    code/sub ordering in the LUT rows. NULL query vectors are skipped
-    (the former normalize → NULL qv chain produced no joinable LUT
-    rows for them)."""
-    rows, schema = _probe_lut_rows(index, queries, nprobe, id_col, vec_col)
-    return local_frame(queries.sparkSession, rows, schema)
-
-
 # the LUT local relation must broadcast (and its query vectors collect
 # to the driver first) — cap its payload so an unbounded query frame
 # fails loudly at the contract instead of OOMing the driver/broadcast.
@@ -699,10 +661,14 @@ def _probe_lut_rows(
     id_col: str,
     vec_col: str,
 ) -> tuple[list, "object"]:
-    """(python rows, schema) behind _probe_luts — split out so
-    probe_ivfpq can derive the probed-cell IN-list from the rows
-    without collecting the local relation back (a LOCAL-relation
-    collect still costs a full py4j/analysis round-trip).
+    """(python rows, schema) of the (query_id, cid, lut) probe table:
+    for each query's nprobe nearest cells, the m×k table of exact
+    subspace distances from the query's residual in that cell. Size
+    nq·nprobe·m·k doubles — always broadcastable, so it is computed
+    DRIVER-SIDE from one collect of the query vectors (strictly smaller
+    than the LUT table itself); the rows stay python so ivfpq_topk
+    derives the probed-cell IN-list without collecting the local
+    relation back. NULL query vectors are skipped: they can never rank.
 
     r10: one vectorized numpy pass over ALL collected query vectors —
     normalize, cell distances, probed-cell selection and every m×k LUT
@@ -711,7 +677,6 @@ def _probe_lut_rows(
     fold per dimension across rows, so batching more rows changes no
     value; the probed-cell ranking keeps the same stable argsort over
     cid-ascending centroids."""
-    import numpy as np
     from pyspark.sql.types import (
         ArrayType,
         DoubleType,
@@ -815,37 +780,20 @@ def ivfpq_topk(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
-    """In-memory probe: same output schema as brute_force_topk /
-    lsh_topk / ivf_topk / pq_topk — all five are swappable."""
-    luts = _probe_luts(index, queries, nprobe, id_col, vec_col)
-    return _score_topk(index.coded, luts, k)
-
-
-def probe_ivfpq(
-    spark: SparkSession,
-    path: str,
-    queries: DataFrame,
-    k: int = 5,
-    nprobe: int = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Persisted probe — the 100 TB path: the probed cell set (at most
-    min(k_cells, nq·nprobe) ints, collected driver-side) becomes a
-    literal ``cid IN (...)`` predicate on the partitioned code store,
-    so the scan reads nprobe/k_cells of the files via directory-level
-    pruning (``PartitionFilters`` in the scan node) instead of
-    scanning the corpus and filtering."""
-    index = load_ivfpq(spark, path)
-    # r9: LUT rows are driver-computed (_probe_lut_rows), so the
-    # probed-cell IN-list comes straight off the python rows and the
-    # whole probe runs as ONE Spark job: pruned scan → broadcast LUT
-    # join → ADC → group-limited top-k window.
+    """IVFADC probe: same output schema as brute_force_topk / lsh_topk /
+    ivf_topk / pq_topk — all five are swappable. The probed cell set
+    (at most min(k_cells, nq·nprobe) ints, read off the driver-computed
+    LUT rows) becomes a literal ``cid IN (...)`` predicate on the code
+    table, so on a persisted store — ``ivfpq_topk(load_ivfpq(spark,
+    path), ...)``, the 100 TB path — the scan reads nprobe/k_cells of
+    the files via directory-level pruning (``PartitionFilters`` in the
+    scan node) instead of scanning the corpus and filtering. The whole
+    probe runs as ONE Spark job: pruned scan → broadcast LUT join →
+    ADC → group-limited top-k window."""
     rows, schema = _probe_lut_rows(index, queries, nprobe, id_col, vec_col)
-    luts = local_frame(spark, rows, schema)
+    luts = local_frame(queries.sparkSession, rows, schema)
     cells = sorted({int(r[1]) for r in rows})
-    pruned = index.coded.where(F.col("cid").isin(cells))
-    return _score_topk(pruned, luts, k)
+    return _score_topk(index.coded.where(F.col("cid").isin(cells)), luts, k)
 
 
 def exact_rerank(
@@ -904,27 +852,6 @@ def ivfpq_topk_refined(
     extra cell scans."""
     shortlist = ivfpq_topk(
         index, queries, k=k * expand, nprobe=nprobe, id_col=id_col, vec_col=vec_col
-    )
-    return exact_rerank(shortlist, corpus, queries, k, id_col, vec_col)
-
-
-def probe_ivfpq_refined(
-    spark: SparkSession,
-    path: str,
-    corpus: DataFrame,
-    queries: DataFrame,
-    k: int = 5,
-    nprobe: int = 4,
-    expand: int = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Persisted-store probe with exact re-rank: the pruned-scan ADC
-    shortlist (probe_ivfpq) followed by ``exact_rerank`` against the
-    original-vector table."""
-    shortlist = probe_ivfpq(
-        spark, path, queries, k=k * expand, nprobe=nprobe,
-        id_col=id_col, vec_col=vec_col,
     )
     return exact_rerank(shortlist, corpus, queries, k, id_col, vec_col)
 
@@ -993,8 +920,6 @@ def split_oversized_cells(
     """
     import os
     import shutil
-
-    import numpy as np
 
     from .pq import _collect_train_sample, _lloyd
 

@@ -8,7 +8,8 @@ m=8 codes (8 B/row) — a 100 TB embedding store fits hot in ~3 TB of
 executor memory. Search is asymmetric distance computation (ADC,
 Jégou et al., TPAMI 2011): per query, precompute an m×k lookup table
 of exact subspace distances, then every corpus row scores with m
-table lookups — no float math per candidate.
+table lookups summed in double — m adds per candidate, no distance
+math.
 
 Spark mapping (numpy where a fold per element would dominate, JVM
 expressions elsewhere):
@@ -37,10 +38,12 @@ from __future__ import annotations
 
 from dataclasses import dataclass
 
-import pandas as pd  # module-level: pandas_udf type hints must resolve
+import numpy as np
+import pyarrow as pa  # module-level: arrow_udf type hints must resolve
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..functions.vectors import _decode_vec_column, _list_array, seq_dot
 from ..sources.readers import local_frame
 
 
@@ -141,8 +144,6 @@ def _chunked_argmin(X, C, chunk: int = 8192):
     processed in row blocks so peak memory is O(chunk·k·d) instead of
     O(n·k·d) (~1.6 GB at the 200k-row cap). Same arithmetic per
     element as the unchunked form — assignments are bit-identical."""
-    import numpy as np
-
     out = np.empty(len(X), dtype=np.int64)
     for s in range(0, len(X), chunk):
         blk = X[s : s + chunk]
@@ -158,8 +159,6 @@ def _lloyd(X, k: int, seed: int, iters: int = 25):
     center per step — O(n·d), not O(n·k·d) with a giant temporary);
     the probabilities, and therefore the drawn centers, are identical
     to the recompute-everything form."""
-    import numpy as np
-
     rng = np.random.RandomState(seed)
     n = len(X)
     centers = [X[rng.randint(n)]]
@@ -185,8 +184,8 @@ def _lloyd(X, k: int, seed: int, iters: int = 25):
 
 
 # ----------------------------------------------------------- numpy twins
-# Vectorized (Arrow pandas-UDF) twins of the Catalyst HOF expressions
-# (kept as test references in tests/expression_refs.py).
+# Vectorized (Arrow UDF / mapInArrow) twins of the Catalyst HOF
+# expressions (kept as test references in tests/expression_refs.py).
 # The JVM higher-order functions (zip_with/aggregate/transform) are
 # CodegenFallback — every element op is an interpreted, boxed lambda
 # call, which makes the O(k_cells·dim) assignment and O(m·k·sub_dim)
@@ -199,24 +198,25 @@ def _lloyd(X, k: int, seed: int, iters: int = 25):
 # tests/test_pq.py).
 
 
-def _np_rows(series) -> "object":
-    """pandas Series of array cells → (n, dim) float64 matrix.
-    float32 → float64 is exact, matching the JVM CAST(x AS DOUBLE)."""
-    import numpy as np
-
-    return np.array([np.asarray(v, dtype=np.float64) for v in series], dtype=np.float64)
+def _dense_vectors(arr):
+    """(row indices, (n, dim) float64 matrix) of the non-NULL vectors of
+    an Arrow vector column — the input of every PQ/IVF kernel, read
+    through functions.vectors._decode_vec_column. NULL elements read as
+    NaN; vectors of different lengths in one batch raise ValueError."""
+    lens, groups = _decode_vec_column(arr)
+    if len(groups) > 1 or (groups and (lens == 0).any()):
+        raise ValueError("vectors of different lengths in one batch")
+    if groups:
+        return next(iter(groups.values()))
+    idx = np.flatnonzero(lens == 0)  # only empty (or no) vectors
+    return idx, np.zeros((len(idx), 0))
 
 
 def _np_l2_normalize(X):
     """numpy twin of functions.vectors.l2_normalize: sequential double
-    fold for the norm (acc = ((0+v0²)+v1²)+…), sqrt, elementwise
-    divide; zero-norm rows pass through unchanged. Bit-identical."""
-    import numpy as np
-
-    acc = np.zeros(len(X))
-    for i in range(X.shape[1]):
-        acc += X[:, i] * X[:, i]
-    n = np.sqrt(acc)
+    fold for the norm (seq_dot), sqrt, elementwise divide; zero-norm
+    rows pass through unchanged. Bit-identical."""
+    n = np.sqrt(seq_dot(X, X))
     out = X.copy()
     nz = n != 0.0  # NaN norms divide (NaN != 0.0), like the JVM CASE
     out[nz] = X[nz] / n[nz, None]
@@ -231,8 +231,6 @@ def _np_sq_dists_seq(X, C):
     bit-identical to the JVM zip_with/aggregate fold. (Distinct from
     _chunked_argmin, whose pairwise-summed distances define the
     TRAINING math inside _lloyd and must stay as they are.)"""
-    import numpy as np
-
     acc = np.zeros((X.shape[0], C.shape[0]))
     for i in range(X.shape[1]):
         d = X[:, i, None] - C[None, :, i]
@@ -244,8 +242,6 @@ def _codebook_np(model: PqModel):
     """model.codebooks as an (m, k, sub_dim) float64 array: the cached
     ``cb_np`` when the model carries one (train/_fit/load paths), else
     one collect of the kilobyte local relation."""
-    import numpy as np
-
     if model.cb_np is not None:
         return model.cb_np
     cb: dict[int, list] = {}
@@ -261,8 +257,6 @@ def _np_pq_codes(R, CB):
     codebook entries by the sequential fold — first minimum wins =
     lowest code on ties, the same contract as the reference
     pq_code_expr's array_min over (d, code) structs."""
-    import numpy as np
-
     m, _, sub_dim = CB.shape
     codes = np.empty((len(R), m), dtype=np.int32)
     for j in range(m):
@@ -273,55 +267,45 @@ def _np_pq_codes(R, CB):
 
 
 def pq_codes_udf(model: PqModel):
-    """Arrow pandas-UDF twin of the ``pq_code_expr`` reference
+    """Arrow UDF twin of the ``pq_code_expr`` reference
     (tests/expression_refs.py): vec → array<int> of
     m codes, bit-identical (same sequential fold, same lowest-code tie
     break), but evaluated as one numpy pass per Arrow batch instead of
     m·k interpreted HOF folds per row. NULL vectors yield NULL codes
-    (the expression form's NULL propagation)."""
-    import pandas as pd
-    from pyspark.sql.functions import pandas_udf
+    (the expression reference gives them code 0)."""
+    from pyspark.sql.functions import arrow_udf
 
     CB = _codebook_np(model)
 
-    @pandas_udf("array<int>")
-    def _codes(batch: pd.Series) -> pd.Series:
-        import numpy as np
-
-        mask = batch.notna().to_numpy()
-        out: list = [None] * len(batch)
-        if mask.any():
-            codes = _np_pq_codes(_np_rows(batch[mask]), CB)
-            for pos, row in zip(np.flatnonzero(mask), codes):
-                out[pos] = row
-        return pd.Series(out, dtype=object)
+    @arrow_udf("array<int>")
+    def _codes(vec: pa.Array) -> pa.Array:
+        idx, X = _dense_vectors(vec)
+        codes = np.zeros((len(vec), CB.shape[0]), dtype=np.int32)
+        codes[idx] = _np_pq_codes(X, CB)
+        return _list_array(codes, null=vec.is_null())
 
     return _codes
 
 
 def argmin_cid_udf(pairs: list[tuple[int, list[float]]]):
-    """Arrow pandas-UDF twin of the ``argmin_cid_expr`` reference
+    """Arrow UDF twin of the ``argmin_cid_expr`` reference
     (tests/expression_refs.py): vec → nearest
     centroid id, bit-identical (sequential fold distances; ties fall
     to the smaller cid — centroids are sorted by cid and argmin keeps
-    the first minimum). NULL vectors yield NULL."""
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql.functions import pandas_udf
+    the first minimum). NULL vectors yield NULL (the expression
+    reference gives them the first cid)."""
+    from pyspark.sql.functions import arrow_udf
 
     srt = sorted(pairs)
-    cids = np.asarray([int(c) for c, _ in srt], dtype=np.int64)
+    cids = np.asarray([int(c) for c, _ in srt], dtype=np.int32)
     C = np.asarray([[float(x) for x in cv] for _, cv in srt], dtype=np.float64)
 
-    @pandas_udf("int")
-    def _assign(batch: pd.Series) -> pd.Series:
-        mask = batch.notna().to_numpy()
-        out: list = [None] * len(batch)
-        if mask.any():
-            won = cids[_np_sq_dists_seq(_np_rows(batch[mask]), C).argmin(1)]
-            for pos, c in zip(np.flatnonzero(mask), won):
-                out[pos] = int(c)
-        return pd.Series(out, dtype=object)
+    @arrow_udf("int")
+    def _assign(vec: pa.Array) -> pa.Array:
+        idx, X = _dense_vectors(vec)
+        out = np.zeros(len(vec), dtype=np.int32)
+        out[idx] = cids[_np_sq_dists_seq(X, C).argmin(1)]
+        return pa.array(out, mask=np.asarray(vec.is_null()))
 
     return _assign
 
@@ -331,8 +315,6 @@ def _fit_codebooks(spark, X, m: int, k: int, seed: int) -> PqModel:
     sample — the driver-side half of train_pq, callable directly when
     the caller already holds the training matrix (build_ivfpq's
     driver-side residual shortcut)."""
-    import numpy as np
-
     dim = X.shape[1]
     if dim % m != 0:
         raise ValueError(f"dim {dim} not divisible by m={m}")
@@ -378,8 +360,6 @@ def train_pq(
     separate ``.first()`` probe was a full extra execution of the
     upstream plan whenever an exchange sat between source and sample
     (measured: one whole assignment pass of the IVFPQ build)."""
-    import numpy as np
-
     rows = _collect_train_sample(corpus.select(vec_col), vec_col, sample_fraction, seed)
     if not rows:
         raise ValueError("train_pq: empty training sample (empty corpus?)")
@@ -421,7 +401,6 @@ def _pq_luts_local(
     bit-identical. NULL
     query vectors are skipped (they can never rank: every lookup
     against them is undefined)."""
-    import numpy as np
     from pyspark.sql.types import ArrayType, DoubleType, StructField, StructType
 
     CB = _codebook_np(model)

@@ -33,7 +33,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from ..functions.vectors import cosine, dot, dot_arrow, norm
+from ..functions.vectors import _decode_vec_column, cosine, dot, dot_arrow, norm, seq_dot
 
 
 @lru_cache(maxsize=16)
@@ -70,69 +70,6 @@ def _np_srp_fold(X64: "np.ndarray", tables: int, planes: int) -> "np.ndarray":
     for p in range(planes):
         buckets = buckets * 2 + bits[:, p, :]
     return buckets.T  # (rows, tables)
-
-
-def _np_norm_seq(X64: "np.ndarray") -> "np.ndarray":
-    """sqrt of the sequential per-dimension x*x fold — the numpy twin
-    of functions.vectors.norm (same order, same float64 ops)."""
-    acc = np.zeros(X64.shape[0], dtype=np.float64)
-    for col in range(X64.shape[1]):
-        acc += X64[:, col] * X64[:, col]
-    return np.sqrt(acc)
-
-
-def _decode_vec_column(arr):
-    """Split an Arrow list<float> column into dense length groups.
-
-    Returns (lens, groups): lens[i] is row i's vector length, with -1
-    for a NULL vector and -2 for a vector containing NULL elements
-    (both norm/dot to NULL downstream, matching the expression forms);
-    groups maps each length d > 0 to (row_indices, (n_d, d) float64
-    block). The common shape — one uniform length, no nulls — is a
-    single zero-copy reshape of the list array's contiguous values
-    buffer (guide §4.2)."""
-    import pyarrow as pa
-
-    arr = arr.combine_chunks() if isinstance(arr, pa.ChunkedArray) else arr
-    n = len(arr)
-    flat = arr.flatten()
-    vals = flat.to_numpy(zero_copy_only=False).astype(np.float64)
-    # raw lengths as float64: NaN marks a NULL row (int32 otherwise)
-    raw = (
-        pa.compute.list_value_length(arr)
-        .to_numpy(zero_copy_only=False)
-        .astype(np.float64)
-    )
-    if arr.null_count == 0 and flat.null_count == 0:
-        lens = raw.astype(np.int64)
-        d0 = int(lens[0]) if n else 0
-        if n and d0 > 0 and (lens == d0).all():
-            return lens, {d0: (np.arange(n), vals.reshape(n, d0))}
-    else:
-        lens = np.where(np.isnan(raw), -1, np.nan_to_num(raw, nan=0)).astype(np.int64)
-        if flat.null_count:
-            # map flat-buffer null positions back to their rows
-            starts = np.zeros(n + 1, dtype=np.int64)
-            np.cumsum(np.where(lens > 0, lens, 0), out=starts[1:])
-            null_pos = np.nonzero(np.asarray(flat.is_null()))[0]
-            bad = np.unique(np.searchsorted(starts, null_pos, side="right") - 1)
-            lens[bad] = -2
-    # ragged / degenerate path: slice each row out of the flat buffer.
-    # A -2 row's elements still occupy the buffer (raw length); a NULL
-    # row occupies nothing (raw is NaN there).
-    occupied = np.nan_to_num(raw, nan=0).astype(np.int64)
-    starts = np.zeros(n + 1, dtype=np.int64)
-    np.cumsum(occupied, out=starts[1:])
-    groups: dict[int, tuple] = {}
-    for d in np.unique(lens):
-        if d <= 0:
-            continue
-        idx = np.nonzero(lens == d)[0]
-        block = np.empty((len(idx), d), dtype=np.float64)
-        for k, i in enumerate(idx):
-            block[k] = vals[starts[i] : starts[i] + d]
-        groups[int(d)] = (idx, block)
-    return lens, groups
 
 
 def _cos_from_norms(a: str, b: str, an: str, bn: str) -> F.Column:
@@ -208,7 +145,7 @@ def _lsh_bucketize_explode(
     (input row, table). Bit-identical to the reference expression
     (tests/expression_refs.sign_lsh_buckets) + norm + posexplode —
     same hyperplane weights (xxh64 twin), same sequential
-    per-dimension folds (_np_srp_fold/_np_norm_seq), pinned in
+    per-dimension folds (_np_srp_fold, functions.vectors.seq_dot), pinned in
     tests/test_datapipe.py — with the interpreted-HOF per-element cost
     (tables·planes·dim CodegenFallback ops per row, the measured
     dominant cost of every LSH consumer) replaced by ~dim numpy vector
@@ -238,12 +175,13 @@ def _lsh_bucketize_explode(
             norms = np.full(m, np.nan, dtype=np.float64)
             buckets = np.zeros((m, tables), dtype=np.int64)
             for d, (idx, X) in groups.items():
-                norms[idx] = _np_norm_seq(X)
+                norms[idx] = np.sqrt(seq_dot(X, X))
                 buckets[idx] = _np_srp_fold(X, tables, planes)
             # lens == 0: the size<1 guard buckets to 0; norm folds to 0.0.
-            # lens == -2 (null element): every plane's CASE WHEN NULL
-            # falls to ELSE 0 → bucket 0 (zeros already); norm NULL.
-            # lens == -1 (NULL vector): same bucket-0 / NULL-norm pair.
+            # lens == -2 (null element): its NaN makes every plane's
+            # fold NaN → bit 0 → bucket 0, as every plane's CASE WHEN
+            # NULL falls to ELSE 0; the norm is masked NULL below.
+            # lens == -1 (NULL vector): bucket 0 (zeros) / NULL norm.
             norms[lens == 0] = 0.0
             rep = pa.array(np.repeat(np.arange(m), tables))
             yield pa.RecordBatch.from_arrays(
@@ -348,6 +286,12 @@ def lsh_topk(
     )
 
 
+# candidate pairs scored per gathered slice in the near-dup kernel: a
+# capped bucket has up to max_bucket²/2 pairs, too many to gather as two
+# (pairs, d) float64 copies at once; a slice is 64 MiB at d = 64
+_PAIR_SLICE = 1 << 16
+
+
 def embedding_near_dups(
     corpus: DataFrame,
     threshold: float = 0.95,
@@ -419,15 +363,15 @@ def embedding_near_dups(
         dots = np.zeros(len(iu), dtype=np.float64)
         dot_null = np.ones(len(iu), dtype=bool)
         for d, (idx, X) in groups.items():
-            pos = np.full(m, -1, dtype=np.int64)
-            pos[idx] = np.arange(len(idx))
             both = (lens[iu] == d) & (lens[ju] == d)
             if not both.any():
                 continue
-            bi, bj = pos[iu[both]], pos[ju[both]]
-            acc = np.zeros(len(bi), dtype=np.float64)
-            for col in range(d):
-                acc += X[bi, col] * X[bj, col]
+            # block rows of the pair ends (idx is ascending)
+            bi, bj = np.searchsorted(idx, iu[both]), np.searchsorted(idx, ju[both])
+            acc = np.empty(len(bi), dtype=np.float64)
+            for s in range(0, len(bi), _PAIR_SLICE):
+                sl = slice(s, s + _PAIR_SLICE)
+                acc[sl] = seq_dot(X[bi[sl]], X[bj[sl]])
             dots[both] = acc
             dot_null[both] = False
         # two empty vectors: the fold over zero products is its 0.0 seed

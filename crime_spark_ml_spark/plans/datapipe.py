@@ -519,7 +519,7 @@ def dp_ann_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
     import tempfile
 
     from ..ml.ivf import suggest_k_cells
-    from ..ml.ivfpq import build_ivfpq, persist_ivfpq, probe_ivfpq
+    from ..ml.ivfpq import build_ivfpq, ivfpq_topk, load_ivfpq, persist_ivfpq
 
     emb = well_formed_embeddings(
         load_table(spark, sf_dir, "embeddings")
@@ -534,8 +534,8 @@ def dp_ann_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
     path = tempfile.mkdtemp(prefix="ivfpq_")
     try:
         persist_ivfpq(index, path)
-        result = probe_ivfpq(
-            spark, path, emb.where(F.col("vec_id") < 5), k=5, nprobe=max(1, kc // 4)
+        result = ivfpq_topk(
+            load_ivfpq(spark, path), emb.where(F.col("vec_id") < 5), k=5, nprobe=max(1, kc // 4)
         ).orderBy("query_id", "rank")
         rows = result.collect()
     finally:

@@ -486,6 +486,7 @@ def test_python_xxh64_matches_jvm_xxhash64(spark):
         assert xxh64(r.s.encode()) == r.h, r.s
 
 
+@pytest.mark.pins
 def test_arrow_lsh_kernel_matches_expressions(spark):
     """r10 pin: _lsh_bucketize_explode (one mapInArrow numpy pass) is
     bit-identical to the reference expression (expression_refs.
@@ -533,11 +534,13 @@ def test_arrow_lsh_kernel_matches_expressions(spark):
         assert key(expr) == key(kern), dtype
 
 
+@pytest.mark.pins
 def test_dot_arrow_matches_expression_dot(spark):
     """r10 pin: functions.vectors.dot_arrow (vectorized numpy fold
     behind ArrowEvalPython) is bit-identical to the zip_with/aggregate
-    expression for well-formed pairs, and NULLs out the same degenerate
-    pairs (NULL array, length mismatch)."""
+    expression, NaN elements and signed zeros included, and NULLs out
+    the same degenerate pairs (NULL array, NULL element, length
+    mismatch)."""
     import random
     import struct
 
@@ -558,6 +561,10 @@ def test_dot_arrow_matches_expression_dot(spark):
         (100, [1.0, 2.0], [1.0]),          # length mismatch -> NULL
         (101, None, [1.0, 2.0]),            # NULL array -> NULL
         (102, [], []),                      # empty fold -> 0.0
+        (103, [1.0, float("nan"), 2.0], [1.0, 1.0, 1.0]),  # NaN element -> NaN
+        (104, [1.0, None, 2.0], [1.0, 1.0, 1.0]),  # NULL element -> NULL
+        (105, [0.0, -0.0], [-0.0, 0.0]),    # signed zeros fold to +0.0
+        (106, [-0.0], [0.0]),
     ]
     df = spark.createDataFrame(rows, "id long, a array<float>, b array<float>")
     got = df.select(
@@ -569,6 +576,7 @@ def test_dot_arrow_matches_expression_dot(spark):
         assert ke == ka, (r.id, r.de, r.da)
 
 
+@pytest.mark.pins
 def test_near_dups_group_kernel_matches_legacy_join(spark):
     """r10 pin: embedding_near_dups' applyInArrow pair kernel emits
     exactly the pair set + bit-identical cos of the former
@@ -651,6 +659,7 @@ def test_near_dups_repeated_id_never_pairs_with_itself(spark):
     assert got == {(7, 9)}
 
 
+@pytest.mark.pins
 def test_minhash_arrow_kernel_matches_expressions(spark, sf_dir):
     """r10 pin: _minhash_arrow_frame (one mapInArrow pass, zero
     exchanges) is bit-identical to the explode → groupBy(min(

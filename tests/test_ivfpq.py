@@ -16,7 +16,6 @@ from crime_spark_ml_spark.ml.ivfpq import (
     load_ivfpq,
     needs_retrain,
     persist_ivfpq,
-    probe_ivfpq,
 )
 from crime_spark_ml_spark.operators.similarity import brute_force_topk
 
@@ -70,7 +69,9 @@ def test_ivfpq_persist_probe_matches_inmemory(planted_index, tmp_path):
     )
     disk = sorted(
         (r.query_id, r.rank, r.cand_id, r.adist)
-        for r in probe_ivfpq(corpus.sparkSession, path, queries, k=3, nprobe=3).collect()
+        for r in ivfpq_topk(
+            load_ivfpq(corpus.sparkSession, path), queries, k=3, nprobe=3
+        ).collect()
     )
     assert mem == disk and len(mem) > 0
     # geometry survives the round trip (self-describing sidecars)
@@ -94,8 +95,11 @@ def test_ivfpq_probe_plan_prunes_and_never_shuffles_corpus(
     corpus, index = planted_index
     path = str(tmp_path / "ivfpq_pin")
     persist_ivfpq(index, path)
-    probe = probe_ivfpq(
-        corpus.sparkSession, path, corpus.where(F.col("vec_id") < 10), k=3, nprobe=3
+    probe = ivfpq_topk(
+        load_ivfpq(corpus.sparkSession, path),
+        corpus.where(F.col("vec_id") < 10),
+        k=3,
+        nprobe=3,
     )
     plan = probe._jdf.queryExecution().executedPlan().toString()
     assert "BroadcastHashJoin" in plan, plan
@@ -159,8 +163,8 @@ def test_ivfpq_append_staleness_and_retrain_trigger(planted_index, tmp_path, spa
         assert coded[vid + 100] == coded[vid], vid
 
     # a probe surfaces the appended twin (ADC distance ~0) immediately
-    got = probe_ivfpq(
-        spark, path, corpus.where(F.col("vec_id") < 2), k=5, nprobe=4
+    got = ivfpq_topk(
+        load_ivfpq(spark, path), corpus.where(F.col("vec_id") < 2), k=5, nprobe=4
     ).collect()
     cands = {(r.query_id, r.cand_id) for r in got}
     assert (0, 100) in cands and (1, 101) in cands
@@ -183,17 +187,17 @@ def test_ivfpq_repersist_same_path_overwrites(planted_index, tmp_path):
     path = str(tmp_path / "ivfpq_twice")
     persist_ivfpq(index, path)
     queries = corpus.where(F.col("vec_id") < 5)
-    first = sorted(
-        tuple(r) for r in probe_ivfpq(corpus.sparkSession, path, queries, k=3).collect()
-    )
+
+    def probe():
+        loaded = load_ivfpq(corpus.sparkSession, path)
+        return sorted(map(tuple, ivfpq_topk(loaded, queries, k=3).collect()))
+
+    first = probe()
     persist_ivfpq(index, path)  # re-persist over the same files
     back = load_ivfpq(corpus.sparkSession, path)
     assert back.centroids.count() == 8  # not 16 from unioned stale parts
     assert back.pq.codebooks.count() == index.pq.m * index.pq.k
-    second = sorted(
-        tuple(r) for r in probe_ivfpq(corpus.sparkSession, path, queries, k=3).collect()
-    )
-    assert first == second
+    assert first == probe()
 
 
 def test_refined_subset_of_shortlist_and_dominates(planted_index, spark):
@@ -232,15 +236,15 @@ def test_refined_subset_of_shortlist_and_dominates(planted_index, spark):
 
 
 def test_refined_persisted_matches_inmemory(planted_index, tmp_path, spark):
-    from crime_spark_ml_spark.ml.ivfpq import ivfpq_topk_refined, probe_ivfpq_refined
+    from crime_spark_ml_spark.ml.ivfpq import ivfpq_topk_refined
 
     corpus, index = planted_index
     queries = corpus.where(F.col("vec_id") < 4)
     path = str(tmp_path / "refidx")
     persist_ivfpq(index, path)
     mem = ivfpq_topk_refined(index, corpus, queries, k=3, nprobe=4, expand=4)
-    disk = probe_ivfpq_refined(
-        spark, path, corpus, queries, k=3, nprobe=4, expand=4
+    disk = ivfpq_topk_refined(
+        load_ivfpq(spark, path), corpus, queries, k=3, nprobe=4, expand=4
     )
     assert sorted(map(tuple, mem.collect()), key=lambda t: (t[0], t[3])) == sorted(
         map(tuple, disk.collect()), key=lambda t: (t[0], t[3])
@@ -264,7 +268,7 @@ def test_split_oversized_cells_rebalances_and_probes_match(spark, tmp_path):
     queries = corpus.where(F.col("vec_id") < 4)
     before = {
         (r.query_id, r.rank): r.cand_id
-        for r in probe_ivfpq(spark, path, queries, k=3, nprobe=2).collect()
+        for r in ivfpq_topk(load_ivfpq(spark, path), queries, k=3, nprobe=2).collect()
     }
 
     report = split_oversized_cells(spark, path, corpus, max_rows=10, seed=0)
@@ -288,8 +292,8 @@ def test_split_oversized_cells_rebalances_and_probes_match(spark, tmp_path):
     # tests pin; probe nprobe=all cells to compare modulo routing
     after = {
         (r.query_id, r.rank): r.cand_id
-        for r in probe_ivfpq(
-            spark, path, queries, k=3, nprobe=report["k_cells"]
+        for r in ivfpq_topk(
+            load_ivfpq(spark, path), queries, k=3, nprobe=report["k_cells"]
         ).collect()
     }
     for q in {qq for qq, _ in before}:
@@ -372,7 +376,7 @@ def test_maintenance_loop_end_to_end(spark, tmp_path):
         # appended twins are probe-visible immediately, pre-retrain
         got = {
             (r.query_id, r.cand_id)
-            for r in probe_ivfpq(spark, path, queries, k=6, nprobe=8).collect()
+            for r in ivfpq_topk(load_ivfpq(spark, path), queries, k=6, nprobe=8).collect()
         }
         assert (0, 100 * i) in got, f"batch {i} twin not probe-visible"
         if needs_retrain(spark, path, max_staleness=0.25):
@@ -393,7 +397,7 @@ def test_maintenance_loop_end_to_end(spark, tmp_path):
     # twin ids are still in the store
     after = {
         (r.query_id, r.rank): r.cand_id
-        for r in probe_ivfpq(spark, path, queries, k=6, nprobe=8).collect()
+        for r in ivfpq_topk(load_ivfpq(spark, path), queries, k=6, nprobe=8).collect()
     }
     for q in range(4):
         assert after[(q, 1)] % 100 // 5 == q // 5 or after[(q, 1)] == q
@@ -411,8 +415,8 @@ def test_maintenance_loop_end_to_end(spark, tmp_path):
     assert all(n <= cap for n in after_sizes.values())
     final = {
         (r.query_id, r.rank): r.cand_id
-        for r in probe_ivfpq(
-            spark, path, queries, k=6, nprobe=report["k_cells"]
+        for r in ivfpq_topk(
+            load_ivfpq(spark, path), queries, k=6, nprobe=report["k_cells"]
         ).collect()
     }
     for q in range(4):
@@ -519,8 +523,8 @@ def test_split_normalizes_corpus_like_build(spark, tmp_path):
     queries = scaled.where(F.col("vec_id") < 4)
     got = {
         (r.query_id, r.rank): r.cand_id
-        for r in probe_ivfpq(
-            spark, path, queries, k=3, nprobe=report["k_cells"]
+        for r in ivfpq_topk(
+            load_ivfpq(spark, path), queries, k=3, nprobe=report["k_cells"]
         ).collect()
     }
     for q in range(4):

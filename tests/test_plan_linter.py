@@ -37,10 +37,14 @@ never introduce one of the forbidden nodes at larger scale).
 
 from __future__ import annotations
 
+import io
 import re
+import tokenize
+from pathlib import Path
 
 import pytest
 
+import crime_spark_ml_spark
 from crime_spark_ml_spark.plans.registry import load_all_plans
 
 from conftest import SF_SMOKE
@@ -545,3 +549,32 @@ def test_window_detector_flags_regression(spark):
     # a limit BELOW a join/agg does not bound the window input
     joined = bad.join(df.limit(5).withColumnRenamed("id", "id2"), "k")
     assert unpartitioned_unbounded_windows(plan(joined))
+
+
+# vector columns cross into numpy through the one Arrow decoder
+# (functions/vectors._decode_vec_column), never through pandas
+PANDAS_BRIDGE = {"pandas_udf", "mapInPandas", "_np_rows"}
+
+
+def pandas_bridge_names(source: str) -> list[str]:
+    """``line: name`` of each code identifier in PANDAS_BRIDGE;
+    comments and strings do not count."""
+    toks = tokenize.generate_tokens(io.StringIO(source).readline)
+    return [
+        f"{t.start[0]}: {t.string}"
+        for t in toks
+        if t.type == tokenize.NAME and t.string in PANDAS_BRIDGE
+    ]
+
+
+def test_vector_paths_have_no_pandas_bridge():
+    pkg = Path(crime_spark_ml_spark.__file__).parent
+    files = [pkg / "functions/vectors.py", pkg / "operators/similarity.py"]
+    files += sorted((pkg / "ml").glob("*.py"))
+    found = {f.name: h for f in files if (h := pandas_bridge_names(f.read_text()))}
+    assert not found, found
+
+
+def test_pandas_bridge_lint_flags_fabricated_source():
+    bad = "from m import pandas_udf\ndf.mapInPandas(f)  # mapInPandas\n'_np_rows'\nq._np_rows(b)\n"
+    assert pandas_bridge_names(bad) == ["1: pandas_udf", "2: mapInPandas", "4: _np_rows"]

@@ -122,6 +122,7 @@ def test_pq_encode_plan_is_shuffle_free(spark, sf_dir):
     assert "BatchEvalPython" not in plan, plan  # never row-at-a-time
 
 
+@pytest.mark.pins
 def test_numpy_twins_bit_identical_to_expression_forms(spark):
     """The r9 vectorized encode path (pq_codes_udf / argmin_cid_udf /
     ivfpq._coded_frame) must be BIT-identical to the Catalyst
@@ -228,6 +229,41 @@ def test_numpy_twins_bit_identical_to_expression_forms(spark):
     assert sorted((r.id, r.cid, tuple(r.codes)) for r in fused) == sorted(
         (r.id, r.cid, tuple(r.codes)) for r in chain
     )
+
+    # degenerate rows, pinned to the kernels' own outputs (the
+    # references give a NULL vector cid 0 / code 0): a NULL vector, and
+    # a NaN element — every distance NaN, the first centroid / code wins
+    degen = spark.createDataFrame(
+        [(60, None), (61, [float("nan")] + rows[0][1][1:])],
+        "vec_id long, embedding array<float>",
+    )
+    got = degen.select(
+        "vec_id",
+        argmin_cid_udf(pairs)(F.col("embedding")).alias("cid"),
+        pq_codes_udf(model)(F.col("embedding")).alias("codes"),
+    ).collect()
+    assert sorted(map(tuple, got)) == [(60, None, None), (61, 0, [0, 1])]
+    fused = _coded_frame(
+        degen, [p[0] for p in pairs], C, _codebook_np(model), "vec_id", "embedding",
+        normalize=True,
+    ).collect()
+    assert [(r.id, r.cid, r.codes) for r in fused] == [(61, 0, [0, 0])]
+
+
+def test_dense_vectors_decodes_and_rejects_ragged():
+    """Non-NULL rows as one float64 matrix, a NULL element read as NaN;
+    a batch of ragged vectors raises instead of being coded."""
+    import numpy as np
+    import pyarrow as pa
+
+    from crime_spark_ml_spark.ml.pq import _dense_vectors
+
+    idx, X = _dense_vectors(pa.array([[1.0, None], None, [3.0, 4.0]]))
+    assert idx.tolist() == [0, 2]
+    np.testing.assert_array_equal(X, [[1.0, np.nan], [3.0, 4.0]])
+    for ragged in ([[1.0, 2.0], [1.0]], [[1.0], []]):
+        with pytest.raises(ValueError, match="different lengths"):
+            _dense_vectors(pa.array(ragged))
 
 
 def test_collect_train_sample_paths(spark, monkeypatch):

@@ -41,10 +41,11 @@ from crime_spark_ml_spark.ml.ivfpq import (  # noqa: E402
     build_ivfpq,
     cell_sizes,
     ivfpq_staleness,
+    ivfpq_topk,
+    ivfpq_topk_refined,
+    load_ivfpq,
     needs_retrain,
     persist_ivfpq,
-    probe_ivfpq,
-    probe_ivfpq_refined,
     split_oversized_cells,
 )
 from crime_spark_ml_spark.session import get_spark  # noqa: E402
@@ -165,17 +166,17 @@ def main() -> int:
         return 2
     ids = [int(x) for x in args.query_ids.split(",") if x != ""]
     queries = emb.where(F.col("vec_id").isin(ids))
+    index = load_ivfpq(spark, args.index)
     if args.refine > 0:
-        top = probe_ivfpq_refined(
-            spark, args.index, emb, queries,
-            k=args.k, nprobe=args.nprobe, expand=args.refine,
+        top = ivfpq_topk_refined(
+            index, emb, queries, k=args.k, nprobe=args.nprobe, expand=args.refine
         ).orderBy("query_id", "rank")
         for r in top.collect():
             print(f"query {r.query_id}  #{r.rank}: vec {r.cand_id}  cos {r.cos}")
         return 0
-    top = probe_ivfpq(
-        spark, args.index, queries, k=args.k, nprobe=args.nprobe
-    ).orderBy("query_id", "rank")
+    top = ivfpq_topk(index, queries, k=args.k, nprobe=args.nprobe).orderBy(
+        "query_id", "rank"
+    )
     for r in top.collect():
         print(f"query {r.query_id}  #{r.rank}: vec {r.cand_id}  adist {r.adist}")
     return 0

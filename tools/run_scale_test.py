@@ -187,8 +187,9 @@ def cmd_gen(spark, args) -> None:
 def cmd_ann(spark, args) -> None:
     from crime_spark_ml_spark.ml.ivfpq import (
         build_ivfpq,
+        ivfpq_topk,
+        load_ivfpq,
         persist_ivfpq,
-        probe_ivfpq,
     )
     from crime_spark_ml_spark.plans.datapipe import _train_fraction
 
@@ -202,7 +203,9 @@ def cmd_ann(spark, args) -> None:
         emb.where(F.col("vec_id") < 4000), k_cells=8, m=8, k=16, seed=0
     )
     persist_ivfpq(widx, wpath)
-    noop(probe_ivfpq(spark, wpath, emb.where(F.col("vec_id") < 4), k=10, nprobe=2))
+    noop(ivfpq_topk(
+        load_ivfpq(spark, wpath), emb.where(F.col("vec_id") < 4), k=10, nprobe=2
+    ))
     shutil.rmtree(wpath, ignore_errors=True)
     per_size = []
     biggest_path = None
@@ -233,7 +236,7 @@ def cmd_ann(spark, args) -> None:
         )
         queries = emb.where(F.col("vec_id") < args.n_queries)
         best = best_seconds(
-            lambda: noop(probe_ivfpq(spark, path, queries, k=10, nprobe=4))
+            lambda: noop(ivfpq_topk(load_ivfpq(spark, path), queries, k=10, nprobe=4))
         )
         per_size.append(
             {
@@ -255,7 +258,9 @@ def cmd_ann(spark, args) -> None:
     queries = emb.where(F.col("vec_id") < args.n_queries)
     for np_ in nprobes:
         best = best_seconds(
-            lambda: noop(probe_ivfpq(spark, biggest_path, queries, k=10, nprobe=np_))
+            lambda: noop(
+                ivfpq_topk(load_ivfpq(spark, biggest_path), queries, k=10, nprobe=np_)
+            )
         )
         nprobe_sweep.append({"nprobe": np_, "probe_sec": round(best, 2)})
         print(f"[scale][ann] nprobe={np_} {nprobe_sweep[-1]}")
@@ -279,8 +284,8 @@ def cmd_recall(spark, args) -> None:
     recall/cost TRADE-OFF so an operator choosing nprobe at 100 TB has
     a curve, not a bound. Ground truth is brute-force exact-cosine
     top-10; the measured path is the DEPLOYMENT path,
-    probe_ivfpq_refined (pruned ADC shortlist at k*expand, then exact-
-    cosine re-rank) — the raw ADC shortlist alone scores a DIFFERENT
+    ivfpq_topk_refined over the loaded store (pruned ADC shortlist at
+    k*expand, then exact-cosine re-rank) — the raw ADC shortlist alone scores a DIFFERENT
     metric (L2 on quantized residuals), and on this synthetic fixture
     (dense same-center clusters where both metrics rank by noise) its
     direct top-10 overlap with cosine truth is statistically ~random
@@ -289,8 +294,9 @@ def cmd_recall(spark, args) -> None:
     Recall joins the refined top-10 against truth entirely Spark-side."""
     from crime_spark_ml_spark.ml.ivfpq import (
         build_ivfpq,
+        ivfpq_topk_refined,
+        load_ivfpq,
         persist_ivfpq,
-        probe_ivfpq_refined,
     )
     from crime_spark_ml_spark.operators.similarity import brute_force_topk
     from crime_spark_ml_spark.plans.datapipe import _train_fraction
@@ -318,8 +324,8 @@ def cmd_recall(spark, args) -> None:
         n_truth = exact.count()
         def point(np_, expand):
             t0 = time.perf_counter()
-            approx = probe_ivfpq_refined(
-                spark, path, corpus, queries, k=k, nprobe=np_, expand=expand
+            approx = ivfpq_topk_refined(
+                load_ivfpq(spark, path), corpus, queries, k=k, nprobe=np_, expand=expand
             )
             hits = approx.join(exact, ["query_id", "cand_id"]).count()
             return {
