@@ -4,13 +4,15 @@ coarse-quantizer scale path promised alongside SRP-LSH
 
 Build: k centroids (driver-side seeded Lloyd's on a bounded sample —
 the model is kilobytes) partition the corpus into cells; each vector
-is assigned once by a zero-shuffle literal-argmin map.
+is assigned once by a zero-shuffle narrow map (pq.argmin_cid_udf, one
+numpy pass per Arrow batch).
 Search: a query scores only the vectors in its ``nprobe`` nearest
 cells — corpus scanned ∝ nprobe/k instead of 1.0 — then exact cosine
 re-ranks the candidates.
 
-Everything is DataFrame ops: the centroid table is tiny (k×dim) and
-broadcast; the candidate join shuffles only (cell_id, vector) pairs.
+The fitted model is two numpy arrays, ``cids`` and ``C`` (k×dim,
+kilobytes); a probe broadcasts them as a local centroid relation, and
+the candidate join shuffles only (cell_id, vector) pairs.
 At 100 TB you'd persist ``assign`` partitioned by cell_id so a probe
 prunes partitions instead of scanning.
 """
@@ -19,6 +21,8 @@ from __future__ import annotations
 
 from dataclasses import dataclass
 
+import numpy as np
+import pyarrow as pa
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -45,8 +49,42 @@ def suggest_k_cells(n_vectors: int, min_cells: int = 16, max_cells: int = 1 << 2
 
 @dataclass
 class IvfIndex:
-    centroids: DataFrame  # cid int, cvec array<double>
-    assigned: DataFrame  # id, vec, cid
+    """A fitted IVF index: centroid ``C[i]`` (float64, k×dim) has id
+    ``cids[i]`` (int64, ascending), and ``assigned`` is the (id, vec,
+    cid) corpus table."""
+
+    cids: np.ndarray
+    C: np.ndarray
+    assigned: DataFrame
+
+
+def write_centroids(cids, C, dest: str) -> None:
+    """The centroid sidecar of an IVF or IVF×PQ store: one (cid int32,
+    cvec list<double>) parquet row per cell, written driver-side
+    (sources/writers.write_sidecar_arrow)."""
+    from ..sources.writers import write_sidecar_arrow
+
+    write_sidecar_arrow(
+        pa.table(
+            {
+                "cid": pa.array([int(c) for c in cids], pa.int32()),
+                "cvec": pa.array(np.asarray(C).tolist(), pa.list_(pa.float64())),
+            }
+        ),
+        dest,
+    )
+
+
+def read_centroids(src: str):
+    """(cids int64 ascending, C float64) from a centroid sidecar —
+    driver-side pyarrow, no Spark job."""
+    from ..sources.writers import read_sidecar_rows
+
+    rows = sorted(read_sidecar_rows(src), key=lambda r: int(r["cid"]))
+    return (
+        np.asarray([int(r["cid"]) for r in rows], dtype=np.int64),
+        np.asarray([[float(x) for x in r["cvec"]] for r in rows], dtype=np.float64),
+    )
 
 
 def build_ivf(
@@ -68,8 +106,6 @@ def build_ivf(
     (same sequential fold, same smallest-cid tie break).
     ``sample_fraction`` bounds the fit; with none given, corpora above
     the row cap are automatically down-sampled to it."""
-    import numpy as np
-
     from .pq import _collect_train_sample, _lloyd, argmin_cid_udf
 
     sc = corpus.sparkSession.sparkContext
@@ -82,16 +118,9 @@ def build_ivf(
         vecs = vecs.repartition(sc.defaultParallelism)
     rows = _collect_train_sample(vecs.select("vec"), "vec", sample_fraction, seed)
     X = np.asarray(sorted(tuple(r.vec) for r in rows), dtype=np.float64)
-    C = _lloyd(X, k, seed)
-    spark = corpus.sparkSession
-    centroids = local_frame(
-        spark,
-        [(i, [float(x) for x in C[i]]) for i in range(k)],
-        "cid int, cvec array<double>",
-    )
-    assign = argmin_cid_udf([(i, [float(x) for x in C[i]]) for i in range(k)])
-    assigned = vecs.withColumn("cid", assign(F.col("vec")))
-    return IvfIndex(centroids=centroids, assigned=assigned)
+    cids, C = np.arange(k, dtype=np.int64), _lloyd(X, k, seed)
+    assigned = vecs.withColumn("cid", argmin_cid_udf(cids, C)(F.col("vec")))
+    return IvfIndex(cids=cids, C=C, assigned=assigned)
 
 
 def ivf_topk(
@@ -104,10 +133,16 @@ def ivf_topk(
 ) -> DataFrame:
     """Approximate top-k: probe the nprobe closest cells per query,
     exact-cosine re-rank inside them. Same output schema as
-    brute_force_topk/lsh_topk — the three are swappable."""
+    brute_force_topk/lsh_topk — the three are swappable. The centroid
+    arrays broadcast as a local (cid, cvec) relation built here."""
     q = queries.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("qe"))
+    centroids = local_frame(
+        queries.sparkSession,
+        list(zip(index.cids.tolist(), index.C.tolist())),
+        "cid int, cvec array<double>",
+    )
     probed = (
-        q.crossJoin(F.broadcast(index.centroids))
+        q.crossJoin(F.broadcast(centroids))
         .withColumn("sim", cosine("qe", "cvec"))
         .withColumn(
             "crank",
@@ -137,28 +172,15 @@ def persist_ivf(index: IvfIndex, path: str) -> None:
     via partition PRUNING (directory-level skip, visible as
     PartitionFilters in the scan), instead of scanning the corpus and
     filtering. Centroids are a single tiny file next to it."""
-    from ..sources.writers import write_sidecar
-
     index.assigned.write.mode("overwrite").partitionBy("cid").parquet(f"{path}/assigned")
-    write_sidecar(index.centroids, f"{path}/centroids")
+    write_centroids(index.cids, index.C, f"{path}/centroids")
 
 
 def load_ivf(spark, path: str) -> IvfIndex:
-    """Centroids load driver-side into a LOCAL relation (zero Spark
-    jobs for a kilobyte model table — see load_ivfpq); the assigned
-    corpus stays a distributed parquet read."""
-    from ..sources.writers import read_sidecar_rows
-
+    """Centroids load driver-side (zero Spark jobs for a kilobyte model
+    table); the assigned corpus stays a distributed parquet read."""
     assigned = spark.read.parquet(f"{path}/assigned").select(
         "id", "vec", F.col("cid").cast("int").alias("cid")
     )
-    centroids = local_frame(
-        spark,
-        [
-            (int(r["cid"]), [float(x) for x in r["cvec"]])
-            for r in read_sidecar_rows(f"{path}/centroids")
-        ],
-        "cid int, cvec array<double>",
-    )
-    return IvfIndex(centroids=centroids, assigned=assigned)
-
+    cids, C = read_centroids(f"{path}/centroids")
+    return IvfIndex(cids=cids, C=C, assigned=assigned)

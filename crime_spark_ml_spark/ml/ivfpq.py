@@ -8,10 +8,12 @@ The composition is the classic IVFADC layout (Jégou et al., TPAMI
 quantizes the RESIDUAL (vector − cell centroid) into m codes, and the
 store is ``(id, codes)`` parquet partitioned by ``cid``. A probe then
 
-  1. scores the query against the broadcast k×dim centroid table and
-     keeps its ``nprobe`` nearest cells,
+  1. ranks the cells for each query on the driver in numpy (sequential
+     fold squared distances to the k×dim centroid array) and keeps its
+     ``nprobe`` nearest,
   2. builds one m×k lookup table PER (query, probed cell) from the
-     query's residual against that cell — kilobytes, broadcast,
+     query's residual against that cell, in the same numpy pass —
+     kilobytes, broadcast,
   3. reads ONLY the probed cells' files: on a persisted store
      (``ivfpq_topk(load_ivfpq(spark, path), ...)``) the ``cid IN``
      filter is directory-level partition pruning — ``PartitionFilters``
@@ -55,43 +57,33 @@ from pyspark.sql import functions as F
 
 from ..functions.vectors import _list_array, l2_normalize
 from ..sources.readers import local_frame
+from ..sources.writers import read_sidecar_rows, write_sidecar_arrow
+from .ivf import read_centroids, write_centroids
 from .pq import (
     PqModel,
-    _codebook_np,
+    _adc_topk,
+    _ascending_cids,
     _dense_vectors,
+    _lut_schema,
     _np_l2_normalize,
+    _np_luts,
     _np_pq_codes,
     _np_sq_dists_seq,
+    _query_matrix,
     train_pq,
 )
 
 
 @dataclass
 class IvfPqIndex:
-    centroids: DataFrame  # cid int, cvec array<double>
-    pq: PqModel  # codebooks fit on residuals
-    coded: DataFrame  # id, codes array<int>, cid
-    # numpy mirror of the centroid table (cids sorted ascending, row i
-    # of cent_np ↔ cent_cids[i]), carried so probes/appends/splits
-    # never re-collect the kilobyte local relation (~0.4 s py4j
-    # round-trip each). None on hand-built indexes; _cent_arrays falls
-    # back to one collect then.
-    cent_cids: object = None
-    cent_np: object = None
+    """A fitted IVF×PQ index: centroid ``C[i]`` (float64, k_cells×dim)
+    has id ``cids[i]`` (int64, ascending), ``pq`` codes the residuals,
+    and ``coded`` is the (id, codes array<int>, cid) code table."""
 
-
-def _cent_arrays(index: IvfPqIndex):
-    """(cids int64 ascending, C float64) for an index — cached numpy
-    mirror when present, else one collect of the centroid relation."""
-    if index.cent_np is not None:
-        return index.cent_cids, index.cent_np
-    cents = sorted(index.centroids.collect(), key=lambda r: r.cid)
-    if not cents:
-        raise ValueError("index has no centroids")
-    return (
-        np.asarray([int(r.cid) for r in cents], dtype=np.int64),
-        np.asarray([[float(x) for x in r.cvec] for r in cents], dtype=np.float64),
-    )
+    cids: np.ndarray
+    C: np.ndarray
+    pq: PqModel
+    coded: DataFrame
 
 
 # model arrays above this many bytes ship to tasks via sc.broadcast
@@ -151,9 +143,7 @@ def _coded_frame(
     and the closure carries only the handle."""
     from pyspark.sql.types import ArrayType, IntegerType, StructField, StructType
 
-    cids = np.asarray(cids, dtype=np.int64)
-    if len(cids) > 1 and not (np.diff(cids) > 0).all():
-        raise ValueError("cids must be sorted ascending (argmin tie contract)")
+    cids = _ascending_cids(cids)
     proj = source.select(F.col(id_col).alias("id"), F.col(vec_col).alias("vec"))
     schema = StructType(
         [
@@ -232,7 +222,6 @@ def build_ivfpq(
 
     if k_cells is None:
         k_cells = suggest_k_cells(corpus.count())
-    spark = corpus.sparkSession
     normed = corpus.select(
         F.col(id_col).alias("id"), l2_normalize(vec_col).alias("vec")
     )
@@ -240,12 +229,7 @@ def build_ivfpq(
         normed.select("vec"), "vec", train_fraction, seed
     )
     Xs = np.asarray(sorted(tuple(r.vec) for r in sample), dtype=np.float64)
-    C = _lloyd(Xs, k_cells, seed)
-    centroids = local_frame(
-        spark,
-        [(i, [float(x) for x in C[i]]) for i in range(k_cells)],
-        "cid int, cvec array<double>",
-    )
+    cids, C = np.arange(k_cells, dtype=np.int64), _lloyd(Xs, k_cells, seed)
     if covers_all:
         # the sample IS the corpus: residuals for PQ training derive
         # driver-side (same sequential-fold argmin, same subtraction —
@@ -253,7 +237,7 @@ def build_ivfpq(
         V = np.asarray([tuple(r.vec) for r in sample], dtype=np.float64)
         a = _np_sq_dists_seq(V, C).argmin(1)
         Xr = np.asarray(sorted(map(tuple, V - C[a])), dtype=np.float64)
-        pq = _fit_codebooks(spark, Xr, m=m, k=k, seed=seed)
+        pq = _fit_codebooks(Xr, m=m, k=k, seed=seed)
     else:
         # over-cap corpus: train_pq's hash sampler must see the full
         # residual table (content-keyed on rvec, layout-independent) —
@@ -262,22 +246,8 @@ def build_ivfpq(
         pq = train_pq(
             res, m=m, k=k, seed=seed, vec_col="rvec", sample_fraction=train_fraction
         )
-    coded = _coded_frame(
-        corpus,
-        list(range(k_cells)),
-        C,
-        _codebook_np(pq),
-        id_col,
-        vec_col,
-        normalize=True,
-    )
-    return IvfPqIndex(
-        centroids=centroids,
-        pq=pq,
-        coded=coded,
-        cent_cids=np.arange(k_cells, dtype=np.int64),
-        cent_np=C,
-    )
+    coded = _coded_frame(corpus, cids, C, pq.CB, id_col, vec_col, normalize=True)
+    return IvfPqIndex(cids=cids, C=C, pq=pq, coded=coded)
 
 
 def _assign_residual_frame(normed: DataFrame, C) -> DataFrame:
@@ -327,11 +297,10 @@ def _assign_residual_frame(normed: DataFrame, C) -> DataFrame:
 def persist_ivfpq(index: IvfPqIndex, path: str) -> None:
     """Cell-partitioned code store + tiny sidecar tables. The code
     table is ~m bytes of payload per row (vs 8·dim for floats); the
-    centroid/codebook sidecars are kilobytes, written driver-side
-    (sources/writers.write_sidecar — a Spark write job on a kilobyte
-    local relation costs seconds of pure overhead)."""
-    from ..sources.writers import write_sidecar
-
+    centroid/codebook sidecars are kilobytes, written driver-side from
+    the model arrays (ivf.write_centroids, writers.write_sidecar_arrow
+    — a Spark write job on a kilobyte table costs seconds of pure
+    overhead)."""
     # repartition by cid before the partitioned write: without it every
     # input split emits a file into every cell directory — input_splits
     # × k_cells files (measured 64 vs 16 on the fixture; at cluster
@@ -342,23 +311,8 @@ def persist_ivfpq(index: IvfPqIndex, path: str) -> None:
     index.coded.repartition("cid").write.mode("overwrite").partitionBy(
         "cid"
     ).parquet(f"{path}/coded")
-    # sidecars straight from the numpy model mirrors when the index
-    # carries them (build/load paths) — the DataFrame fallback's
-    # toArrow costs a py4j round-trip per kilobyte table; same parquet
-    # schema either way (int32 ids, float64 vectors)
-    if index.cent_cids is not None:
-        from ..sources.writers import write_sidecar_arrow
-
-        write_sidecar_arrow(_centroids_arrow(index.cent_cids, index.cent_np),
-                            f"{path}/centroids")
-    else:
-        write_sidecar(index.centroids, f"{path}/centroids")
-    if index.pq.cb_np is not None:
-        from ..sources.writers import write_sidecar_arrow
-
-        write_sidecar_arrow(_codebooks_arrow(index.pq.cb_np), f"{path}/codebooks")
-    else:
-        write_sidecar(index.pq.codebooks, f"{path}/codebooks")
+    write_centroids(index.cids, index.C, f"{path}/centroids")
+    write_sidecar_arrow(_codebooks_arrow(index.pq.CB), f"{path}/codebooks")
     # staleness bookkeeping: n_base from the written files' parquet
     # FOOTERS, read driver-side via pyarrow — zero Spark jobs (the
     # former Spark read-back count was one scheduler round-trip per
@@ -369,20 +323,6 @@ def persist_ivfpq(index: IvfPqIndex, path: str) -> None:
     # sidecars already carry (write_sidecar).
     spark = index.coded.sparkSession
     _write_stats(spark, path, n_base=_count_parquet_rows(f"{path}/coded"), n_appended=0)
-
-
-def _centroids_arrow(cids, C):
-    """(cid int32, cvec list<double>) pyarrow table — the centroid
-    sidecar's exact parquet schema, built driver-side from the numpy
-    mirror."""
-    return pa.table(
-        {
-            "cid": pa.array([int(c) for c in cids], pa.int32()),
-            "cvec": pa.array(
-                [[float(x) for x in row] for row in C], pa.list_(pa.float64())
-            ),
-        }
-    )
 
 
 def _codebooks_arrow(CB):
@@ -430,8 +370,6 @@ def _write_stats(spark: SparkSession, path: str, n_base: int, n_appended: int) -
     # able to tell a cosine-format store from a pre-r8 raw-L2 one.
     # Written straight via pyarrow (same bigint/bigint/string schema
     # the former one-row DataFrame carried) — no py4j round-trip.
-    from ..sources.writers import write_sidecar_arrow
-
     write_sidecar_arrow(
         pa.table(
             {
@@ -452,8 +390,6 @@ def _check_metric(path: str) -> None:
     exists to prevent. Missing sidecar or missing/mismatched marker →
     rebuild with build_ivfpq + persist_ivfpq."""
     import os
-
-    from ..sources.writers import read_sidecar_rows
 
     if not os.path.exists(f"{path}/stats"):
         raise ValueError(
@@ -480,8 +416,6 @@ def ivfpq_staleness(spark: SparkSession, path: str) -> dict:
     the retrain signal. Indexes persisted before stats existed read as
     fresh (n_base = current count, n_appended = 0)."""
     import os
-
-    from ..sources.writers import read_sidecar_rows
 
     if os.path.exists(f"{path}/stats"):
         row = read_sidecar_rows(f"{path}/stats")[0]  # driver-side, no job
@@ -516,19 +450,16 @@ def append_ivfpq(
     store needs beyond build-once: encode NEW vectors with the
     PERSISTED quantizers (no retrain) and append them to their cells.
 
-    Same shape as the build path: assignment is a zero-shuffle
-    literal-argmin over the k collected centroids (kilobytes), the
-    residual PQ encode is a narrow map, and the write appends only the
-    touched cid partition directories — existing files are never
-    rewritten, and probes pick the new rows up on their next pruned
-    scan with no index-wide operation. Id uniqueness is the caller's
+    Same shape as the build path: assignment against the persisted
+    centroids and the residual PQ encode are one zero-shuffle narrow
+    map, and the write appends only the touched cid partition
+    directories — existing files are never rewritten, and probes pick
+    the new rows up on their next pruned scan with no index-wide
+    operation. Id uniqueness is the caller's
     contract (append does not dedup against the store). Returns the
     updated staleness dict; check ``needs_retrain`` (or the returned
     staleness) to schedule a full rebuild."""
     index = load_ivfpq(spark, path)
-    cids, C = _cent_arrays(index)  # numpy mirror, no local collect
-    if len(cids) == 0:
-        raise ValueError(f"no centroids at {path}/centroids — not an IVFPQ index")
     before = ivfpq_staleness(spark, path)
     # one vectorized encode pass — same cosine normalization, same
     # argmin/residual/code math as the build path (_coded_frame is the
@@ -537,13 +468,7 @@ def append_ivfpq(
     # through the sorted cid list, preserving the smallest-cid tie
     # break.
     coded_new = _coded_frame(
-        new_vectors,
-        cids,
-        C,
-        _codebook_np(index.pq),
-        id_col,
-        vec_col,
-        normalize=True,
+        new_vectors, index.cids, index.C, index.pq.CB, id_col, vec_col, normalize=True
     )
     # same file-per-cell organization shuffle as persist_ivfpq
     coded_new.repartition("cid").write.mode("append").partitionBy("cid").parquet(
@@ -562,16 +487,11 @@ def load_ivfpq(spark: SparkSession, path: str) -> IvfPqIndex:
     """Model geometry (m, k, sub_dim) is derived from the codebook
     table itself, so the parquet layout is self-describing.
 
-    The sidecars are read DRIVER-SIDE (read_sidecar_rows — pyarrow,
-    milliseconds, zero Spark jobs) and rebuilt as LOCAL relations: a
-    probe's latency path pays no scheduler round-trips for kilobyte
-    model tables, the geometry derivation is plain Python instead of
-    an aggregation job per load, and the explicit python-int/float
-    rebuild normalizes any pre-schema-preserving sidecar's widened
-    types. Spark's parquet reader still works on the same directories
-    for any external consumer."""
-    from ..sources.writers import read_sidecar_rows
-
+    The sidecars are read DRIVER-SIDE (pyarrow, milliseconds, zero
+    Spark jobs) straight into the model arrays: a probe's latency path
+    pays no scheduler round-trips for kilobyte model tables. Spark's
+    parquet reader still works on the same directories for any
+    external consumer."""
     _check_metric(path)  # refuse pre-cosine (unnormalized) stores
     # explicit read schema from ONE data file's footer (driver-side
     # pyarrow) — skips Spark's schema-inference pass over the store on
@@ -580,49 +500,15 @@ def load_ivfpq(spark: SparkSession, path: str) -> IvfPqIndex:
     coded = spark.read.schema(_coded_schema(f"{path}/coded")).parquet(
         f"{path}/coded"
     ).select("id", "codes", "cid")
-    cent_rows = read_sidecar_rows(f"{path}/centroids")
+    cids, C = read_centroids(f"{path}/centroids")
     cb_rows = read_sidecar_rows(f"{path}/codebooks")
-    if not cent_rows or not cb_rows:
+    if not len(cids) or not cb_rows:
         raise ValueError(f"empty centroid/codebook sidecars at {path}")
-    centroids = local_frame(
-        spark,
-        [(int(r["cid"]), [float(x) for x in r["cvec"]]) for r in cent_rows],
-        "cid int, cvec array<double>",
+    cb_rows.sort(key=lambda r: (r["sub"], r["code"]))
+    CB = np.asarray([r["cvec"] for r in cb_rows], dtype=np.float64).reshape(
+        cb_rows[-1]["sub"] + 1, cb_rows[-1]["code"] + 1, -1
     )
-    codebooks = local_frame(
-        spark,
-        [
-            (int(r["sub"]), int(r["code"]), [float(x) for x in r["cvec"]])
-            for r in cb_rows
-        ],
-        "sub int, code int, cvec array<double>",
-    )
-    m = max(r["sub"] for r in cb_rows) + 1
-    k = max(r["code"] for r in cb_rows) + 1
-    cb: dict[int, list] = {}
-    for r in cb_rows:
-        cb.setdefault(int(r["sub"]), [None] * k)[int(r["code"])] = [
-            float(x) for x in r["cvec"]
-        ]
-    pq = PqModel(
-        codebooks=codebooks,
-        m=m,
-        k=k,
-        sub_dim=max(len(r["cvec"]) for r in cb_rows),
-        cb_np=np.asarray(
-            [[cb[j][c] for c in range(k)] for j in range(m)], dtype=np.float64
-        ),
-    )
-    srt = sorted(cent_rows, key=lambda r: int(r["cid"]))
-    return IvfPqIndex(
-        centroids=centroids,
-        pq=pq,
-        coded=coded,
-        cent_cids=np.asarray([int(r["cid"]) for r in srt], dtype=np.int64),
-        cent_np=np.asarray(
-            [[float(x) for x in r["cvec"]] for r in srt], dtype=np.float64
-        ),
-    )
+    return IvfPqIndex(cids=cids, C=C, pq=PqModel(CB), coded=coded)
 
 
 def _coded_schema(coded_path: str):
@@ -670,39 +556,21 @@ def _probe_lut_rows(
     derives the probed-cell IN-list without collecting the local
     relation back. NULL query vectors are skipped: they can never rank.
 
-    r10: one vectorized numpy pass over ALL collected query vectors —
+    One vectorized numpy pass over ALL collected query vectors —
     normalize, cell distances, probed-cell selection and every m×k LUT
-    are batched — instead of a pure-python loop per (query, cell, sub).
-    Bit-identity is by construction: _np_l2_normalize/_np_sq_dists_seq
-    fold per dimension across rows, so batching more rows changes no
-    value; the probed-cell ranking keeps the same stable argsort over
-    cid-ascending centroids."""
-    from pyspark.sql.types import (
-        ArrayType,
-        DoubleType,
-        IntegerType,
-        StructField,
-        StructType,
-    )
+    are batched. Bit-identity is by construction:
+    _np_l2_normalize/_np_sq_dists_seq fold per dimension across rows,
+    so batching more rows changes no value; the probed-cell ranking
+    keeps the same stable argsort over cid-ascending centroids."""
+    from pyspark.sql.types import IntegerType
 
-    cids, C = _cent_arrays(index)
-    CB = _codebook_np(index.pq)
-    m, kk, sub_dim = CB.shape
-    q_rows = queries.select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("qv")
-    ).collect()
-    schema = StructType(
-        [
-            StructField("query_id", queries.schema[id_col].dataType),
-            StructField("cid", IntegerType()),
-            StructField("lut", ArrayType(ArrayType(DoubleType()))),
-        ]
-    )
-    q_rows = [r for r in q_rows if r.qv is not None]
-    if not q_rows:
+    m, kk, _ = index.pq.CB.shape
+    qids, Q = _query_matrix(queries, id_col, vec_col)
+    schema = _lut_schema(queries, id_col, ("cid", IntegerType()))
+    nq = len(qids)
+    if not nq:
         return [], schema
-    nq = len(q_rows)
-    lut_bytes = nq * min(nprobe, len(cids)) * m * kk * 8
+    lut_bytes = nq * min(nprobe, len(index.cids)) * m * kk * 8
     if lut_bytes > _PROBE_LUT_CAP_BYTES:
         raise ValueError(
             f"probe LUT would be {lut_bytes >> 20} MiB "
@@ -710,66 +578,20 @@ def _probe_lut_rows(
             f"the {_PROBE_LUT_CAP_BYTES >> 20} MiB broadcast contract; "
             f"probe in smaller query batches"
         )
-    Q = _np_l2_normalize(
-        np.asarray([[float(x) for x in r.qv] for r in q_rows], dtype=np.float64)
-    )
-    cd = _np_sq_dists_seq(Q, C)  # (nq, k_cells)
+    Q = _np_l2_normalize(Q)
+    cd = _np_sq_dists_seq(Q, index.C)  # (nq, k_cells)
     # row_number orderBy(cd, cid): stable sort over cid-ascending
     # centroids keeps the smaller cid on equal distances
     npb = min(nprobe, cd.shape[1])
     sel = np.argsort(cd, axis=1, kind="stable")[:, :npb]  # (nq, npb)
-    QR = Q[:, None, :] - C[sel]  # (nq, npb, dim) residuals
-    flat = QR.reshape(nq * npb, -1)
-    # one batched sq-dist fold per subspace: (nq·npb, k) each
-    luts = np.stack(
-        [
-            _np_sq_dists_seq(flat[:, j * sub_dim : (j + 1) * sub_dim], CB[j])
-            for j in range(m)
-        ],
-        axis=1,
-    )  # (nq·npb, m, k)
-    out = []
-    for qi in range(nq):
-        qid = q_rows[qi].query_id
-        for pi in range(npb):
-            out.append(
-                (
-                    qid,
-                    int(cids[sel[qi, pi]]),
-                    luts[qi * npb + pi].tolist(),
-                )
-            )
-    return out, schema
-
-
-def _score_topk(coded: DataFrame, luts: DataFrame, k: int) -> DataFrame:
-    """Broadcast-join the (query, cell) LUTs onto the code table on cid
-    — the IVF scan — and rank by the ADC distance sum."""
-    scored = (
-        coded.join(F.broadcast(luts), "cid")
-        .where(F.col("id") != F.col("query_id"))
-        .withColumn(
-            "adist",
-            F.round(
-                F.aggregate(
-                    F.zip_with(
-                        "codes",
-                        "lut",
-                        lambda c, row: F.element_at(row, c.cast("int") + F.lit(1)),
-                    ),
-                    F.lit(0.0),
-                    lambda acc, x: acc + x,
-                ),
-                6,
-            ),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy("adist", "id")
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", F.col("id").alias("cand_id"), "adist", "rank")
-    )
+    QR = Q[:, None, :] - index.C[sel]  # (nq, npb, dim) residuals
+    luts = _np_luts(QR.reshape(nq * npb, -1), index.pq.CB).tolist()
+    cells = index.cids[sel].tolist()
+    return [
+        (qids[qi], cells[qi][pi], luts[qi * npb + pi])
+        for qi in range(nq)
+        for pi in range(npb)
+    ], schema
 
 
 def ivfpq_topk(
@@ -788,12 +610,13 @@ def ivfpq_topk(
     path), ...)``, the 100 TB path — the scan reads nprobe/k_cells of
     the files via directory-level pruning (``PartitionFilters`` in the
     scan node) instead of scanning the corpus and filtering. The whole
-    probe runs as ONE Spark job: pruned scan → broadcast LUT join →
-    ADC → group-limited top-k window."""
+    probe runs as ONE Spark job: pruned scan → broadcast LUT join on
+    cid → ADC (pq._adc_topk) → group-limited top-k window."""
     rows, schema = _probe_lut_rows(index, queries, nprobe, id_col, vec_col)
     luts = local_frame(queries.sparkSession, rows, schema)
     cells = sorted({int(r[1]) for r in rows})
-    return _score_topk(index.coded.where(F.col("cid").isin(cells)), luts, k)
+    coded = index.coded.where(F.col("cid").isin(cells))
+    return _adc_topk(coded.join(F.broadcast(luts), "cid"), k)
 
 
 def exact_rerank(
@@ -888,7 +711,7 @@ def split_oversized_cells(
     4x max/p50 tail at 64 cells; a probe landing in a fat cell scans
     that multiple of the median). Each fat cell gets a seeded 2-means
     on a bounded driver-side sample of ITS vectors, its members are
-    re-assigned by literal argmin and re-encoded as residuals against
+    re-assigned to the nearer child and re-encoded as residuals against
     their new centroid with the UNCHANGED global PQ codebooks, and the
     store gains two fresh cid partitions.
 
@@ -926,12 +749,8 @@ def split_oversized_cells(
     if max_rows < 2:
         raise ValueError(f"max_rows must be >= 2, got {max_rows}")
     index = load_ivfpq(spark, path)
-    CB = _codebook_np(index.pq)  # global PQ codebooks, unchanged by splits
     sizes = cell_sizes(spark, path)
-    all_cids, all_C = _cent_arrays(index)  # numpy mirror, no local collect
-    centroid_map = {
-        int(c): [float(x) for x in v] for c, v in zip(all_cids, all_C)
-    }
+    centroid_map = dict(zip(index.cids.tolist(), index.C))
     # same cosine-metric normalization as build/append/probe: split
     # cells get 2-means centroids and PQ residuals on the SAME unit
     # sphere the quantizers were fit on — without this, probes route
@@ -972,15 +791,13 @@ def split_oversized_cells(
         C2 = _lloyd(X, 2, seed)
         cid_a, cid_b = next_cid, next_cid + 1
         next_cid += 2
-        pair = [(cid_a, [float(x) for x in C2[0]]), (cid_b, [float(x) for x in C2[1]])]
         # one vectorized re-encode against the two sub-centroids and
         # the UNCHANGED global codebooks (_coded_frame — the same
         # shared definition as build/append, bit-identical to the
         # former argmin/residual/code expression chain). normalize=
         # False: cell_vecs is already on the unit sphere.
-        C2f = np.asarray([pair[0][1], pair[1][1]], dtype=np.float64)
         coded_new = _coded_frame(
-            cell_vecs, [cid_a, cid_b], C2f, CB, "id", "vec", normalize=False
+            cell_vecs, [cid_a, cid_b], C2, index.pq.CB, "id", "vec", normalize=False
         )
         child_n = {
             int(r.cid): int(r.n)
@@ -994,7 +811,7 @@ def split_oversized_cells(
             f"{path}/coded"
         )
         del centroid_map[cid]
-        centroid_map[cid_a], centroid_map[cid_b] = pair[0][1], pair[1][1]
+        centroid_map[cid_a], centroid_map[cid_b] = C2
         split_info.append({"cid": int(cid), "n": sizes[cid], "into": [cid_a, cid_b]})
         gc_dirs.append(int(cid))
         for c in (cid_a, cid_b):  # children over the cap re-enter the queue
@@ -1007,15 +824,9 @@ def split_oversized_cells(
             "unsplittable": unsplittable,
             "k_cells": len(centroid_map),
         }
-    # commit point: probes route by this table from here on (pyarrow
-    # write, same parquet schema as the former one-row-relation path)
-    from ..sources.writers import write_sidecar_arrow
-
-    ordered = sorted(centroid_map.items())
-    write_sidecar_arrow(
-        _centroids_arrow([c for c, _ in ordered], [v for _, v in ordered]),
-        f"{path}/centroids",
-    )
+    # commit point: probes route by this table from here on
+    cids = sorted(centroid_map)
+    write_centroids(cids, [centroid_map[c] for c in cids], f"{path}/centroids")
     for cid in gc_dirs:  # orphan GC
         shutil.rmtree(os.path.join(path, "coded", f"cid={cid}"))
     return {

@@ -49,16 +49,23 @@ from ..sources.readers import local_frame
 
 @dataclass
 class PqModel:
-    codebooks: DataFrame  # sub int, code int, cvec array<double>
-    m: int
-    k: int
-    sub_dim: int
-    # (m, k, sub_dim) float64 codebook array, carried so hot paths
-    # (encode UDF, driver-side LUTs) never re-collect the kilobyte
-    # codebooks relation — a LOCAL-relation collect still costs a full
-    # py4j/analysis round-trip (~0.4 s measured). None on models built
-    # by hand; _codebook_np falls back to one collect then.
-    cb_np: object = None
+    """A fitted product quantizer: ``CB[j, c]`` is code c's centroid in
+    subspace j, one (m, k, sub_dim) float64 array — kilobytes, held
+    driver-side and shipped to the encode kernels as is."""
+
+    CB: np.ndarray
+
+    @property
+    def m(self) -> int:
+        return self.CB.shape[0]
+
+    @property
+    def k(self) -> int:
+        return self.CB.shape[1]
+
+    @property
+    def sub_dim(self) -> int:
+        return self.CB.shape[2]
 
 
 _MAX_TRAIN_ROWS = 200_000  # ~100 MB of float64 at dim 64
@@ -238,20 +245,6 @@ def _np_sq_dists_seq(X, C):
     return acc
 
 
-def _codebook_np(model: PqModel):
-    """model.codebooks as an (m, k, sub_dim) float64 array: the cached
-    ``cb_np`` when the model carries one (train/_fit/load paths), else
-    one collect of the kilobyte local relation."""
-    if model.cb_np is not None:
-        return model.cb_np
-    cb: dict[int, list] = {}
-    for r in model.codebooks.collect():  # bounded: m*k rows
-        cb.setdefault(r.sub, [None] * model.k)[r.code] = [float(x) for x in r.cvec]
-    return np.asarray(
-        [[cb[j][c] for c in range(model.k)] for j in range(model.m)], dtype=np.float64
-    )
-
-
 def _np_pq_codes(R, CB):
     """(n, m) int32 code matrix: per subspace, argmin over the k
     codebook entries by the sequential fold — first minimum wins =
@@ -266,16 +259,38 @@ def _np_pq_codes(R, CB):
     return codes
 
 
+def _np_luts(R, CB):
+    """(n, m, k) ADC lookup tables: entry [i, j, c] is the sequential
+    fold squared distance from row i's subspace-j slice to code c. One
+    batched fold per subspace; the fold runs per dimension across rows,
+    so batching more rows changes no value."""
+    m, _, sub_dim = CB.shape
+    return np.stack(
+        [_np_sq_dists_seq(R[:, j * sub_dim : (j + 1) * sub_dim], CB[j]) for j in range(m)],
+        axis=1,
+    )
+
+
+def _ascending_cids(cids):
+    """``cids`` as int64, checked strictly ascending: the argmin kernels
+    keep the first minimum, so ties fall to the smaller cid only over
+    cid-sorted centroids."""
+    cids = np.asarray(cids, dtype=np.int64)
+    if len(cids) > 1 and not (np.diff(cids) > 0).all():
+        raise ValueError("cids must be sorted ascending (argmin tie contract)")
+    return cids
+
+
 def pq_codes_udf(model: PqModel):
     """Arrow UDF twin of the ``pq_code_expr`` reference
     (tests/expression_refs.py): vec → array<int> of
     m codes, bit-identical (same sequential fold, same lowest-code tie
     break), but evaluated as one numpy pass per Arrow batch instead of
-    m·k interpreted HOF folds per row. NULL vectors yield NULL codes
-    (the expression reference gives them code 0)."""
+    m·k interpreted HOF folds per row. NULL vectors yield NULL codes,
+    as the reference does."""
     from pyspark.sql.functions import arrow_udf
 
-    CB = _codebook_np(model)
+    CB = model.CB
 
     @arrow_udf("array<int>")
     def _codes(vec: pa.Array) -> pa.Array:
@@ -287,18 +302,15 @@ def pq_codes_udf(model: PqModel):
     return _codes
 
 
-def argmin_cid_udf(pairs: list[tuple[int, list[float]]]):
+def argmin_cid_udf(cids, C):
     """Arrow UDF twin of the ``argmin_cid_expr`` reference
-    (tests/expression_refs.py): vec → nearest
-    centroid id, bit-identical (sequential fold distances; ties fall
-    to the smaller cid — centroids are sorted by cid and argmin keeps
-    the first minimum). NULL vectors yield NULL (the expression
-    reference gives them the first cid)."""
+    (tests/expression_refs.py): vec → nearest of the centroids ``C``
+    (row i has id ``cids[i]``, ascending), bit-identical (sequential
+    fold distances; ties fall to the smaller cid — argmin keeps the
+    first minimum). NULL vectors yield NULL, as the reference does."""
     from pyspark.sql.functions import arrow_udf
 
-    srt = sorted(pairs)
-    cids = np.asarray([int(c) for c, _ in srt], dtype=np.int32)
-    C = np.asarray([[float(x) for x in cv] for _, cv in srt], dtype=np.float64)
+    cids = _ascending_cids(cids)
 
     @arrow_udf("int")
     def _assign(vec: pa.Array) -> pa.Array:
@@ -310,7 +322,7 @@ def argmin_cid_udf(pairs: list[tuple[int, list[float]]]):
     return _assign
 
 
-def _fit_codebooks(spark, X, m: int, k: int, seed: int) -> PqModel:
+def _fit_codebooks(X, m: int, k: int, seed: int) -> PqModel:
     """m seeded per-subspace Lloyd's fits on a SORTED (n, dim) float64
     sample — the driver-side half of train_pq, callable directly when
     the caller already holds the training matrix (build_ivfpq's
@@ -319,19 +331,11 @@ def _fit_codebooks(spark, X, m: int, k: int, seed: int) -> PqModel:
     if dim % m != 0:
         raise ValueError(f"dim {dim} not divisible by m={m}")
     sub_dim = dim // m
-    rows: list[tuple[int, int, list[float]]] = []
-    subs = []
-    for j in range(m):
-        C = _lloyd(X[:, j * sub_dim : (j + 1) * sub_dim], k, seed + j)
-        subs.append(C)
-        rows.extend((j, code, [float(x) for x in C[code]]) for code in range(k))
-    codebooks = local_frame(spark, rows, "sub int, code int, cvec array<double>")
     return PqModel(
-        codebooks=codebooks,
-        m=m,
-        k=k,
-        sub_dim=sub_dim,
-        cb_np=np.asarray(subs, dtype=np.float64),
+        np.asarray(
+            [_lloyd(X[:, j * sub_dim : (j + 1) * sub_dim], k, seed + j) for j in range(m)],
+            dtype=np.float64,
+        )
     )
 
 
@@ -364,7 +368,7 @@ def train_pq(
     if not rows:
         raise ValueError("train_pq: empty training sample (empty corpus?)")
     X = np.asarray(sorted(tuple(r[0]) for r in rows), dtype=np.float64)
-    return _fit_codebooks(corpus.sparkSession, X, m=m, k=k, seed=seed)
+    return _fit_codebooks(X, m=m, k=k, seed=seed)
 
 
 def pq_encode(
@@ -388,48 +392,57 @@ def pq_encode(
     )
 
 
-def _pq_luts_local(
-    queries: DataFrame, model: PqModel, id_col: str, vec_col: str
-) -> DataFrame:
-    """(query_id, lut array<array<double>>) as a LOCAL relation: per
-    query, the m×k table of exact subspace distances, computed on the
-    driver. Bounded by the ADC broadcast contract — the nq·m·k-double
-    LUT table must broadcast anyway, and the collected query vectors
-    are strictly smaller than it (k ≥ 1 codebook entries per
-    sub-vector). Each pd entry is the same sequential double fold as
-    the former zip_with/aggregate expression, so values are
-    bit-identical. NULL
-    query vectors are skipped (they can never rank: every lookup
-    against them is undefined)."""
+def _query_matrix(queries: DataFrame, id_col: str, vec_col: str):
+    """(query ids, (nq, dim) float64 matrix) of the non-NULL query
+    vectors, collected in one job — a probe's LUTs are built driver-side
+    from them. NULL query vectors are skipped: every lookup against
+    them is undefined, so they can never rank."""
+    rows = [
+        r for r in queries.select(id_col, vec_col).collect() if r[1] is not None
+    ]
+    Q = np.asarray([[float(x) for x in r[1]] for r in rows], dtype=np.float64)
+    return [r[0] for r in rows], Q.reshape(len(rows), -1 if rows else 0)
+
+
+def _lut_schema(queries: DataFrame, id_col: str, *cols):
+    """Schema of a LUT relation: query_id (the query id type), then
+    ``cols`` as (name, type) pairs, then lut array<array<double>>."""
     from pyspark.sql.types import ArrayType, DoubleType, StructField, StructType
 
-    CB = _codebook_np(model)
-    m, _, sub_dim = CB.shape
-    q_rows = queries.select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("qv")
-    ).collect()
-    out = []
-    for r in q_rows:
-        if r.qv is None:
-            continue
-        qv = np.asarray([float(x) for x in r.qv], dtype=np.float64)
-        lut = [
-            [
-                float(d)
-                for d in _np_sq_dists_seq(
-                    qv[None, j * sub_dim : (j + 1) * sub_dim], CB[j]
-                )[0]
-            ]
-            for j in range(m)
-        ]
-        out.append((r.query_id, lut))
-    schema = StructType(
-        [
-            StructField("query_id", queries.schema[id_col].dataType),
-            StructField("lut", ArrayType(ArrayType(DoubleType()))),
-        ]
+    return StructType(
+        [StructField("query_id", queries.schema[id_col].dataType)]
+        + [StructField(name, t) for name, t in cols]
+        + [StructField("lut", ArrayType(ArrayType(DoubleType())))]
     )
-    return local_frame(queries.sparkSession, out, schema)
+
+
+def _adc_topk(pairs: DataFrame, k: int) -> DataFrame:
+    """Per-query ADC top-k of (id, codes) × (query_id, lut) candidate
+    pairs — the one scorer of pq_topk and ivfpq_topk: each code row
+    scores with m LUT lookups summed in double (a JVM
+    zip_with/aggregate, no Python), then a rank window keeps the k
+    smallest. Output (query_id, cand_id, adist, rank), rank 1 = nearest."""
+    scored = pairs.where(F.col("id") != F.col("query_id")).withColumn(
+        "adist",
+        F.round(
+            F.aggregate(
+                F.zip_with(
+                    "codes",
+                    "lut",
+                    lambda c, row: F.element_at(row, c.cast("int") + F.lit(1)),
+                ),
+                F.lit(0.0),
+                lambda acc, x: acc + x,
+            ),
+            6,
+        ),
+    )
+    w = Window.partitionBy("query_id").orderBy("adist", "id")
+    return (
+        scored.withColumn("rank", F.row_number().over(w))
+        .where(F.col("rank") <= k)
+        .select("query_id", F.col("id").alias("cand_id"), "adist", "rank")
+    )
 
 
 def pq_topk(
@@ -445,35 +458,15 @@ def pq_topk(
     table only; each row costs m integer lookups into the broadcast
     per-query LUT.
 
-    r9: the LUT is computed DRIVER-SIDE (_pq_luts_local) — it is a
-    kilobyte model-sized table by the broadcast contract, and the
-    former posexplode → broadcast-join → two collect_list groupBys
-    spent three tiny shuffle stages per probe on data the driver can
-    produce in microseconds. Values are bit-identical (same sequential
-    fold per (sub, code) entry)."""
-    lut_rows = _pq_luts_local(queries, model, id_col, vec_col)
-    scored = (
-        corpus_codes.crossJoin(F.broadcast(lut_rows))
-        .where(F.col("id") != F.col("query_id"))
-        .withColumn(
-            "adist",
-            F.round(
-                F.aggregate(
-                    F.zip_with(
-                        "codes",
-                        "lut",
-                        lambda c, row: F.element_at(row, c.cast("int") + F.lit(1)),
-                    ),
-                    F.lit(0.0),
-                    lambda acc, x: acc + x,
-                ),
-                6,
-            ),
-        )
+    The m×k LUT per query is computed DRIVER-SIDE in one batched numpy
+    pass (_np_luts) over the collected query vectors — nq·m·k doubles,
+    a model-sized table by the broadcast contract, and strictly larger
+    than the query vectors it is built from. It cross-joins onto the
+    code table as a local relation."""
+    qids, Q = _query_matrix(queries, id_col, vec_col)
+    luts = local_frame(
+        queries.sparkSession,
+        list(zip(qids, _np_luts(Q, model.CB).tolist())),
+        _lut_schema(queries, id_col),
     )
-    w = Window.partitionBy("query_id").orderBy("adist", "id")
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", F.col("id").alias("cand_id"), "adist", "rank")
-    )
+    return _adc_topk(corpus_codes.crossJoin(F.broadcast(luts)), k)

@@ -99,8 +99,8 @@ def write_bucketed(
 
 
 def write_sidecar(df: DataFrame, dest: str) -> None:
-    """Write a TINY driver-local table (model sidecars: centroids,
-    codebooks — kilobytes by construction) as one parquet file via
+    """Write a TINY driver-local table (a shard manifest, say —
+    kilobytes by construction) as one parquet file via
     pyarrow. Routing a kilobyte local relation through a Spark write
     job costs seconds of scheduler + python-worker overhead per call;
     the driver writing it directly costs milliseconds, and Spark reads
@@ -118,7 +118,8 @@ def write_sidecar(df: DataFrame, dest: str) -> None:
     # IntegerType stays int32 (no from_pylist int64 widening, so a
     # loaded sidecar matches a freshly built frame), and an empty
     # sidecar still round-trips its columns instead of a zero-column
-    # table that would break load_ivf/load_ivfpq
+    # table that would break its reader (e.g. operators/shard's
+    # manifest check)
     table = df.toArrow()  # bounded by contract: sidecars are model-sized
     write_sidecar_arrow(table, dest)
 
@@ -146,11 +147,9 @@ def write_sidecar_arrow(table, dest: str) -> None:
 def read_sidecar_rows(src: str) -> list[dict]:
     """Driver-side read of a ``write_sidecar`` table: list of row
     dicts, milliseconds, NO Spark job — the mirror of the write path.
-    Model geometry (m, k, sub_dim) and centroid literals come straight
-    off this list; the caller rebuilds a DataFrame (a LOCAL relation
-    that broadcasts for free) only for the columns that join plans
-    need. Spark's reader still works on the same directory — this is
-    the latency path, not a new format."""
+    Model sidecars (centroids, codebooks) load straight into numpy
+    arrays off this list. Spark's reader still works on the same
+    directory — this is the latency path, not a new format."""
     import os
 
     import pyarrow.parquet as pq

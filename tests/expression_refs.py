@@ -85,7 +85,7 @@ def sq_l2_cols(a: F.Column, b: F.Column) -> F.Column:
 def _argmin(col: F.Column, offset: int, table) -> F.Column:
     """Id of the nearest ``(id, vector)`` entry to ``col[offset + 1 ..]``:
     array_min over (distance, id) structs, so equal distances fall to
-    the smaller id."""
+    the smaller id. A NULL vector has no nearest entry: NULL."""
     best = F.array_min(
         F.array(
             *[
@@ -100,7 +100,7 @@ def _argmin(col: F.Column, offset: int, table) -> F.Column:
             ]
         )
     )
-    return best.getField("c").cast("int")
+    return F.when(col.isNotNull(), best.getField("c").cast("int"))
 
 
 def argmin_cid_expr(pairs: list[tuple[int, list[float]]], vec: str | F.Column) -> F.Column:
@@ -111,16 +111,16 @@ def argmin_cid_expr(pairs: list[tuple[int, list[float]]], vec: str | F.Column) -
 
 def pq_code_expr(model, vec: str | F.Column) -> F.Column:
     """The m-code array of a ``ml.pq.PqModel``: per subspace, the
-    nearest codebook entry, lowest code on ties. When ``vec`` is a
-    computed expression, bind it once per row with
+    nearest codebook entry, lowest code on ties; NULL for a NULL vector.
+    When ``vec`` is a computed expression, bind it once per row with
     ``element_at(transform(array(<expr>), v -> pq_code_expr(m, v)), 1)``."""
-    cb: dict[int, list] = {}
-    for r in model.codebooks.collect():  # bounded: m*k rows
-        cb.setdefault(r.sub, [None] * model.k)[r.code] = list(r.cvec)
     col = F.col(vec) if isinstance(vec, str) else vec
-    return F.array(
-        *[
-            _argmin(col, j * model.sub_dim, enumerate(cb[j]))
-            for j in range(model.m)
-        ]
+    return F.when(
+        col.isNotNull(),
+        F.array(
+            *[
+                _argmin(col, j * model.sub_dim, enumerate(model.CB[j]))
+                for j in range(model.m)
+            ]
+        ),
     )

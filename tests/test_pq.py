@@ -73,16 +73,11 @@ def test_pq_topk_recall_vs_bruteforce(planted):
 def test_pq_encode_search_deterministic_given_codebooks(spark):
     """With a FIXED codebook, encode and search are pure DataFrame
     plans — two runs are identical (argmin ties broken by code)."""
+    import numpy as np
+
     corpus = _planted_corpus(spark)
-    cb = spark.createDataFrame(
-        [
-            (s, c, [float(c == j) for j in range(4)])
-            for s in range(4)
-            for c in range(4)
-        ],
-        "sub int, code int, cvec array<double>",
-    )
-    model = PqModel(codebooks=cb, m=4, k=4, sub_dim=4)
+    model = PqModel(np.tile(np.eye(4), (4, 1, 1)))  # code c = one-hot c
+    assert (model.m, model.k, model.sub_dim) == (4, 4, 4)
     a = sorted(map(tuple, pq_encode(corpus, model).collect()))
     b = sorted(map(tuple, pq_encode(corpus, model).collect()))
     assert a == b
@@ -130,17 +125,13 @@ def test_numpy_twins_bit_identical_to_expression_forms(spark):
     argmin_cid_expr) — same
     sequential IEEE-754 fold, same smallest-id tie break — on a nasty
     fixture: float32 inputs, exact ties (duplicate centroids and
-    mirror-image vectors), zero vectors, and denormal-ish magnitudes."""
+    mirror-image vectors), zero vectors, denormal-ish magnitudes and a
+    NULL vector (NULL cid and codes; the fused encode drops it)."""
     import numpy as np
     from expression_refs import argmin_cid_expr, pq_code_expr
 
     from crime_spark_ml_spark.ml.ivfpq import _coded_frame
-    from crime_spark_ml_spark.ml.pq import (
-        PqModel,
-        _codebook_np,
-        argmin_cid_udf,
-        pq_codes_udf,
-    )
+    from crime_spark_ml_spark.ml.pq import PqModel, argmin_cid_udf, pq_codes_udf
 
     rng = np.random.RandomState(7)
     vecs = rng.standard_normal((60, 8)).astype(np.float32) * np.logspace(
@@ -149,52 +140,47 @@ def test_numpy_twins_bit_identical_to_expression_forms(spark):
     vecs[10] = 0.0  # zero vector
     vecs[11] = vecs[12]  # duplicate rows
     rows = [(i, [float(x) for x in vecs[i]]) for i in range(len(vecs))]
-    df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
+    df = spark.createDataFrame(rows + [(60, None)], "vec_id long, embedding array<float>")
 
     cents = rng.standard_normal((6, 8))
     # exact centroid tie at distance 0 from rows 11 and 12: smaller cid
     # must win
     cents[2] = cents[3] = vecs[11]
+    cids = np.arange(len(cents))
     pairs = [(i, [float(x) for x in cents[i]]) for i in range(len(cents))]
     expr_cid = df.select(
         "vec_id", argmin_cid_expr(pairs, "embedding").alias("cid")
     ).collect()
     udf_cid = df.select(
-        "vec_id", argmin_cid_udf(pairs)(F.col("embedding")).alias("cid")
+        "vec_id", argmin_cid_udf(cids, cents)(F.col("embedding")).alias("cid")
     ).collect()
     assert sorted(map(tuple, expr_cid)) == sorted(map(tuple, udf_cid))
+    assert (60, None) in map(tuple, udf_cid)  # the NULL vector is exercised
     assert 2 in {r.cid for r in udf_cid}  # the tie is exercised
 
     cb = rng.standard_normal((2, 4, 4))
     cb[0][1] = cb[0][2] = vecs[11][:4]  # exact codeword tie: smaller code must win
-    cb_rows = [
-        (j, c, [float(x) for x in cb[j][c]]) for j in range(2) for c in range(4)
-    ]
-    model = PqModel(
-        codebooks=spark.createDataFrame(cb_rows, "sub int, code int, cvec array<double>"),
-        m=2,
-        k=4,
-        sub_dim=4,
-    )
+    model = PqModel(cb)
     expr_codes = df.select(
         "vec_id", pq_code_expr(model, "embedding").alias("codes")
     ).collect()
     udf_codes = df.select(
         "vec_id", pq_codes_udf(model)(F.col("embedding")).alias("codes")
     ).collect()
-    assert sorted((r.vec_id, tuple(r.codes)) for r in expr_codes) == sorted(
-        (r.vec_id, tuple(r.codes)) for r in udf_codes
-    )
-    assert 1 in {r.codes[0] for r in udf_codes}  # the tie is exercised
+
+    def key(r):
+        return (r.vec_id, r.codes and tuple(r.codes))
+
+    assert sorted(map(key, expr_codes)) == sorted(map(key, udf_codes))
+    assert (60, None) in map(key, udf_codes)
+    assert 1 in {r.codes[0] for r in udf_codes if r.codes}  # the tie is exercised
 
     # the fused encode (normalize → assign → residual → codes) against
     # the composed expression chain, including the cosine normalize
     from crime_spark_ml_spark.functions.vectors import l2_normalize
 
-    C = np.asarray([p[1] for p in pairs], dtype=np.float64)
     fused = _coded_frame(
-        df, [p[0] for p in pairs], C, _codebook_np(model), "vec_id", "embedding",
-        normalize=True,
+        df, cids, cents, model.CB, "vec_id", "embedding", normalize=True
     ).collect()
     normed = df.select(
         F.col("vec_id").alias("id"), l2_normalize("embedding").alias("vec")
@@ -230,24 +216,47 @@ def test_numpy_twins_bit_identical_to_expression_forms(spark):
         (r.id, r.cid, tuple(r.codes)) for r in chain
     )
 
-    # degenerate rows, pinned to the kernels' own outputs (the
-    # references give a NULL vector cid 0 / code 0): a NULL vector, and
-    # a NaN element — every distance NaN, the first centroid / code wins
+    # a NaN element, pinned to the kernels' own outputs: every distance
+    # NaN, the first centroid / code wins
     degen = spark.createDataFrame(
-        [(60, None), (61, [float("nan")] + rows[0][1][1:])],
-        "vec_id long, embedding array<float>",
+        [(61, [float("nan")] + rows[0][1][1:])], "vec_id long, embedding array<float>"
     )
     got = degen.select(
         "vec_id",
-        argmin_cid_udf(pairs)(F.col("embedding")).alias("cid"),
+        argmin_cid_udf(cids, cents)(F.col("embedding")).alias("cid"),
         pq_codes_udf(model)(F.col("embedding")).alias("codes"),
     ).collect()
-    assert sorted(map(tuple, got)) == [(60, None, None), (61, 0, [0, 1])]
+    assert sorted(map(tuple, got)) == [(61, 0, [0, 1])]
     fused = _coded_frame(
-        degen, [p[0] for p in pairs], C, _codebook_np(model), "vec_id", "embedding",
-        normalize=True,
+        degen, cids, cents, model.CB, "vec_id", "embedding", normalize=True
     ).collect()
     assert [(r.id, r.cid, r.codes) for r in fused] == [(61, 0, [0, 0])]
+
+
+@pytest.mark.pins
+def test_np_l2_normalize_bit_identical_to_jvm(spark):
+    """The PQ/IVF×PQ normalize kernel (pq._np_l2_normalize) equals the
+    JVM functions.vectors.l2_normalize bit for bit, on a fixture where a
+    pairwise-summed norm differs from the sequential fold on some rows,
+    so a reordered fold in the kernel fails here. Zero and NULL vectors
+    pass through."""
+    import numpy as np
+
+    from crime_spark_ml_spark.functions.vectors import l2_normalize, seq_dot
+    from crime_spark_ml_spark.ml.pq import _np_l2_normalize
+
+    rng = np.random.RandomState(11)
+    X = rng.standard_normal((200, 64)) * np.logspace(-3, 3, 64)
+    X[5] = 0.0
+    assert (np.sqrt((X * X).sum(1)) != np.sqrt(seq_dot(X, X))).any()
+    df = spark.createDataFrame(
+        [(i, X[i].tolist()) for i in range(len(X))] + [(len(X), None)],
+        "vec_id long, embedding array<double>",
+    )
+    got = dict(df.select("vec_id", l2_normalize("embedding").alias("u")).collect())
+    assert got.pop(len(X)) is None
+    jvm = np.asarray([got[i] for i in range(len(X))], dtype=np.float64)
+    np.testing.assert_array_equal(jvm.view(np.uint64), _np_l2_normalize(X).view(np.uint64))
 
 
 def test_dense_vectors_decodes_and_rejects_ragged():

@@ -157,7 +157,7 @@ def main() -> int:
             train_fraction=frac,
         )
         persist_ivfpq(index, path)
-        n_cells = index.centroids.count()
+        n_cells = len(index.cids)
         print(f"indexed {n} vectors into {n_cells} cells at {path}")
         return 0
 

@@ -415,7 +415,7 @@ def cmd_cells(spark, args) -> None:
             train_fraction=_train_fraction(s),
         )
         if k_cells is None:
-            k_cells = index.centroids.count()  # derived: report the actual
+            k_cells = len(index.cids)  # derived: report the actual
         nprobe = max(1, k_cells // 8)
         raw = recall(ivfpq_topk(index, queries, k=k, nprobe=nprobe))
         refined = recall(
